@@ -237,13 +237,7 @@ def main(argv=None) -> None:
         res = resolve(docs, model, stopwords, params, store=store)
         res.clusters.write.mode("overwrite").parquet(args.output)
         print(
-            json.dumps(
-                {
-                    "status": "ok",
-                    "clusters": res.clusters.count(),
-                    "counters": res.counters,
-                }
-            )
+            json.dumps({"status": "ok", "clusters": res.clusters.count()})
         )
 
 

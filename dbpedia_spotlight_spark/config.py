@@ -67,8 +67,7 @@ class PipelineParams:
     drop_list_of_pages: bool = True       # AnnotationFilter.scala:140-143
     coreference_resolution: bool = True
 
-    # --- blocking / pairing ---
-    pair_score_threshold: float = 0.5
+    # --- blocking ---
     salt_block_cap: int = 1024     # max mentions per (block, salt) task unit
 
     # --- execution ---

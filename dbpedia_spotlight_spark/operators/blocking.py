@@ -1,18 +1,17 @@
-"""Blocking + salt-based skew splitting for the pairwise self-join.
+"""Blocking + salt-based skew splitting for a pairwise self-join.
 
 Blocking key = normalized surface form (MemorySurfaceFormStore.scala:43
-— the same key the reference uses for its lowercase fallback map), per
-the north star, optionally extended with a coarse context-token key.
+— the same key the reference uses for its lowercase fallback map).
 
 Surface-form frequencies are Zipfian, so blocks are skewed: one hot form
-can dominate a self-join. Skew handling is explicit (north_rule):
-blocks larger than `salt_block_cap` are split into ceil(n/cap) salt
-buckets by a deterministic hash of the mention key; pair generation then
-fans out over (bucket_i, bucket_j) task pairs so no single task exceeds
-~cap² comparisons. AQE skew-join remains on as a second line of defense.
+can dominate a self-join. Blocks larger than `salt_block_cap` are split
+into ceil(n/cap) salt buckets by a deterministic hash of the mention key,
+and the task list enumerates the (bucket_i, bucket_j) pairs per block so
+no single task of a pairwise join exceeds ~cap² comparisons.
 
 Counters (blocks split, max block size, task count) are returned for the
-per-partition lineage/metrics manifest.
+per-partition lineage/metrics manifest. The resolve pipeline clusters by
+URI (plans/pipeline.clusters_by_uri) and does not block.
 """
 
 from __future__ import annotations
@@ -95,40 +94,3 @@ def salted_blocks(
     )
     return salted, tasks, counters
 
-
-def generate_pairs(
-    salted: DataFrame,
-    tasks: DataFrame,
-    params: PipelineParams = DEFAULT_PARAMS,
-) -> DataFrame:
-    """All unordered mention pairs within each block, salt-split.
-
-    Output: block_key, and *_a / *_b copies of (mention_key, sf, doc_id, uri?).
-    Pairs are deduplicated by requiring mention_key_a < mention_key_b; for
-    bi < bj the bucket assignment already makes sides disjoint.
-    """
-    keep = ["mention_key", "sf", "doc_id", "block_key", "bucket"]
-    extra = [c for c in ("uri", "res_id") if c in salted.columns]
-    cols = keep + extra
-    base = salted.select(*cols)
-
-    a = base.select(
-        "block_key",
-        F.col("bucket").alias("bi"),
-        *[F.col(c).alias(f"{c}_a") for c in cols if c not in ("block_key", "bucket")],
-    )
-    b = base.select(
-        "block_key",
-        F.col("bucket").alias("bj"),
-        *[F.col(c).alias(f"{c}_b") for c in cols if c not in ("block_key", "bucket")],
-    )
-    pairs = (
-        F.broadcast(tasks).join(a, ["block_key", "bi"])
-        .join(b, ["block_key", "bj"])
-        .filter(
-            (F.col("bi") < F.col("bj"))
-            | (F.col("mention_key_a") < F.col("mention_key_b"))
-        )
-        .drop("bi", "bj")
-    )
-    return pairs

@@ -1,7 +1,9 @@
 """Connected components via alternating large-star/small-star self-joins.
 
-The clustering stage of the record-linkage pipeline (north_star):
-iterative DataFrame self-joins to a fixpoint, after Kiveris et al.,
+The general operator for arbitrary edge sets (the connected_components
+query, near-dup dedup); ER over resolved URIs needs no CC
+(plans/pipeline.clusters_by_uri). Iterative DataFrame self-joins to a
+fixpoint, after Kiveris et al.,
 "Connected Components in MapReduce and Beyond" (SOCC 2014) — the
 standard shuffle-efficient CC for this shape. The reference's own
 redirect transitive closure (WikipediaToDBpediaClosure.scala:110-115) is
@@ -111,14 +113,6 @@ def _bounded_probe(cur: DataFrame):
             spark.conf.set(key, old)
 
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Collected union-find with min-member component ids — the small-side
-    fast path. Exact same contract as the distributed loop."""
-    # one Arrow transfer (edge count is gated by DRIVER_CC_MAX_EDGES;
-    # toLocalIterator paid per-batch RPC overhead)
-    return _union_find_arrow(edges.toArrow(), edges.sparkSession)
-
-
 def _union_find_arrow(tbl, spark) -> DataFrame:
     """Union-find over a collected Arrow table of (src, dst) edges.
 
@@ -223,49 +217,27 @@ def connected_components(
     cur = edges.select("src", "dst").filter(
         F.col("src") != F.col("dst")
     )
+    if store is None and not force_distributed:
+        # bounded probe: pull at most MAX+1 edges in one pass — when
+        # they all fit, the probe IS the edge set, so the driver path
+        # evaluates the upstream lineage exactly once. Duplicate edges
+        # are fine — union-find is duplicate-tolerant, and the raw row
+        # count can only OVERestimate, which errs toward the distributed
+        # loop (the safe direction).
+        probe = _bounded_probe(cur)
+        if probe.num_rows <= DRIVER_CC_MAX_EDGES:
+            # broadcast hint: the driver path's output is bounded by
+            # the edge gate (<= 2 * DRIVER_CC_MAX_EDGES short rows,
+            # already held in driver memory by construction), so
+            # callers joining assignments back onto the full mention
+            # set get a build-side broadcast instead of shuffling
+            # and sorting the big side (guide §3.1)
+            return F.broadcast(_union_find_arrow(probe, spark))
+    cur = cur.distinct()
     if store is None:
-        if not force_distributed:
-            # bounded probe: pull at most MAX+1 edges in one pass — when
-            # they all fit, the probe IS the edge set, so the driver path
-            # evaluates the upstream lineage exactly once (the old
-            # localCheckpoint + count + collect shape paid it three
-            # times: ~0.5 s back at 909k sf1.0 edges). Duplicate edges
-            # are fine — union-find is duplicate-tolerant, and the raw
-            # row count can only OVERestimate, which errs toward the
-            # distributed loop (the safe direction).
-            probe = _bounded_probe(cur)
-            if probe.num_rows <= DRIVER_CC_MAX_EDGES:
-                # broadcast hint: the driver path's output is bounded by
-                # the edge gate (<= 2 * DRIVER_CC_MAX_EDGES short rows,
-                # already held in driver memory by construction), so
-                # callers joining assignments back onto the full mention
-                # set get a build-side broadcast instead of shuffling
-                # and sorting the big side (guide §3.1)
-                return F.broadcast(_union_find_arrow(probe, spark))
         # materialize the input once — the signature check plus the first
-        # iteration otherwise recompute the upstream edge derivation 3x
+        # iteration otherwise recompute the upstream edge derivation
         cur = cur.localCheckpoint()
-        if not force_distributed:
-            # duplicate-heavy inputs: the raw count overshoots; a cheap
-            # sketch decides whether the DISTINCT edge set still fits on
-            # the driver (HLL error ~5% — the 0.9 margin absorbs it).
-            # Only then pay the distinct shuffle for the small pull.
-            est = cur.agg(
-                F.approx_count_distinct(
-                    F.concat_ws("\x00", "src", "dst")
-                ).alias("d")
-            ).collect()[0]["d"]
-            if est <= DRIVER_CC_MAX_EDGES * 0.9:
-                dedup = cur.distinct().localCheckpoint()
-                if dedup.count() <= DRIVER_CC_MAX_EDGES:
-                    return F.broadcast(_driver_union_find(dedup))
-                cur = dedup
-            else:
-                cur = cur.distinct()
-        else:
-            cur = cur.distinct()
-    else:
-        cur = cur.distinct()
 
     start_step = 0
     if store is not None:

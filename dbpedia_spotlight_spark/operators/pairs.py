@@ -1,44 +1,25 @@
-"""Pairwise mention scoring: string channel + context channel.
+"""Pairwise channels between mentions.
 
-SURVEY.md §7 recast of the reference's disambiguation model as pairwise
-similarity:
-
-  * string channel — vectorized Jaro-Winkler (the north star's knob) and
-    the reference's Levenshtein formula
-    (MemorySurfaceFormStore.scala:127-137) as a column expression.
-  * context channel — TF-ICF cosine between the two mentions' document
-    contexts; icf comes from the legacy Lucene scorer
+  * context channel — TF-ICF cosine between two mentions' document
+    contexts (SURVEY.md §7); icf comes from the legacy Lucene scorer
     (lucene/similarity/CachedInvCandFreqSimilarity.java:96-97:
     icf(cf) = ln(maxCf/cf) + 1), with cf = number of resources whose
     context contains the token (document frequency over the resource
     "corpus" in context_counts).
-  * resolution channel — both mentions resolve to the same top candidate
-    (the F1-matched path: edges from equal resolved URIs reproduce the
-    reference's clusters exactly).
+  * resolution channel — min-hub star edges between mentions that
+    resolve to the same URI (edges_from_resolution), for callers that
+    feed operators/cc.
 
-Everything is joins + aggregations; the only Python is the Arrow-batched
-JW kernel.
+Everything is joins + aggregations. The resolve pipeline clusters by URI
+directly (plans/pipeline.clusters_by_uri) and uses neither channel.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_PARAMS, PipelineParams
-from ..functions.similarity import edit_distance_score_expr, jaro_winkler_udf
 from ..plans.model_build import ModelTables
-
-
-def string_channel(pairs: DataFrame) -> DataFrame:
-    """+ jw_score, edit_score columns over (sf_a, sf_b)."""
-    return pairs.withColumn(
-        "jw_score", jaro_winkler_udf(F.lower("sf_a"), F.lower("sf_b"))
-    ).withColumn(
-        "edit_score", edit_distance_score_expr(F.col("sf_a"), F.col("sf_b"))
-    )
 
 
 def token_icf(model: ModelTables) -> DataFrame:
@@ -135,38 +116,6 @@ def context_cosine_channel(
     )
     return pairs.join(cos, ["doc_id_a", "doc_id_b"], "left").fillna(
         {"ctx_cosine": 0.0}
-    )
-
-
-def score_pairs(
-    pairs: DataFrame,
-    params: PipelineParams = DEFAULT_PARAMS,
-) -> DataFrame:
-    """Combined pair score + match decision.
-
-    pair_score = 0.5·JW + 0.5·ctx_cosine (when the context channel is
-    attached; else JW alone); same_top_candidate (uri_a == uri_b, both
-    non-null) short-circuits to a match — that is the reference-faithful
-    edge definition (cluster ≡ resolved URI group).
-    """
-    has_ctx = "ctx_cosine" in pairs.columns
-    has_uri = "uri_a" in pairs.columns
-    score = (
-        (0.5 * F.col("jw_score") + 0.5 * F.col("ctx_cosine"))
-        if has_ctx
-        else F.col("jw_score")
-    )
-    out = pairs.withColumn("pair_score", score)
-    same_top = (
-        (F.col("uri_a").isNotNull() & (F.col("uri_a") == F.col("uri_b")))
-        if has_uri
-        else F.lit(False)
-    )
-    return out.withColumn(
-        "is_match",
-        same_top | (F.col("pair_score") >= params.pair_score_threshold)
-        if has_uri
-        else (F.col("pair_score") >= params.pair_score_threshold),
     )
 
 

@@ -661,7 +661,7 @@ def q_fuzzy_candidates(spark, sf_dir):
     # each dimension is referenced twice (maybe_broadcast's gate count +
     # the join itself) — cache the corpus-derived aggregations so the
     # corpus is not re-aggregated per reference (same intra-query cache
-    # pattern as er_clusters' linked frame)
+    # pattern as er_incremental's linked frame)
     sf_stats = sf_stats.cache()
     cand_map = cand_map.cache()
     resources = resources.cache()
@@ -1013,70 +1013,38 @@ def q_confidence_thresholds(spark, sf_dir):
     )
 
 
-def q_er_clusters(spark, sf_dir):
-    """Flagship: spot -> prior-link -> hub edges -> REAL connected
-    components -> cluster assignments (the full ER path on driver data)."""
-    from ..operators.pairs import edges_from_resolution
-
-    linked = q_prior_disambiguation(spark, sf_dir).withColumn(
+def _prior_linked(spark, sf_dir):
+    return q_prior_disambiguation(spark, sf_dir).withColumn(
         "mention_key",
         F.concat_ws(":", F.col("doc_id"), F.col("begin")),
-    ).cache()  # referenced by hubs, the edge join, and the final output
-    edges = edges_from_resolution(linked)
-    cc = connected_components(edges)
-    return (
-        linked.select("mention_key", "uri")
-        .join(cc, "mention_key", "left")
-        .select(
-            "mention_key",
-            F.coalesce(F.col("cluster_id"), F.col("mention_key")).alias(
-                "cluster_id"
-            ),
-            "uri",
-        )
     )
+
+
+def q_er_clusters(spark, sf_dir):
+    """Flagship: spot -> prior-link -> clusters_by_uri (the full ER path
+    on driver data)."""
+    from .pipeline import clusters_by_uri
+
+    return clusters_by_uri(_prior_linked(spark, sf_dir))
 
 
 def q_er_incremental(spark, sf_dir):
     """Streaming incremental ER (streaming/er_stream.py): the SAME
     spot -> prior-link chain as er_clusters, but the linked mentions
-    arrive in three chunks and the clusters are MAINTAINED by
-    incremental_cc_update over stable-URI star edges — contract each
-    chunk's edges through the running state, CC on the contracted graph
-    only, compose the root remap back. Hash-gated against the EXACT
-    er_clusters oracle SQL: the chunking-invariance claim (any split of
-    the edge stream yields batch CC's clusters), checked per value."""
-    from ..streaming.er_stream import (
-        current_clusters,
-        incremental_cc_update,
-        uri_star_edges,
-    )
+    arrive in three chunks that are merged into the running state one
+    at a time. Hash-gated against the EXACT er_clusters oracle SQL: any
+    chunking yields the batch clusters, checked per value."""
+    from ..streaming.er_stream import current_clusters, merge_linked
 
-    linked = q_prior_disambiguation(spark, sf_dir).withColumn(
-        "mention_key",
-        F.concat_ws(":", F.col("doc_id"), F.col("begin")),
-    ).cache()
+    linked = _prior_linked(spark, sf_dir).cache()
     state = None
     for k in range(3):
         chunk = linked.filter(
             F.pmod(F.crc32(F.col("doc_id").cast("string")), F.lit(3)) == k
         )
-        state = incremental_cc_update(
-            state, uri_star_edges(chunk)
-        ).localCheckpoint()  # truncate the per-batch plan, as the
-        # streaming path's checkpoint stage does
-    clusters = current_clusters(state)
-    return (
-        linked.select("mention_key", "uri")
-        .join(clusters, "mention_key", "left")
-        .select(
-            "mention_key",
-            F.coalesce(F.col("cluster_id"), F.col("mention_key")).alias(
-                "cluster_id"
-            ),
-            "uri",
-        )
-    )
+        # truncate the per-batch plan, as the streaming checkpoint does
+        state = merge_linked(state, chunk).localCheckpoint()
+    return current_clusters(state)
 
 
 def _overlap_fixture(spark, sf_dir):

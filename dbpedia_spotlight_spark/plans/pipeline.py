@@ -6,16 +6,19 @@ One lazily-composed DataFrame DAG (SURVEY.md §3.1 recast):
               --(dim joins)------> mention_candidates
               --(token joins+agg)-> ctx_scores
               --(window)---------> linked mentions
-              --(blocking+pairs+CC)--> clusters
+              --(filters/coref)--> resolved
+              --(clusters_by_uri)--> clusters
 
-Each named stage can checkpoint through sources/checkpoint.py.
+Clusters are the groups of mentions linked to one URI, each labelled by
+its smallest mention key (clusters_by_uri). Each named stage can
+checkpoint through sources/checkpoint.py.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PARAMS, PipelineParams
@@ -129,7 +132,6 @@ def annotate(
 class ResolveResult:
     resolved: DataFrame
     clusters: DataFrame
-    counters: dict
 
 
 def resolve(
@@ -139,19 +141,15 @@ def resolve(
     params: PipelineParams = DEFAULT_PARAMS,
     store=None,
 ) -> ResolveResult:
-    """Full record-linkage run: annotate → filters → blocking counters →
-    edges → connected components → clusters.
+    """Full record-linkage run: annotate → filters/coref →
+    clusters_by_uri → clusters(mention_key, cluster_id).
 
-    Every stage checkpoints through `store` (sources/checkpoint.py) when
-    given; a killed run re-invoked with the same store resumes from the
-    last completed stage (tests/test_resume.py).
+    With a `store` (sources/checkpoint.py) the stages `mentions`,
+    `scored`, `resolved` and `clusters` are checkpointed; a killed run
+    re-invoked with the same store resumes from the last completed stage
+    (tests/test_resolve_and_resume.py).
     """
-    from ..operators.blocking import salted_blocks
-    from ..operators.cc import cluster_assignments
     from ..operators.filters import apply_result_filters, coreference_resolution
-    from ..operators.pairs import edges_from_resolution
-
-    counters: dict = {}
 
     def ck(stage, compute, **kw):
         if store is None:
@@ -172,65 +170,48 @@ def resolve(
     filtered = apply_result_filters(scored, params)
 
     def _resolved():
-        from ..operators.disambiguate import resolve_all_mentions
-
-        res = resolve_all_mentions(mentions, filtered)
+        res = D.resolve_all_mentions(mentions, filtered)
         if params.coreference_resolution:
             res = coreference_resolution(res)
         return res
 
     resolved = ck("resolved", _resolved, lineage=["mentions", "scored"])
     if store is None:
-        # blocking counters, edges, and every CC superstep re-derive
-        # `resolved` — without a checkpoint store, cache it or the whole
-        # annotate+coref chain re-runs once per downstream action
+        # the CLI writes `clusters` and then counts it: without a
+        # checkpoint store, cache `resolved` or both actions re-run the
+        # whole annotate+coref chain
         resolved = resolved.cache()
 
-    # blocking counters (skew accounting for the manifest; the
-    # reference-faithful edge set itself is linear in mentions)
-    salted, _tasks, bc = salted_blocks(
-        mentions.join(
-            resolved.select("mention_key", "uri"), "mention_key", "left"
-        ),
-        params,
-    )
-    counters["blocking"] = {
-        "n_blocks": bc.n_blocks,
-        "n_blocks_split": bc.n_blocks_split,
-        "max_block_size": bc.max_block_size,
-        "n_salt_tasks": bc.n_salt_tasks,
-    }
-
-    edges = ck(
-        "edges",
-        lambda: edges_from_resolution(resolved),
-        counters=counters["blocking"],
+    clusters = ck(
+        "clusters",
+        lambda: clusters_by_uri(resolved).select("mention_key", "cluster_id"),
         lineage=["resolved"],
     )
-    clusters = cluster_assignments(
-        resolved, edges, store=store, stage_prefix="cc"
-    )
-    if store is not None:
-        clusters = store.get_or_compute(
-            "clusters", lambda: clusters, lineage=["edges"]
-        )
-    return ResolveResult(resolved=resolved, clusters=clusters,
-                         counters=counters)
+    return ResolveResult(resolved=resolved, clusters=clusters)
 
 
 def clusters_by_uri(resolved: DataFrame) -> DataFrame:
-    """Trivial clustering: cluster id = resolved URI; NIL mentions are
-    singletons (cluster id = their own mention key). The reference
-    equivalence: clusters ≡ groups of mentions linked to one DBpedia URI."""
-    return resolved.select(
+    """resolved(mention_key, uri, ...) -> (mention_key, cluster_id, uri),
+    one row per mention_key.
+
+    The reference's clustering: the mentions linked to one DBpedia URI
+    form one cluster, whose id is the smallest mention_key among them;
+    NIL mentions (uri NULL) are singletons with their own key as id.
+
+    A mention_key (`doc_id:begin`) can carry several rows: with
+    `overlap=True` several spots start at one offset, and coreference
+    rewrites each of them separately, so one key may even hold two URIs.
+    A key belongs to exactly one cluster, that of the smallest URI over
+    its rows (NULLs ignored: a key with any linked row is linked).
+    """
+    per_key = resolved.groupBy("mention_key").agg(F.min("uri").alias("uri"))
+    # NIL keys each get a window partition of their own, so an all-NIL
+    # input is not funnelled into one task
+    hub = Window.partitionBy(
+        "uri", F.when(F.col("uri").isNull(), F.col("mention_key"))
+    )
+    return per_key.select(
         "mention_key",
-        "doc_id",
-        "begin",
-        "sf",
+        F.min("mention_key").over(hub).alias("cluster_id"),
         "uri",
-        F.when(
-            F.col("uri").isNotNull(), F.concat(F.lit("uri:"), F.col("uri"))
-        )
-        .otherwise(F.concat(F.lit("nil:"), F.col("mention_key")))
-        .alias("cluster_id"),
     )

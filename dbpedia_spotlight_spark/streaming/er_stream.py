@@ -3,48 +3,28 @@ document stream (engine addition; the reference has no streaming surface,
 SURVEY.md §2.12 — its batch analog is the spot→link→cluster chain of
 DBTwoStepDisambiguator.scala + WikipediaToDBpediaClosure.scala).
 
-Batch ER (operators/pairs.edges_from_resolution + operators/cc) clusters
-mentions that resolve to the same URI via min-mention-key star edges and
-large-star/small-star connected components. The streaming form must keep
-those clusters CURRENT as documents arrive, without recomputing CC over
-all history each micro-batch. Two pieces:
+Batch ER (plans/pipeline.clusters_by_uri) clusters the mentions that
+resolve to one URI, labelled by their smallest mention key. The streaming
+state is therefore just the linked mentions seen so far,
+``(mention_key, uri)`` with one row per key:
 
-* ``incremental_cc_update`` — the pure DataFrame merge step. State is the
-  full assignment table ``(node, root)`` where root is the MINIMUM member
-  of the node's component so far. A new edge batch is first CONTRACTED
-  through the state (each endpoint replaced by its current root — a
-  component behaves like its representative), CC runs on the contracted
-  graph only (size = batch edges, not history), and the resulting
-  root-remapping composes back over the state with one broadcast-sized
-  join. Because contraction preserves connectivity and the minimum of
-  component minima is the global minimum, the state after ANY chunking of
-  an edge stream equals batch CC over the union of all edges — the
-  invariant the er_incremental driver gate hash-checks against the exact
-  er_clusters oracle SQL.
-
-* cross-batch URI connectivity: a batch only sees its own mentions, so
-  mention→hub star edges computed per batch would never connect batch 1's
-  uri-X mentions to batch 2's. ``uri_star_edges`` therefore anchors every
-  mention to a SYNTHETIC, stable node per URI (``~uri:<uri>``). ``~``
-  (0x7E) sorts after every digit, so the synthetic node can never win the
-  min and cluster ids stay exactly the batch pipeline's min mention key.
-  Synthetic rows are dropped on read-out (``current_clusters``).
-
-At 10^12-node scale the state table dominates: the per-batch edge remap
-and fresh-node anti-join are equi-joins ON ``node``, so the state
-checkpoint should be written bucketed by node (sources/bucketing.py —
-then only the batch side shuffles, the state is read co-located), and
-the root-composition join broadcasts the touched-component map instead
-of ever shuffling the state (explicit hint below).
+* ``merge_linked`` appends a batch's linked rows whose key is new
+  (left-anti on ``mention_key``). A key keeps the URI it was first linked
+  with; link_fn is batch-independent, so a replayed document re-links
+  to the same URI.
+* ``current_clusters`` is ``clusters_by_uri`` over the state, so the
+  clusters after ANY chunking of the stream equal the batch clusters of
+  the union — the invariant the er_incremental driver gate hash-checks
+  against the exact er_clusters oracle SQL.
 
 ``run_er_stream`` wires it into Structured Streaming via foreachBatch:
-each micro-batch links its documents (caller-supplied link_fn → (doc_id,
-mention_key, uri) rows), updates the state, and checkpoints it through a
-CheckpointStore stage ``er_state_v<batch_id>`` with lineage + counters
-(n_edges, n_new_nodes, n_root_merges). A retried batch id finds its stage
-already in the manifest and skips recompute (idempotent), and a restarted
-stream resumes from the highest committed state — the same
-resume-from-last-superstep contract as the batch pipeline.
+each micro-batch links its documents (caller-supplied link_fn →
+(mention_key, uri) rows), updates the state, and checkpoints it through a
+CheckpointStore stage ``er_state_v<batch_id>`` with lineage and an
+``n_linked`` counter (the manifest's row counts give the state size per
+batch). A retried batch id finds its stage already in the manifest and
+skips recompute (idempotent), and a restarted stream resumes from the
+highest committed state.
 """
 
 from __future__ import annotations
@@ -54,88 +34,32 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cc import connected_components
+from ..plans.pipeline import clusters_by_uri
 from ..sources.checkpoint import CheckpointStore
-
-# 0x7E sorts after digits and ':' in binary string order, so a synthetic
-# URI anchor can never be the min member of a component that contains at
-# least one real mention key (and every component with a synthetic node
-# contains one — anchors only ever appear as edge endpoints of mentions).
-URI_NODE_PREFIX = "~uri:"
 
 STATE_STAGE_PREFIX = "er_state_v"
 
 
-def uri_star_edges(linked: DataFrame) -> DataFrame:
-    """linked(mention_key, uri) -> edges(src, dst) anchoring every mention
-    to its URI's stable synthetic node. Same O(n) edge count as the batch
-    pipeline's min-hub stars, but the hub is stable ACROSS batches."""
-    return (
+def merge_linked(state: DataFrame | None, linked: DataFrame) -> DataFrame:
+    """state(mention_key, uri) + a batch of linked rows -> new state.
+
+    The batch's NIL rows are dropped and its duplicate keys collapse to
+    their smallest URI, as in clusters_by_uri; then only keys the state
+    does not hold yet are appended."""
+    batch = (
         linked.filter(F.col("uri").isNotNull())
-        .select(
-            F.concat(F.lit(URI_NODE_PREFIX), F.col("uri")).alias("src"),
-            F.col("mention_key").alias("dst"),
-        )
-    )
-
-
-def incremental_cc_update(
-    state: DataFrame | None, new_edges: DataFrame
-) -> DataFrame:
-    """One merge superstep: state(node, root) ∪ edges -> new state.
-
-    CC cost is bounded by the BATCH edge count (history enters only as the
-    contracted representatives), and the composition is two joins against
-    the delta mapping — the delta is at most one row per touched
-    component + new node, so at steady state it broadcasts.
-    """
-    edges = new_edges.select("src", "dst")
-    if state is not None:
-        src_map = state.select(
-            F.col("node").alias("src"), F.col("root").alias("_sr")
-        )
-        dst_map = state.select(
-            F.col("node").alias("dst"), F.col("root").alias("_dr")
-        )
-        edges = (
-            edges.join(src_map, "src", "left")
-            .join(dst_map, "dst", "left")
-            .select(
-                F.coalesce(F.col("_sr"), F.col("src")).alias("src"),
-                F.coalesce(F.col("_dr"), F.col("dst")).alias("dst"),
-            )
-        )
-    contracted = edges.filter(F.col("src") != F.col("dst"))
-    delta = connected_components(contracted).select(
-        F.col("mention_key").alias("node"), F.col("cluster_id").alias("root")
+        .groupBy("mention_key")
+        .agg(F.min("uri").alias("uri"))
     )
     if state is None:
-        return delta
-    # old nodes follow their (possibly remapped) root; contracted ids not
-    # present in the state are exactly the batch's fresh nodes. The root
-    # map is one row per component TOUCHED THIS BATCH (dimension-sized
-    # next to the full state), so the composition broadcasts and the
-    # state is never shuffled here.
-    root_map = F.broadcast(
-        delta.select(
-            F.col("node").alias("root"), F.col("root").alias("_new_root")
-        )
-    )
-    updated = state.join(root_map, "root", "left").select(
-        "node",
-        F.coalesce(F.col("_new_root"), F.col("root")).alias("root"),
-    )
-    fresh = delta.join(state.select("node"), "node", "left_anti")
-    return updated.unionByName(fresh)
+        return batch
+    fresh = batch.join(state.select("mention_key"), "mention_key", "left_anti")
+    return state.unionByName(fresh)
 
 
 def current_clusters(state: DataFrame) -> DataFrame:
-    """State -> (mention_key, cluster_id), synthetic URI anchors dropped."""
-    return state.filter(
-        ~F.col("node").startswith(URI_NODE_PREFIX)
-    ).select(
-        F.col("node").alias("mention_key"), F.col("root").alias("cluster_id")
-    )
+    """State -> (mention_key, cluster_id, uri)."""
+    return clusters_by_uri(state)
 
 
 def _latest_state(store: CheckpointStore) -> tuple[int, DataFrame | None]:
@@ -157,40 +81,19 @@ def update_er_state(
 
     Idempotent per batch_id: a committed stage is returned as-is, so a
     foreachBatch retry (or a resumed availableNow run re-offering the
-    last batch) never double-applies edges.
+    last batch) never double-applies a batch.
     """
     stage = f"{STATE_STAGE_PREFIX}{batch_id}"
     if store.has(stage):
         return store.read(stage)
     prev_v, state = _latest_state(store)
-    edges = uri_star_edges(linked)
-    # materialize once — the counter queries below would otherwise each
-    # recompute the whole contract+CC+compose plan
-    new_state = incremental_cc_update(state, edges).localCheckpoint()
-    n_edges = edges.count()
-    if state is None:
-        n_new = new_state.count()
-        n_merges = 0
-    else:
-        n_new = new_state.count() - state.count()
-        # roots that stopped being roots this batch = component merges
-        n_merges = (
-            state.select(F.col("root").alias("node")).distinct()
-            .join(
-                new_state.filter(F.col("node") != F.col("root")),
-                "node",
-                "inner",
-            )
-            .count()
-        )
+    # materialize once — the counter and the merge both read the batch
+    linked = linked.select("mention_key", "uri").localCheckpoint()
+    n_linked = linked.filter(F.col("uri").isNotNull()).count()
     return store.write(
-        new_state,
+        merge_linked(state, linked),
         stage,
-        counters={
-            "n_edges": n_edges,
-            "n_new_nodes": n_new,
-            "n_root_merges": n_merges,
-        },
+        counters={"n_linked": n_linked},
         lineage=[f"{STATE_STAGE_PREFIX}{prev_v}"] if prev_v >= 0 else [],
         superstep=batch_id,
     )

@@ -1,4 +1,4 @@
-"""Blocking + salted pair generation + connected components."""
+"""Salted blocking + connected components."""
 
 import random
 
@@ -6,19 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.config import PipelineParams
-from dbpedia_spotlight_spark.operators.blocking import (
-    generate_pairs,
-    salted_blocks,
-)
+from dbpedia_spotlight_spark.operators.blocking import salted_blocks
 from dbpedia_spotlight_spark.operators.cc import (
     cluster_assignments,
     connected_components,
 )
-from dbpedia_spotlight_spark.operators.pairs import (
-    edges_from_resolution,
-    score_pairs,
-    string_channel,
-)
+from dbpedia_spotlight_spark.operators.pairs import edges_from_resolution
 
 
 def _mentions_df(spark, rows):
@@ -50,34 +43,28 @@ def _union_find(nodes, edges):
 # ---------------------------------------------------------------------------
 
 
-def test_salted_pair_generation_is_complete_and_deduped(spark):
-    """Every unordered within-block pair appears exactly once, even when
-    the block is salt-split."""
+def test_salted_blocks_split_counters(spark):
+    """A block over the cap is salt-split into buckets, and the task list
+    holds every bucket pair (bi <= bj) of every block exactly once."""
     rows = [(f"m{i:03d}", "Hot Form", f"d{i}") for i in range(40)]
     rows += [(f"x{i:03d}", "Cold Form", f"e{i}") for i in range(3)]
     mentions = _mentions_df(spark, rows)
     params = PipelineParams(salt_block_cap=8)
 
     salted, tasks, counters = salted_blocks(mentions, params)
-    pairs = generate_pairs(salted, tasks, params).collect()
-
-    got = {
-        tuple(sorted((r["mention_key_a"], r["mention_key_b"]))) for r in pairs
-    }
-    assert len(pairs) == len(got), "duplicate pairs emitted"
-    hot = [f"m{i:03d}" for i in range(40)]
-    cold = [f"x{i:03d}" for i in range(3)]
-    want = {
-        tuple(sorted((a, b)))
-        for grp in (hot, cold)
-        for i, a in enumerate(grp)
-        for b in grp[i + 1 :]
-    }
-    assert got == want
+    buckets = {r["mention_key"]: r["bucket"] for r in salted.collect()}
+    assert set(buckets) == {r[0] for r in rows}
+    assert all(0 <= buckets[f"m{i:03d}"] < 5 for i in range(40))
+    assert all(buckets[f"x{i:03d}"] == 0 for i in range(3))
+    got = [(r["block_key"], r["bi"], r["bj"]) for r in tasks.collect()]
+    want = [("cold form", 0, 0)] + [
+        ("hot form", i, j) for i in range(5) for j in range(i, 5)
+    ]
+    assert sorted(got) == sorted(want)
     assert counters.n_blocks == 2
     assert counters.n_blocks_split == 1
     assert counters.max_block_size == 40
-    assert counters.n_salt_tasks >= 1 + 5 * 6 // 2  # cold + hot bucket pairs
+    assert counters.n_salt_tasks == len(want)
 
 
 def test_blocking_key_is_normalized_sf(spark):
@@ -88,23 +75,7 @@ def test_blocking_key_is_normalized_sf(spark):
     salted, tasks, _ = salted_blocks(mentions)
     keys = {r["block_key"] for r in salted.collect()}
     assert keys == {"united states"}
-    pairs = generate_pairs(salted, tasks).collect()
-    assert len(pairs) == 1
-
-
-def test_string_channel_scores(spark):
-    pairs = spark.createDataFrame(
-        [("m1", "martha", "m2", "marhta"), ("m3", "abc", "m4", "xyz")],
-        "mention_key_a string, sf_a string, mention_key_b string, sf_b string",
-    )
-    rows = {r["mention_key_a"]: r for r in string_channel(pairs).collect()}
-    assert rows["m1"]["jw_score"] == pytest.approx(0.9611, abs=1e-4)
-    assert rows["m3"]["jw_score"] == 0.0
-    scored = {
-        r["mention_key_a"]: r for r in score_pairs(string_channel(pairs)).collect()
-    }
-    assert scored["m1"]["pair_score"] == scored["m1"]["jw_score"]
-    assert scored["m1"]["is_match"] and not scored["m3"]["is_match"]
+    assert tasks.count() == 1  # one unsplit block, one task
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,10 @@
 """Incremental streaming entity resolution (streaming/er_stream.py).
 
-The operator's contract is CHUNKING INVARIANCE: maintaining the cluster
-state over any split of the edge stream must yield exactly batch CC over
-the union of all edges (min-member cluster ids). These tests check the
-pure merge step against batch CC under random chunkings, the URI-star
-form against the batch ER pipeline's min-hub clusters, and the
+The operator's contract is CHUNKING INVARIANCE: merging the linked
+mentions batch by batch into the state must yield exactly
+clusters_by_uri over the union of all batches (min-member cluster ids).
+These tests check the merge under random chunkings (with a replayed key),
+against fixed min-key-per-URI clusters, on an empty batch, and the
 Structured-Streaming wiring end to end including checkpoint resume and
 per-batch idempotence.
 """
@@ -13,53 +13,51 @@ import random
 
 from pyspark.sql import functions as F
 
-from dbpedia_spotlight_spark.operators.cc import connected_components
+from dbpedia_spotlight_spark.plans.pipeline import clusters_by_uri
 from dbpedia_spotlight_spark.sources.checkpoint import CheckpointStore
 from dbpedia_spotlight_spark.streaming.er_stream import (
     current_clusters,
-    incremental_cc_update,
+    merge_linked,
     run_er_stream,
     update_er_state,
-    uri_star_edges,
 )
+
+LINKED = "mention_key string, uri string"
 
 
 def _assignments(df):
     return {r[0]: r[1] for r in df.collect()}
 
 
-def test_incremental_cc_matches_batch_any_chunking(spark):
+def test_er_state_any_chunking_matches_clusters_by_uri(spark):
     rng = random.Random(7)
-    nodes = [f"n{i:02d}" for i in range(40)]
-    edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(120)
+    rows = [
+        (f"{d}:{b}", f"uri{rng.randrange(6)}")
+        for d in range(12) for b in range(0, 20, 5)
     ]
-    batch = connected_components(
-        spark.createDataFrame(edges, "src string, dst string")
+    replayed = rows[3]
+    expected = _assignments(
+        clusters_by_uri(spark.createDataFrame(rows + [replayed], LINKED))
     )
-    expected = _assignments(batch)
     for n_chunks, seed in [(1, 0), (3, 1), (5, 2), (7, 3)]:
         rng2 = random.Random(seed)
         chunks = [[] for _ in range(n_chunks)]
-        for e in edges:
-            chunks[rng2.randrange(n_chunks)].append(e)
+        for r in rows:
+            chunks[rng2.randrange(n_chunks)].append(r)
+        # the same key arrives again in the first and the last chunk
+        chunks[0].append(replayed)
+        chunks[-1].append(replayed)
         state = None
         for chunk in chunks:
-            if not chunk:
-                continue
-            state = incremental_cc_update(
-                state,
-                spark.createDataFrame(chunk, "src string, dst string"),
+            state = merge_linked(
+                state, spark.createDataFrame(chunk, LINKED)
             ).localCheckpoint()
-        got = {
-            r["node"]: r["root"] for r in state.collect()
-        }
-        # batch CC omits isolated/self-loop-only nodes; so does the
-        # incremental state — the dicts must be identical
+        assert state.count() == len(rows), "one state row per key"
+        got = _assignments(current_clusters(state))
         assert got == expected, f"chunking {n_chunks}/{seed} diverged"
 
 
-def test_uri_star_incremental_matches_batch_er(spark):
+def test_merged_state_matches_min_key_per_uri(spark):
     rows = [
         (f"{d}:{b}", f"uri{u}")
         for d, b, u in [
@@ -67,7 +65,7 @@ def test_uri_star_incremental_matches_batch_er(spark):
             (4, 2, 2), (5, 0, 1), (6, 1, 4), (7, 0, 4), (8, 3, 5),
         ]
     ]
-    linked = spark.createDataFrame(rows, "mention_key string, uri string")
+    linked = spark.createDataFrame(rows, LINKED)
     # batch contract: clusters are uri groups, id = min mention_key
     expected = {}
     mins = {}
@@ -81,24 +79,16 @@ def test_uri_star_incremental_matches_batch_er(spark):
         chunk = linked.filter(
             F.pmod(F.crc32(F.col("mention_key")), F.lit(3)) == k
         )
-        state = incremental_cc_update(
-            state, uri_star_edges(chunk)
-        ).localCheckpoint()
-    got = _assignments(current_clusters(state))
-    assert got == expected
-    # synthetic URI anchors never leak and never win the min
-    assert all(not v.startswith("~uri:") for v in got.values())
+        state = merge_linked(state, chunk).localCheckpoint()
+    assert _assignments(current_clusters(state)) == expected
 
 
 def test_empty_batch_is_a_noop(spark):
-    linked = spark.createDataFrame(
-        [("1:0", "uriA"), ("2:0", "uriA")],
-        "mention_key string, uri string",
-    )
-    state = incremental_cc_update(None, uri_star_edges(linked))
+    linked = spark.createDataFrame([("1:0", "uriA"), ("2:0", "uriA")], LINKED)
+    state = merge_linked(None, linked)
     before = sorted(map(tuple, state.collect()))
-    empty = spark.createDataFrame([], "mention_key string, uri string")
-    after = incremental_cc_update(state, uri_star_edges(empty))
+    empty = spark.createDataFrame([], LINKED)
+    after = merge_linked(state, empty)
     assert sorted(map(tuple, after.collect())) == before
 
 
@@ -152,16 +142,16 @@ def test_run_er_stream_end_to_end_resume_and_idempotence(spark, tmp_path):
     # counters + lineage present on every committed stage
     man = store.manifest()["stages"]
     for s in stages:
-        assert "n_edges" in man[s]["counters"]
+        assert "n_linked" in man[s]["counters"]
+    # 3 berlin + 2 paris + 1 tokyo mentions over the two files
+    assert sum(man[s]["counters"]["n_linked"] for s in stages) == 6
     assert man[f"er_state_v{v}"]["lineage"], "later stages carry lineage"
 
     # idempotence: re-applying the last batch id returns the committed
     # stage untouched (foreachBatch retry semantics)
     before = sorted(map(tuple, state.collect()))
     again = update_er_state(
-        store, v,
-        spark.createDataFrame([("9:9", "uriB")],
-                              "mention_key string, uri string"),
+        store, v, spark.createDataFrame([("9:9", "uriB")], LINKED)
     )
     assert sorted(map(tuple, again.collect())) == before
 

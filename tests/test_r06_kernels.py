@@ -23,7 +23,7 @@ from dbpedia_spotlight_spark.operators.ann import (
     lsh_topk,
     make_hyperplanes,
 )
-from dbpedia_spotlight_spark.operators.cc import _driver_union_find
+from dbpedia_spotlight_spark.operators.cc import _union_find_arrow
 from dbpedia_spotlight_spark.operators.dedup import (
     minhash_lsh_candidates,
     simhash64_udf,
@@ -281,7 +281,7 @@ def test_vectorized_union_find_matches_reference(spark, shape):
     )
     got = sorted(
         (r["mention_key"], r["cluster_id"])
-        for r in _driver_union_find(edf).collect()
+        for r in _union_find_arrow(edf.toArrow(), spark).collect()
     )
     expected = _reference_union_find(
         [(s, d) for s, d in edges if s != d]

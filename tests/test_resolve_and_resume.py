@@ -1,5 +1,5 @@
 """Full resolve() pipeline: clusters vs oracle (incl. coref), checkpoints,
-kill/resume semantics, scaling counters in the manifest."""
+kill/resume semantics of the stages and of the CC supersteps."""
 
 import json
 import shutil
@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.fixtures import oracle as O
+from dbpedia_spotlight_spark.operators.cc import connected_components
 from dbpedia_spotlight_spark.plans.model_build import model_from_fixture_dir
 from dbpedia_spotlight_spark.plans.pipeline import resolve
 from dbpedia_spotlight_spark.sources.checkpoint import CheckpointStore
@@ -40,20 +41,13 @@ def test_resolve_clusters_match_oracle(spark, fixture_dir, model, fx,
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     result = resolve(docs, model, stopwords=list(fx.stopwords.word))
     got = _cluster_map(result.clusters)
-    # same partition of mentions into clusters (ids differ: CC uses min
-    # mention key, oracle uses the URI)
-    assert set(got) == set(oracle_clusters)
-    by_got: dict[str, set] = {}
-    by_want: dict[str, set] = {}
-    for k, c in got.items():
-        by_got.setdefault(c, set()).add(k)
+    # exactly the oracle's clusters, ids included: each URI group is
+    # labelled by its smallest mention key, NIL mentions by their own
+    members: dict[str, list] = {}
     for k, c in oracle_clusters.items():
-        by_want.setdefault(c, set()).add(k)
-    assert sorted(map(sorted, by_got.values())) == sorted(
-        map(sorted, by_want.values())
-    )
+        members.setdefault(c, []).append(k)
+    assert got == {k: min(ks) for ks in members.values() for k in ks}
     assert O.pairwise_f1(got, fx.eval_pairs) >= 0.99
-    assert result.counters["blocking"]["n_blocks"] > 0
 
 
 def test_resume_skips_completed_stages(spark, fixture_dir, model, fx,
@@ -66,8 +60,8 @@ def test_resume_skips_completed_stages(spark, fixture_dir, model, fx,
 
     manifest = store.manifest()
     stages = set(manifest["stages"])
-    assert {"mentions", "scored", "resolved", "edges", "clusters"} <= stages
-    assert any(s.startswith("cc_step_") for s in stages)
+    assert stages == {"mentions", "scored", "resolved", "clusters"}
+    assert not any(s == "edges" or s.startswith("cc_step_") for s in stages)
     # per-partition lineage counters present
     assert all("partitions" in v for v in manifest["stages"].values())
 
@@ -99,29 +93,34 @@ def test_resume_skips_completed_stages(spark, fixture_dir, model, fx,
         P.annotate = orig
 
 
-def test_cc_superstep_resume(spark, fixture_dir, model, fx,
-                             tmp_path_factory):
-    """Killing inside the CC loop resumes from the last superstep."""
+def test_cc_superstep_resume(spark, tmp_path_factory):
+    """Killing inside the CC loop resumes from the last superstep: the
+    input edges are never read again, and the result is unchanged."""
     ckpt = str(tmp_path_factory.mktemp("ckpt_cc"))
-    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
+    nodes = [f"c{i:02d}" for i in range(40)]
+    edges = spark.createDataFrame(
+        [(nodes[i], nodes[i + 1]) for i in range(39)], "src string, dst string"
+    )
     store = CheckpointStore(spark, ckpt)
-    r1 = resolve(docs, model, stopwords=list(fx.stopwords.word), store=store)
-    full = _cluster_map(r1.clusters)
+    full = _cluster_map(connected_components(edges, store=store))
+    assert full == {n: "c00" for n in nodes}
 
     manifest = store.manifest()
     cc_steps = sorted(
-        s for s in manifest["stages"] if s.startswith("cc_step_")
+        (s for s in manifest["stages"] if s.startswith("cc_step_")),
+        key=lambda s: int(s.rsplit("_", 1)[1]),
     )
-    assert cc_steps, "expected checkpointed CC supersteps"
-    # keep only the first superstep + upstream stages; drop the rest
-    keep = {"mentions", "scored", "resolved", "edges", cc_steps[0]}
-    manifest["stages"] = {
-        k: v for k, v in manifest["stages"].items() if k in keep
-    }
+    assert len(cc_steps) > 1, "a 40-node chain needs several supersteps"
+    # simulate a kill after the first superstep
+    first = {cc_steps[0]: manifest["stages"][cc_steps[0]]}
+    manifest["stages"] = dict(first)
     store._commit_manifest(manifest)
 
-    r2 = resolve(
-        docs, model, stopwords=list(fx.stopwords.word),
-        store=CheckpointStore(spark, ckpt),
+    poisoned = edges.filter(
+        F.raise_error(F.lit("resume re-read the input edges")).isNull()
     )
-    assert _cluster_map(r2.clusters) == full
+    store2 = CheckpointStore(spark, ckpt)
+    assert _cluster_map(connected_components(poisoned, store=store2)) == full
+    stages = store2.manifest()["stages"]
+    assert stages[cc_steps[0]] == first[cc_steps[0]]  # not rewritten
+    assert set(stages) == set(cc_steps)
