@@ -4,15 +4,13 @@ Spark recast of core/.../filter/annotations/* and the legacy
 util/AnnotationFilter.scala:47-87 chain, applied in the reference's
 order: coref → confidence → support → types → uri-list → junk → sort.
 
-All filters are plain column predicates except coreference resolution,
-which is inherently sequential per document (backward scan,
-AnnotationFilter.scala:89-123) and therefore runs as a grouped
-applyInPandas over doc_id — one Arrow batch per document group.
+All filters are column expressions. Coreference resolution, a backward
+scan per document in the reference (AnnotationFilter.scala:89-123), is a
+per-(doc, word) donor lookup plus one left join — no Python stage.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,8 +46,6 @@ def fit_confidence_thresholds(
     ConfidenceFilter.scala:49 indexes it by round((len-1)·confidence)):
     equal-frequency quantiles of the score distribution, exact
     percentiles (one pass, SQL-expressible)."""
-    from pyspark.sql import functions as F
-
     qs = [i / (n - 1) for i in range(n)]
     row = scored.agg(
         *[F.percentile(score_col, q).alias(f"q{i}") for i, q in enumerate(qs)]
@@ -99,48 +95,61 @@ def junk_filter(scored: DataFrame) -> DataFrame:
     return scored.filter(~F.col("uri").startswith("List_of_"))
 
 
-_COREF_SCHEMA = (
-    "mention_key string, doc_id string, begin int, sf string, uri string,"
-    " final_score double, pct_second_rank double"
-)
-
-
-def _is_coreferent(prev_sf: str, later_sf: str) -> bool:
-    """AnnotationFilter.isCoreferent (:89-99): later is a single word;
-    every word of the earlier sf is capitalized; the earlier sf contains
-    the later word."""
-    prev_words = prev_sf.split(" ")
-    later_words = later_sf.split(" ")
-    return (
-        len(later_words) == 1
-        and all(w[:1] == w[:1].upper() for w in prev_words)
-        and later_words[0] in prev_words
-    )
+_LINK_COLS = ("uri", "final_score", "pct_second_rank")
 
 
 def coreference_resolution(resolved: DataFrame) -> DataFrame:
     """Later single-word mentions inherit the resource (and scores) of the
     first earlier mention whose capitalized sf word-contains them
-    (AnnotationFilter.buildCoreferents :101-123). Per-doc sequential →
-    grouped applyInPandas."""
+    (AnnotationFilter.isCoreferent :89-99, buildCoreferents :101-123).
 
-    def fix(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("begin").reset_index(drop=True)
-        for i in range(len(pdf)):
-            later_sf = pdf.at[i, "sf"]
-            for j in range(i):
-                if _is_coreferent(pdf.at[j, "sf"], later_sf):
-                    pdf.at[i, "uri"] = pdf.at[j, "uri"]
-                    pdf.at[i, "final_score"] = pdf.at[j, "final_score"]
-                    pdf.at[i, "pct_second_rank"] = pdf.at[j, "pct_second_rank"]
-                    break
-        return pdf
+    Donors are the mentions each word of whose `sf.split(" ")` starts
+    with its own upper case (empty words pass). Per (doc_id, word) the
+    lookup keeps the smallest struct (begin, uri, final_score,
+    pct_second_rank); a mention with no space in its sf left-joins it on
+    its word and copies its uri (NULL too) and scores if the donor's
+    begin is strictly smaller. A donor at the mention's own begin never
+    counts and the struct order breaks ties, so mentions sharing a begin
+    (`overlap=True`) get one fixed answer.
 
-    cols = [c.split(" ")[0] for c in _COREF_SCHEMA.split(", ")]
-    return (
-        resolved.select(*cols)
-        .groupBy("doc_id")
-        .applyInPandas(lambda _key, pdf: fix(pdf), schema=_COREF_SCHEMA)
+    One join equals the reference's sequential scan, which copies the
+    donor's current, possibly rewritten, values: the first donor of a
+    mention is never itself rewritten, because a rewritten donor is the
+    mention's own single word and its donor would be an earlier donor of
+    the mention. So no chaining is needed.
+
+    -> (mention_key, doc_id, begin, sf, uri, final_score,
+    pct_second_rank), one row per input row."""
+    words = F.split("sf", " ")
+    capitalized = F.forall(
+        words,
+        lambda w: F.substring(w, 1, 1) == F.upper(F.substring(w, 1, 1)),
+    )
+    donors = (
+        resolved.filter(capitalized)
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(words)).alias("word"),
+            F.struct("begin", *_LINK_COLS).alias("donor"),
+        )
+        .groupBy("doc_id", "word")
+        .agg(F.min("donor").alias("donor"))
+    )
+    m, d = resolved.alias("m"), donors.alias("d")
+    rewrite = F.col("d.donor.begin") < F.col("m.begin")
+    return m.join(
+        d,
+        (F.col("m.doc_id") == F.col("d.doc_id"))
+        & (F.col("m.sf") == F.col("d.word"))
+        & ~F.col("m.sf").contains(" "),
+        "left",
+    ).select(
+        "m.mention_key", "m.doc_id", "m.begin", "m.sf",
+        *[
+            F.when(rewrite, F.col(f"d.donor.{c}"))
+            .otherwise(F.col(f"m.{c}")).alias(c)
+            for c in _LINK_COLS
+        ],
     )
 
 

@@ -6,77 +6,62 @@ accumulate sentence units until the token count reaches MAX_CONTEXT,
 then flush. Spans are the engine's sentence analog (the reference
 tokenizes sentences; our documents arrive pre-segmented into spans).
 
-Fast path: documents at or under the cap take window 0 with pure column
-math — no Python. Only over-cap documents run the (inherently
-sequential) greedy accumulation, per-doc in applyInPandas.
+One path for every document, in the JVM: the greedy accumulate-and-flush
+is an `aggregate` over the document's sorted (span_idx, n_tok) list. A
+document under the cap gets window 0 from the same scan; one with no
+text span gives no rows.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize_expr, tokenize_py
+from ..functions.tokenize import tokenize_expr
 
-_SPAN_WINDOW_SCHEMA = "doc_id string, span_idx int, window_id int"
-
-
-def assign_windows_py(span_token_counts: list[int], max_context: int) -> list[int]:
-    """Greedy accumulate-and-flush (DBTwoStepDisambiguator.scala:69-88):
-    window advances after the span that pushes the running count to
-    >= max_context."""
-    out = []
-    window = 0
-    running = 0
-    for n in span_token_counts:
-        out.append(window)
-        running += n
-        if running >= max_context:
-            window += 1
-            running = 0
-    return out
+_WINDOWED_SPANS = "array<struct<span_idx:int,window_id:int>>"
 
 
 def span_windows(
     documents: DataFrame, stopwords: list[str], max_context: int
 ) -> DataFrame:
-    """-> (doc_id, span_idx, window_id) for every TEXT span."""
+    """-> (doc_id, span_idx, window_id) for every TEXT span; the window
+    advances after the span that takes the running token count to
+    >= max_context (DBTwoStepDisambiguator.scala:69-88)."""
     toks_per_span = documents.select(
         "doc_id",
         F.posexplode("spans").alias("span_idx", "s"),
     ).filter(F.col("s.kind") == "text").select(
         "doc_id",
-        "span_idx",
-        F.size(_span_tokens(F.col("s.text"), stopwords)).alias("n_tok"),
+        F.struct(
+            "span_idx",
+            F.size(_span_tokens(F.col("s.text"), stopwords)).alias("n_tok"),
+        ).alias("span"),
     )
-    doc_totals = toks_per_span.groupBy("doc_id").agg(
-        F.sum("n_tok").alias("total")
+    per_doc = toks_per_span.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list("span")).alias("spans")
     )
-    with_total = toks_per_span.join(doc_totals, "doc_id")
+    start = F.struct(
+        F.lit(0).alias("window"),
+        F.lit(0).alias("running"),
+        F.array().cast(_WINDOWED_SPANS).alias("out"),
+    )
 
-    short = with_total.filter(F.col("total") < max_context).select(
-        "doc_id", "span_idx", F.lit(0).alias("window_id")
-    )
-
-    def slice_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("span_idx").reset_index(drop=True)
-        wins = assign_windows_py(list(pdf["n_tok"]), max_context)
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "span_idx": pdf["span_idx"],
-                "window_id": wins,
-            }
+    def step(acc, span):
+        running = acc["running"] + span["n_tok"]
+        full = running >= max_context
+        placed = F.struct(span["span_idx"].alias("span_idx"),
+                          acc["window"].alias("window_id"))
+        return F.struct(
+            (acc["window"] + full.cast("int")).alias("window"),
+            F.when(full, 0).otherwise(running).alias("running"),
+            F.concat(acc["out"], F.array(placed)).alias("out"),
         )
 
-    long = (
-        with_total.filter(F.col("total") >= max_context)
-        .select("doc_id", "span_idx", "n_tok")
-        .groupBy("doc_id")
-        .applyInPandas(lambda _k, pdf: slice_doc(pdf), _SPAN_WINDOW_SCHEMA)
+    return per_doc.select(
+        "doc_id",
+        F.inline(F.aggregate("spans", start, step)["out"]),
     )
-    return short.unionByName(long)
 
 
 def _span_tokens(text_col, stopwords: list[str]):

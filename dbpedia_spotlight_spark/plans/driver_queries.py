@@ -496,9 +496,9 @@ def q_coref_resolution(spark, sf_dir):
     """AnnotationFilter coreference over synthesized mentions: per doc,
     an ALL-CAPS two-word mention (begin 0), the same word alone (begin
     7 — must inherit the first mention's uri/scores), and a lowercase
-    word (begin 9 — must keep its own). Runs the PRODUCTION
-    applyInPandas operator; the oracle re-derives the first-earlier-
-    capitalized-word-containing donor rule in flat SQL."""
+    word (begin 9 — must keep its own). Runs the PRODUCTION donor-join
+    operator; the oracle re-derives the first-earlier-capitalized-word-
+    containing donor rule in flat SQL."""
     from ..operators.filters import coreference_resolution
 
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 300)

@@ -109,12 +109,11 @@ def annotate(
     # scores — cached, or the tokenize+window subtree (which re-reads the
     # input) expands once per reference (measured ~20% of annotate)
     win_tokens = win_tokens.cache()
-    # mentions (a pandas-UDF scan) and span_map (an applyInPandas for long
-    # docs) are each referenced by several downstream joins — cache them
-    # or Catalyst re-runs the Python stages per reference
+    # mentions (a pandas-UDF scan) is referenced by several downstream
+    # joins — cached, or Catalyst re-runs the Python stage per reference
     mentions = with_mention_key(
         spot(documents)
-    ).join(span_map.cache(), ["doc_id", "span_idx"], "left").fillna(
+    ).join(span_map, ["doc_id", "span_idx"], "left").fillna(
         {"window_id": 0}
     ).cache()
     cands = generate_candidates(mentions, model, params)
