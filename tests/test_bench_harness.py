@@ -71,24 +71,6 @@ def test_probe_base_is_min_of_burst_and_memoized():
     assert b1 <= bench._cpu_probe() * 1.5 + 0.05
 
 
-def test_record_scaling_run_validates_argv():
-    # the recording tool is part of the adjudication chain; bad argv must
-    # print usage to stderr (exit 2), not crash with a traceback
-    import subprocess
-
-    script = "scripts/record_scaling_run.py"
-    p = subprocess.run([sys.executable, script], capture_output=True,
-                       text=True, cwd="/root/repo")
-    assert p.returncode == 2
-    assert "usage:" in p.stderr
-    assert "Traceback" not in p.stderr
-    p = subprocess.run([sys.executable, script, "abc", "/tmp/nonexistent"],
-                       capture_output=True, text=True, cwd="/root/repo")
-    assert p.returncode == 2
-    assert "must be an integer" in p.stderr
-    assert "Traceback" not in p.stderr
-
-
 def test_chain_break_has_direct_evidence_conditions():
     # contract: chaining must refuse to reuse a lo wall whose OWN trace
     # showed contention (probe stretch beyond the gate, or load1_end

@@ -5,7 +5,6 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from dbpedia_spotlight_spark.functions.mathutil import logsumexp
 from dbpedia_spotlight_spark.functions.normalize import sf_normalize_py
 from dbpedia_spotlight_spark.functions.similarity import (
     _levenshtein,
@@ -72,17 +71,6 @@ def test_redirect_closure_is_fixpoint(pairs):
     for src, final in closed.items():
         # final is terminal (no outgoing redirect) or a cycle representative
         assert final not in pairs or closed.get(final) == final
-
-
-@given(st.lists(st.floats(min_value=-50, max_value=50), min_size=1,
-                max_size=20))
-@settings(max_examples=200, deadline=None)
-def test_logsumexp_dominates_max(xs):
-    import math
-
-    lse = logsumexp(xs)
-    assert lse >= max(xs) - 1e-12
-    assert lse <= max(xs) + math.log(len(xs)) + 1e-12
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Dedup / ANN / text-stats / multimodal operators."""
+"""Dedup / ANN / text-stats / media decode operators."""
 
 import numpy as np
 import pytest
@@ -15,11 +15,7 @@ from dbpedia_spotlight_spark.operators.dedup import (
     ngram_jaccard,
     simhash_dedup,
 )
-from dbpedia_spotlight_spark.operators.multimodal import (
-    decode_media,
-    media_payloads_from_documents,
-    sample_frames,
-)
+from dbpedia_spotlight_spark.operators.multimodal import decode_media
 from dbpedia_spotlight_spark.operators.textstats import text_stats
 
 
@@ -318,31 +314,6 @@ def test_text_stats(docs):
 
 
 # ---------------------------------------------------------------------------
-
-
-def test_multimodal_plumbing(spark, fixture_dir):
-    # media_payloads_from_documents synthesizes REAL tiny WAVs (column
-    # expression: constant header ++ md5 digest samples) — the decode
-    # below is the production parse_wav path, no stub anywhere
-    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    media = media_payloads_from_documents(docs)
-    n_media = media.count()
-    assert n_media > 0
-    decoded = decode_media(media)
-    rows = decoded.collect()
-    assert len(rows) == n_media
-    for r in rows[:5]:
-        assert r["width"] == 8000  # sample rate
-        assert r["height"] == 1    # mono
-        assert r["n_frames"] == 8  # digest bytes -> 8 i16 samples
-        assert len(r["features"]) == 8
-    # determinism
-    again = decode_media(media).collect()
-    assert sorted(map(str, rows)) == sorted(map(str, again))
-    # distinct refs must produce distinct sample content (digest-driven)
-    assert len({str(r["features"]) for r in rows}) > 1 or n_media == 1
-    frames = sample_frames(decoded, every_k=4)
-    assert frames.count() >= n_media
 
 
 def test_multimodal_decode_unknown_payload_raises(spark):
