@@ -18,8 +18,6 @@ makes a killed run resumable from the last completed superstep.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,10 +42,8 @@ DRIVER_CC_MAX_EDGES = 2_000_000
 # in the pass case the driver receives <= DRIVER_CC_MAX_EDGES rows
 # regardless of wave width, and in the fail case each task's output is
 # capped by the LocalLimit at MAX+1 rows, so the transient worst case is
-# probe_parts x min(partition_rows, MAX+1) short key-pair rows. Callers
-# at scales where that transient matters set SPARK_CC_PROBE_PARTS=1 to
-# restore the conservative ramp.
-CC_PROBE_PARTS = int(os.environ.get("SPARK_CC_PROBE_PARTS", "32"))
+# probe_parts x min(partition_rows, MAX+1) short key-pair rows.
+CC_PROBE_PARTS = 32
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

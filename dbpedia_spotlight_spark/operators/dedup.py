@@ -160,9 +160,9 @@ def minhash_signature_hashes_udf(n: int, num_hashes: int):
     permutation sample, so candidate sets differ per-pair while recall
     at the design point is equal (pinned in tests).
 
-    Measured (scripts/microbench_minhash.py, sf0.1 corpus replicated
-    120x, quiet host): 13% faster at local[2] and 10% at local[8] than
-    the exploded xxhash64 path, with candidate-pair counts within 0.4%.
+    Measured (sf0.1 corpus replicated 120x, quiet host): 13% faster at
+    local[2] and 10% at local[8] than the exploded xxhash64 path, with
+    candidate-pair counts within 0.4%.
     """
     import re
 
@@ -269,27 +269,6 @@ def minhash_signature_md5_udf(n: int, num_hashes: int):
         return pd.Series(out)
 
     return sig_udf
-
-
-def minhash_signature(shingles_col, num_hashes: int = 16):
-    """array<string> of per-seed minima of md5(seed || shingle).
-
-    The lexicographic minimum of a keyed cryptographic digest is a valid
-    min-hash; using md5 keeps Spark and the DuckDB oracle bit-identical.
-    """
-
-    # NB: the lambda must be unary — PySpark treats a two-parameter lambda
-    # as (element, index) and would shadow the seed.
-    def seeded(i: int):
-        prefix = f"{i}|"
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles_col, seeded(i)))
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def minhash_lsh_candidates(

@@ -12,7 +12,8 @@ classes:
      happens after getScore at DBTwoStepDisambiguator.scala:195-200 — and
      prior is P(e), the resource prior). The 6617.888/0.7886/0.2214
     fields earlier in that file are dead code never read by getScore.
-  * OnlySimScoreMixture — context channel alone
+  * OnlySimScoreMixture — context channel alone; inlined in
+    operators/disambiguate.py
 """
 
 from __future__ import annotations
@@ -43,10 +44,6 @@ def linear_regression_mixture(res_prior: Column, ctx_raw: Column) -> Column:
 # DBpediaResourceOccurrence.scala:28 contextualScore=-1): the P(c|e)/P(e)
 # Score FEATURES set on eNIL are not read by LinearRegressionMixture.
 LINREG_NIL_SCORE = 1234.3989 * 0.0 + 0.9968 * (-1.0) - 0.0275
-
-
-def only_sim_score_mixture(ctx_score: Column) -> Column:
-    return ctx_score
 
 
 def fader_mixture(

@@ -40,6 +40,7 @@ from ..operators.dedup import (
     ngram_jaccard,
     simhash_dedup,
 )
+from ..operators.filters import fit_confidence_thresholds
 from ..operators.redirects import close_redirects
 from ..operators.spotting import (
     broadcast_automaton,
@@ -980,8 +981,7 @@ def q_spans_passthrough(spark, sf_dir):
 
 
 def q_events_windowed(spark, sf_dir):
-    """Tumbling time-window aggregation over the events table — the
-    batch form of the engine's streaming windowed aggregates."""
+    """Tumbling time-window aggregation over the events table."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return ev.groupBy(
         F.date_format(
@@ -1002,13 +1002,10 @@ def q_confidence_thresholds(spark, sf_dir):
     scores = pc.join(ann, "sf").select(
         (F.col("pair_count") / F.col("ann")).alias("score")
     )
-    qs = [i / 10 for i in range(11)]
-    row = scores.agg(
-        *[F.percentile("score", q).alias(f"q{i}") for i, q in enumerate(qs)]
-    ).collect()[0]
+    thresholds = fit_confidence_thresholds(scores, "score", n=11)
     return spark.createDataFrame(
-        [(i, round(qs[i], 2), round(float(row[f"q{i}"]), 9))
-         for i in range(11)],
+        [(i, round(i / 10, 2), round(t, 9))
+         for i, t in enumerate(thresholds)],
         "idx int, quantile double, threshold double",
     )
 

@@ -19,6 +19,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Create a session with the engine's defaults, or return the running
+    one unchanged: its conf belongs to whoever started it."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     builder = (
         SparkSession.builder.appName(app_name)

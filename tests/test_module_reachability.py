@@ -17,13 +17,7 @@ ENTRY_POINTS = [
       if not p.name.startswith("test_")),
 ]
 DECLARED_UNREACHABLE = {
-    "operators.multimodal": "PNG codec kept for its tests; ROADMAP item 5",
-    "sources.bucketing": "COVERAGE.md §2.8 bucketed joins",
     "sources.corpora": "COVERAGE.md occurrence TSV, NT and REST I/O rows",
-    "streaming.annotate_stream": "COVERAGE.md §2.12 streaming",
-    "streaming.dedup_stream": "COVERAGE.md §2.12 streaming",
-    "streaming.stateful": "COVERAGE.md §2.12 streaming",
-    "streaming.windowed": "COVERAGE.md §2.12 streaming",
 }
 
 

@@ -1,4 +1,4 @@
-"""Selectors, corpus sources round-trips, eval harness, streaming, CLI."""
+"""Selectors, corpus sources round-trips, eval harness, CLI."""
 
 import json
 import os
@@ -130,41 +130,6 @@ def test_pairwise_prf(spark):
     m = E.pairwise_prf(clusters, pairs)
     assert m["tp"] == 1 and m["fn"] == 1 and m["fp"] == 0
     assert m["f1"] == pytest.approx(2 / 3)
-
-
-# ---------------------------------------------------------------------------
-
-
-def test_annotate_stream(spark, fixture_dir, fx, tmp_path):
-    from dbpedia_spotlight_spark.plans.model_build import (
-        model_from_fixture_dir,
-    )
-    from dbpedia_spotlight_spark.streaming.annotate_stream import (
-        annotate_stream,
-    )
-
-    model = model_from_fixture_dir(spark, fixture_dir)
-    in_dir = str(tmp_path / "in")
-    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet").limit(20)
-    docs.write.parquet(in_dir)
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    q = annotate_stream(
-        spark, in_dir, out_dir, ck_dir, model,
-        stopwords=list(fx.stopwords.word),
-    )
-    q.awaitTermination(120)
-    result = spark.read.parquet(out_dir)
-    assert result.count() > 0
-    assert "uri" in result.columns
-    # restart with no new data: offset log prevents reprocessing
-    n1 = result.count()
-    q2 = annotate_stream(
-        spark, in_dir, out_dir, ck_dir, model,
-        stopwords=list(fx.stopwords.word),
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == n1
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,9 @@
-"""DBSpotter spot scoring, context narrowing, type filter e2e, language
-normalization, Wortschatz reader, annotated output."""
+"""DBSpotter spot scoring, context narrowing, type filter e2e, Wortschatz
+reader, annotated output."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from dbpedia_spotlight_spark.functions.normalize import (
-    language_normalize_py,
-)
 from dbpedia_spotlight_spark.operators.spot_scoring import (
     doc_tokens_with_offsets,
     narrow_context,
@@ -106,12 +103,6 @@ def test_type_filter_e2e(spark, fixture_dir, fx):
         all_rows, whitelist=("DBpedia:Person",), keep_untyped=True
     )
     assert typed_or_unknown.count() >= n_typed
-
-
-def test_language_normalize():
-    assert language_normalize_py("Berlin's wall") == "Berlin s wall"
-    assert language_normalize_py("l’homme", "fr") == "l' homme"
-    assert language_normalize_py("nothing here") == "nothing here"
 
 
 def test_wortschatz_reader(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Dedup / ANN / text-stats / media decode operators."""
+"""Dedup / ANN / text-stats operators."""
 
 import numpy as np
 import pytest
@@ -15,7 +15,6 @@ from dbpedia_spotlight_spark.operators.dedup import (
     ngram_jaccard,
     simhash_dedup,
 )
-from dbpedia_spotlight_spark.operators.multimodal import decode_media
 from dbpedia_spotlight_spark.operators.textstats import text_stats
 
 
@@ -311,16 +310,3 @@ def test_text_stats(docs):
     assert 0.0 <= out["d1"]["quality"] <= 1.0
     assert out["d1"]["fingerprint"] == out["d2"]["fingerprint"]
     assert out["d1"]["fingerprint"] != out["d3"]["fingerprint"]
-
-
-# ---------------------------------------------------------------------------
-
-
-def test_multimodal_decode_unknown_payload_raises(spark):
-    media = spark.createDataFrame(
-        [("File:x.jpg", "image/jpeg", bytearray(b"xx"), None, None)],
-        "media_ref string, media_type string, payload binary,"
-        " meta_width int, meta_height int",
-    )
-    with pytest.raises(Exception, match="unsupported media payload"):
-        decode_media(media).collect()
