@@ -5,8 +5,8 @@ prior link → connected-components clustering) on sf0.001.
 `queries()` / `oracle_sql()` expose every implemented operator from
 SURVEY.md §2 plus the training-data-pipeline ops — every query has a
 DuckDB ANSI-SQL twin (the SimHash 64-bit kernel is rebuilt in SQL via
-md5-prefix hashing + per-bit majority; the sign-LSH bucket is an
-expression over literal hyperplanes inlined into both engines; IVF
+md5-prefix hashing + per-bit majority; the sign-LSH bucket codes are
+recomputed in SQL from the seeded hyperplanes the Spark kernel uses; IVF
 centroids are selected by an engine-neutral md5(id:seed) order so even
 the "trained" inverted-list path has a static twin).
 """

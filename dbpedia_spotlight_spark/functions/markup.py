@@ -67,32 +67,3 @@ def clean_uri_expr(col: Column) -> Column:
     out = F.regexp_replace(out, r"^/", "")
     out = F.regexp_replace(out, r"\s", "_")
     return out
-
-
-def is_good_surface_form_expr(
-    sf: Column, stopwords: list[str], max_length: int = 50
-) -> Column:
-    """ExtractCandidateMap.isGoodSurfaceForm (:172-196): length cap, must
-    contain a letter, no escaped chars, at least one non-stopword word."""
-    has_letter = ~sf.rlike(r"^[\W\d_ ]+$")
-    not_escaped = ~sf.rlike(r"\\\w")
-    words = F.split(F.lower(sf), " ")
-    non_stop = F.exists(
-        words, lambda w: ~w.isin(*[s.lower() for s in stopwords])
-    ) if stopwords else F.lit(True)
-    return (
-        (F.length(sf) <= max_length) & has_letter & not_escaped & non_stop
-    )
-
-
-def merge_surface_form_sources(*sources, stopwords: list[str] | None = None):
-    """Union sf candidates from several sources (titles ∪ redirects ∪
-    disambiguations ∪ occurrence-derived — bin/index.sh:42-43), dedupe,
-    keep the good ones."""
-    out = sources[0]
-    for s in sources[1:]:
-        out = out.unionByName(s)
-    out = out.dropDuplicates(["sf"])
-    return out.filter(
-        is_good_surface_form_expr(F.col("sf"), stopwords or [])
-    )

@@ -178,10 +178,10 @@ def brute_force_topk(
     )
 
 
-# Above this row count, embedding_neardup(method="auto") switches from
-# the exact O(n²) crossJoin to the banded sign-LSH bucket join. The exact
-# path is the correctness baseline / oracle twin; at corpus scale nothing
-# should ever run it (a 10^12-row cross product is 10^24 pairs).
+# Above this row count, embedding_neardup switches from the exact O(n²)
+# crossJoin to the banded sign-LSH bucket join. The exact path is the
+# correctness baseline / oracle twin; at corpus scale nothing should
+# ever run it (a 10^12-row cross product is 10^24 pairs).
 NEARDUP_EXACT_MAX_ROWS = 100_000
 
 
@@ -286,7 +286,6 @@ def embedding_neardup_approx(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_method: str = "udf",
     dim: int | None = None,
 ) -> DataFrame:
     """Banded sign-LSH near-dup: same output contract as the exact path
@@ -299,12 +298,6 @@ def embedding_neardup_approx(
     a distinct on the candidate pair, and an O(candidates) verify. No
     cross product anywhere.
 
-    bucket_method: "udf" (Arrow matrix product — the fast path) or
-    "expr" (pure column expressions over the same literal planes —
-    bit-identical band codes, ANSI-SQL-expressible so the path can be
-    hash-gated by the driver's DuckDB oracle, same discipline as
-    lsh_topk).
-
     dim: embedding dimensionality. Pass it when known (it's fixed by the
     upstream embedding model) — the fallback sniffs one row, an extra
     tiny job per call."""
@@ -316,22 +309,10 @@ def embedding_neardup_approx(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if bucket_method == "expr":
-        codes = F.array(*[
-            hyperplane_bucket_expr(
-                F.col("v"),
-                planes[b * band_bits:(b + 1) * band_bits],
-            )
-            for b in range(n_bands)
-        ])
-        coded = base.withColumn("codes", codes)
-    else:
-        planes_bc = spark.sparkContext.broadcast(planes)
-        coded = base.withColumn(
-            "codes",
-            _band_codes_udf(planes_bc, n_bands, band_bits)(F.col("v")),
-        )
-    coded = coded.select(
+    planes_bc = spark.sparkContext.broadcast(planes)
+    coded = base.withColumn(
+        "codes", _band_codes_udf(planes_bc, n_bands, band_bits)(F.col("v"))
+    ).select(
         "_id", "v", F.posexplode("codes").alias("band", "code")
     )
     # In-bucket verification (same shape as the simhash kernel): rows
@@ -408,27 +389,16 @@ def embedding_neardup(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
     exact_max_rows: int = NEARDUP_EXACT_MAX_ROWS,
     **approx_kw,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine) with
     cosine >= threshold.
 
-    method: "auto" (default) runs the exact crossJoin up to
-    `exact_max_rows` rows and the banded sign-LSH bucket join above it;
-    "exact" / "lsh" force a path. The default is the size-gated routing —
-    a user calling the near-dup API at corpus scale must never get the
-    O(n²) plan (same discipline as operators/redirects.py and the
-    dedup LSH family)."""
-    if method == "exact":
-        return embedding_neardup_exact(corpus, threshold, id_col, vec_col)
-    if method == "lsh":
-        return embedding_neardup_approx(
-            corpus, threshold, id_col=id_col, vec_col=vec_col, **approx_kw
-        )
-    if method != "auto":
-        raise ValueError(f"unknown method: {method!r}")
+    Runs the exact kernel up to `exact_max_rows` rows and the banded
+    sign-LSH bucket join above it, so a user calling the near-dup API at
+    corpus scale never gets the O(n²) plan (same discipline as
+    operators/redirects.py and the dedup LSH family)."""
     # limit(k+1).count() — the gate only needs "is n above the cutoff",
     # so the probe stops scanning once k+1 rows are seen instead of
     # counting the full corpus (at 10^12 rows a full count is a real job)
@@ -441,23 +411,6 @@ def embedding_neardup(
 
 def make_hyperplanes(dim: int, n_bits: int = 12, seed: int = 42) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_bits, dim))
-
-
-def hyperplane_bucket_expr(vec_col, planes: np.ndarray):
-    """Sign-LSH bucket code as a pure column expression over a literal
-    hyperplane matrix: bit j set iff dot(v, planes[j]) > 0.
-
-    JVM-side twin of lsh_bucket_udf — bit-identical to it for the same
-    planes, and expressible in ANSI SQL (list_dot_product in DuckDB), so
-    the LSH path can be hash-gated by the driver's oracle."""
-    bits = None
-    for j, row in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in row])
-        bit = F.when(_dot(vec_col, plane) > 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        )
-        bits = bit if bits is None else bits + bit
-    return bits.cast("int")
 
 
 def lsh_bucket_udf(planes_bc):
@@ -647,15 +600,14 @@ def lsh_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_method: str = "udf",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate self top-k: bucket by hyperplane signs, exact cosine
     rerank within buckets. Recall < 1 by design (single probe).
 
-    bucket_method: "udf" (Arrow-batched matrix product — the fast path at
-    high dim) or "expr" (pure column expression — identical buckets,
-    SQL-expressible for the correctness oracle).
+    Bucket codes come from one Arrow-batched matrix product per batch
+    over the seeded planes; the DuckDB oracle recomputes them from the
+    same planes as literal dot products.
 
     dim: embedding dimensionality. Pass it when known (it's fixed by the
     upstream embedding model) — the fallback sniffs one row.
@@ -685,15 +637,8 @@ def lsh_topk(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if bucket_method == "expr":
-        bucketed = base.withColumn(
-            "bucket", hyperplane_bucket_expr(F.col("v"), planes)
-        )
-    else:
-        planes_bc = spark.sparkContext.broadcast(planes)
-        bucketed = base.withColumn(
-            "bucket", lsh_bucket_udf(planes_bc)(F.col("v"))
-        )
+    planes_bc = spark.sparkContext.broadcast(planes)
+    bucketed = base.withColumn("bucket", lsh_bucket_udf(planes_bc)(F.col("v")))
 
     id_type = base.schema["_id"].dataType
     out_schema = StructType(

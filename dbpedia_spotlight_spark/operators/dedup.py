@@ -47,27 +47,10 @@ def exact_dedup(
 # shingling + MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def word_shingles(text_col, n: int = 3):
-    """Distinct word n-grams as an array column (JVM-side HOFs).
-
-    Correct but interpreted (higher-order functions skip codegen) —
-    measured ~0.4 ms/doc. Kept as the pure-SQL-shaped twin; hot paths use
-    word_shingles_udf below."""
-    toks = F.filter(F.split(F.lower(text_col), r"[^a-z0-9]+"), lambda t: t != "")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(
-            F.array(F.array_join(toks, " "))
-        )
-    )
-
-
 def word_shingles_udf(n: int):
-    """Arrow-batched twin of word_shingles — identical output, ~20x the
-    throughput of the interpreted HOF tree, still narrow (no shuffle)."""
+    """Distinct word n-grams as an array column, one Arrow batch at a time
+    (narrow, no shuffle). A text with fewer than n tokens is one shingle
+    of all its tokens."""
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -141,70 +124,6 @@ def word_shingle_hashes_udf(n: int):
     return shingle_hashes
 
 
-def minhash_signature_hashes_udf(n: int, num_hashes: int):
-    """Full MinHash signature per document in ONE Arrow kernel,
-    ArrayType(LongType()) of length num_hashes.
-
-    The narrowest possible signature plan: where the md5/xxhash64
-    families explode shingles to rows (one UnsafeRow allocation per
-    shingle) and aggregate per-seed minima through a groupBy exchange,
-    this computes the signature inside the Arrow batch — shingle hashes
-    exactly as word_shingle_hashes_udf (pandas' cython SipHash per
-    DISTINCT token + a vectorized polynomial fold), then `num_hashes`
-    universal-hash permutations h_i(g) = A_i*g + B_i on uint64 (odd A_i,
-    fixed seed — the standard minwise estimator family) and a min along
-    the shingle axis. No explode, no aggregation exchange, zero JVM
-    allocations per shingle; the only remaining shuffle in the LSH plan
-    is the band-bucket join itself. Same per-band collision law
-    (P ≈ J^rows_per_band) as the other families — a different
-    permutation sample, so candidate sets differ per-pair while recall
-    at the design point is equal (pinned in tests).
-
-    Measured (sf0.1 corpus replicated 120x, quiet host): 13% faster at
-    local[2] and 10% at local[8] than the exploded xxhash64 path, with
-    candidate-pair counts within 0.4%.
-    """
-    import re
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    split = re.compile(r"[^a-z0-9]+")
-    _P = np.uint64(1000003)
-    _EMPTY = int(
-        pd.util.hash_array(np.array([""], dtype=object),
-                           categorize=False)[0]
-    )
-    rng = np.random.RandomState(0xC0FFEE)
-    _A = (rng.randint(1, 2 ** 63, size=num_hashes).astype(np.uint64)
-          << np.uint64(1)) | np.uint64(1)
-    _B = rng.randint(0, 2 ** 63, size=num_hashes).astype(np.uint64)
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for t in texts:
-                toks = [w for w in split.split(t.lower()) if w] if t else []
-                if not toks:
-                    g = np.array([_EMPTY], dtype=np.uint64)
-                else:
-                    th = pd.util.hash_array(
-                        np.array(toks, dtype=object), categorize=False
-                    )
-                    k = n if len(toks) >= n else len(toks)
-                    g = th[: len(th) - k + 1].copy()
-                    for j in range(1, k):
-                        g = g * _P + th[j: len(th) - k + 1 + j]
-                    g = np.unique(g)
-                sig = (_A[:, None] * g[None, :] + _B[:, None]).min(axis=1)
-                out.append(sig.view(np.int64).tolist())
-        return pd.Series(out)
-
-    return sig_udf
-
-
 # per-worker shingle -> md5-digest-tuple memo for the md5 signature
 # kernel (see minhash_signature_md5_udf); bounded like the simhash cache
 _MINHASH_DIGEST_CACHE: dict = {}
@@ -224,9 +143,9 @@ def minhash_signature_md5_udf(n: int, num_hashes: int):
     concat+md5+hex expressions per row, and paid a groupBy exchange to
     re-assemble signatures. This kernel ships text in / 8 hex strings
     per doc out, hashes with CPython's C md5, and leaves the band-bucket
-    join as the plan's only shuffle — the same shape the perm64 family
-    already has. Equivalence is pinned by tests and the sf0.01 DuckDB
-    gate (which hash-verifies the md5 family end to end)."""
+    join as the plan's only shuffle. Equivalence is pinned by a test
+    against the exploded plan and by the sf0.01 DuckDB gate (which
+    hash-verifies the md5 family end to end)."""
     import hashlib
     import re
 
@@ -300,28 +219,10 @@ def minhash_lsh_candidates(
         guarantees (per-band collision ≈ J^r), different permutation
         sample, so candidate sets differ per-pair but recall at the
         design point is equal — pinned in tests.
-      * "perm64" — the whole signature inside ONE Arrow kernel
-        (minhash_signature_hashes_udf): no shingle explode, no groupBy
-        exchange, zero JVM allocations per shingle; the band-bucket
-        join is the plan's only shuffle. Same collision law, another
-        permutation sample. Measured 10-13% faster end-to-end than
-        "xxhash64" at local[2]/local[8] on the sf0.1 corpus replicated
-        120x, candidate counts within 0.4%. Use this at scale.
     """
-    if hash_fn not in ("md5", "md5_exploded", "xxhash64", "perm64"):
+    if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     rows_per_band = num_hashes // bands
-    if hash_fn == "perm64":
-        # narrowest plan: the whole signature in one Arrow kernel (see
-        # minhash_signature_hashes_udf) — no shingle explode, no groupBy
-        # exchange; the band-bucket join is the plan's ONLY shuffle
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature_hashes_udf(shingle_n, num_hashes)(
-                F.col(text_col)
-            ).alias("sig"),
-        )
-        return _band_join(sig, bands, rows_per_band, _bucket_xxhash64)
     if hash_fn == "md5":
         # same narrow single-kernel shape for the md5 oracle-twin family
         # (see minhash_signature_md5_udf — bit-identical signatures, no
@@ -340,43 +241,25 @@ def minhash_lsh_candidates(
                 *[F.min(F.col("sig")[i]) for i in range(num_hashes)]
             ).alias("sig")
         )
-        return _band_join(
-            sig, bands, rows_per_band, _bucket_md5, id_unique=True
-        )
+        return _band_join(sig, bands, rows_per_band, _bucket_md5)
     # Signatures via explode + aggregating mins rather than the inline
     # array expression: Catalyst does no common-subexpression elimination
     # through lambda functions, so inlining re-evaluates the shingle +
     # hash tree once per band reference (~32x). The groupBy computes each
     # hash exactly once and map-side combine reduces the shuffle to one
     # signature row per document — also the right shape at 10^12 rows.
-    # ("md5_exploded" keeps the SQL-shaped md5 plan runnable — the
-    # equivalence fixture the kernel path is tested against.)
-    shingler = (
-        word_shingle_hashes_udf(shingle_n)
-        if hash_fn == "xxhash64"
-        else word_shingles_udf(shingle_n)
-    )
     exploded = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(shingler(F.col(text_col))).alias("g"),
+        F.explode(word_shingle_hashes_udf(shingle_n)(F.col(text_col)))
+        .alias("g"),
     )
-    if hash_fn == "xxhash64":
-        # seed folded in as a leading literal column (xxhash64 chains its
-        # inputs, so (i, g) is a keyed hash of g); min over LONGs
-        seeded = [
-            F.min(F.xxhash64(F.lit(i), F.col("g")))
-            for i in range(num_hashes)
-        ]
-        bucket_of = _bucket_xxhash64
-    else:
-        seeded = [
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("g"))))
-            for i in range(num_hashes)
-        ]
-        bucket_of = _bucket_md5
-
+    # seed folded in as a leading literal column (xxhash64 chains its
+    # inputs, so (i, g) is a keyed hash of g); min over LONGs
+    seeded = [
+        F.min(F.xxhash64(F.lit(i), F.col("g"))) for i in range(num_hashes)
+    ]
     sig = exploded.groupBy("_id").agg(F.array(*seeded).alias("sig"))
-    return _band_join(sig, bands, rows_per_band, bucket_of, id_unique=True)
+    return _band_join(sig, bands, rows_per_band, _bucket_xxhash64)
 
 
 def _bucket_xxhash64(b: int, rows_per_band: int):
@@ -396,16 +279,15 @@ def _bucket_md5(b: int, rows_per_band: int):
 
 
 def _band_join(sig: DataFrame, bands: int, rows_per_band: int,
-               bucket_of, id_unique: bool = False) -> DataFrame:
+               bucket_of) -> DataFrame:
     """Explode a (_id, sig) frame into band buckets and self-join.
 
     Bucket keys are uniform by construction (hashes of signature
     slices), so the join shuffles without skew at any scale.
 
-    id_unique: promise that `sig` holds exactly one row per _id (the
-    groupBy-merged md5/xxhash64 families). Each id then has ONE bucket
-    per band, a pair meets at most once per band, and the trailing
-    distinct is a provable no-op — skipped to save its shuffle.
+    `sig` holds exactly one row per _id (both families merge rows per id
+    in a groupBy), so each id has ONE bucket per band and a pair meets
+    at most once per band: the output needs no distinct.
 
     The signature frame is cached (guide §5: reused AND expensive):
     both sides of the self-join reference it, and AQE does NOT reuse
@@ -438,12 +320,11 @@ def _band_join(sig: DataFrame, bands: int, rows_per_band: int,
     b = banded.select(
         F.col("_id").alias("id_b"), "band", "bucket"
     )
-    out = (
+    return (
         a.join(b, ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "band")
     )
-    return out if id_unique else out.distinct()
 
 
 def ngram_jaccard(
@@ -496,7 +377,6 @@ def near_dedup(
     num_hashes: int = 8,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    hash_fn: str = "md5",
     key_pad: int = 8,
 ) -> DataFrame:
     """End-to-end near-duplicate deduplication, one call.
@@ -512,13 +392,12 @@ def near_dedup(
 
     Every stage keeps its scale shape: LSH bucket join (no all-pairs),
     Jaccard only on candidates, large-star/small-star CC above the
-    driver cutoff. hash_fn="xxhash64" switches the candidate stage to
-    the allocation-free LONG kernel for production runs; "md5" keeps
-    the DuckDB-twin family the sf0.01 gate verifies.
+    driver cutoff. Candidates come from the md5 MinHash family, the
+    DuckDB-twin family the sf0.01 gate verifies.
     """
     cand = minhash_lsh_candidates(
         df, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
-        num_hashes=num_hashes, bands=bands, hash_fn=hash_fn,
+        num_hashes=num_hashes, bands=bands,
     ).select("id_a", "id_b").distinct()
     ver = ngram_jaccard(
         df, cand, text_col=text_col, id_col=id_col, shingle_n=shingle_n

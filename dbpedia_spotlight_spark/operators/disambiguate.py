@@ -181,14 +181,6 @@ def disambiguate(
     )
 
 
-def linked_mentions(
-    scored: DataFrame, best_k: int | None = None
-) -> DataFrame:
-    """rank-1 winners (or top-k per mention for the bestK API)."""
-    k = 1 if best_k is None else best_k
-    return scored.filter(F.col("rank") <= k)
-
-
 def resolve_all_mentions(
     mentions_with_key: DataFrame, winners: DataFrame
 ) -> DataFrame:

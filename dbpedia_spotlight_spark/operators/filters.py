@@ -172,5 +172,6 @@ def apply_result_filters(
     # the reference's final offset sort (AnnotationFilter.scala:85) is
     # per-document; a global orderBy would be a full shuffle sort at
     # corpus scale for no consumer — per-doc ordering is applied where a
-    # doc-level view is built (corpora.to_annotated_output's sort_array)
+    # doc-level view is built (output_formats.render_outputs sorts each
+    # document's occurrences by offset)
     return out

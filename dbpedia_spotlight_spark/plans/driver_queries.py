@@ -337,7 +337,7 @@ def _warm_kernels(spark: SparkSession) -> None:
         "vec_id long, embedding array<float>, label int",
     )
     brute_force_topk(emb, emb.filter(F.col("vec_id") < 4), k=3).count()
-    lsh_topk(emb, k=3, n_bits=6, bucket_method="udf", dim=64).count()
+    lsh_topk(emb, k=3, n_bits=6, dim=64).count()
 
 
 def warm_session(spark: SparkSession, sf_dir: str) -> None:
@@ -789,19 +789,17 @@ def q_dedup_embedding(spark, sf_dir):
 
 
 def q_dedup_embedding_lsh(spark, sf_dir):
-    """The banded sign-LSH near-dup SCALE path (what method='auto'
-    routes to at corpus size), with the expr bucket so the whole
-    algorithm — band codes, bucket join, distinct, exact verify — is
-    replicated in the DuckDB oracle over the same literal planes."""
+    """The banded sign-LSH near-dup SCALE path (what embedding_neardup
+    routes to at corpus size). The DuckDB oracle replicates the whole
+    algorithm — band codes, bucket join, distinct, exact verify — over
+    the same literal planes, so it hash-verifies the production Arrow
+    bucket kernel."""
     from ..operators.ann import embedding_neardup_approx
 
     return embedding_neardup_approx(
         _emb(spark, sf_dir), threshold=0.3,
         n_bands=_ND_BANDS, band_bits=_ND_BITS, seed=_LSH_SEED,
-        bucket_method="udf", dim=_EMB_DIM,
-        # the PRODUCTION Arrow-UDF bucket kernel; bit-identical to the
-        # expr twin (tested), so the DuckDB oracle (literal planes)
-        # hash-verifies the real path, not a SQL-shaped stand-in
+        dim=_EMB_DIM,
     ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
@@ -817,11 +815,9 @@ def q_ann_cosine_topk(spark, sf_dir):
 
 def q_ann_lsh_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    # production Arrow-UDF bucket (bit-identical to the expr twin the
-    # oracle inlines — hyperplane_bucket_expr docstring + parity test)
-    return lsh_topk(
-        emb, k=3, n_bits=6, bucket_method="udf", dim=_EMB_DIM
-    ).select(
+    # the oracle recomputes the Arrow kernel's buckets from the same
+    # literal planes (_lsh_bucket_sql)
+    return lsh_topk(emb, k=3, n_bits=6, dim=_EMB_DIM).select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
     )
 
@@ -1324,10 +1320,9 @@ _MINHASH_SIG = ", ".join(
     f"min(md5('{i}|' || g)) AS h{i}" for i in range(8)
 )
 
-# sign-LSH hyperplanes for the ann_lsh_topk gate: the SAME literal matrix
-# is compiled into the Spark column expression (hyperplane_bucket_expr)
-# and inlined below as DuckDB list literals. Embeddings are FLOAT[64] at
-# every sf (TESTDATA.md).
+# sign-LSH hyperplanes for the ann_lsh_topk gate: the SAME seeded matrix
+# the Spark bucket kernel broadcasts is inlined below as DuckDB list
+# literals. Embeddings are FLOAT[64] at every sf (TESTDATA.md).
 _EMB_DIM, _LSH_BITS, _LSH_SEED = 64, 6, 42
 
 
@@ -1346,8 +1341,8 @@ def _lsh_bucket_sql(vec: str) -> str:
 
 
 # banded sign-LSH near-dup gate: 4 bands x 4 bits over the same seeded
-# plane matrix the Spark expr path compiles (ann.embedding_neardup_approx
-# bucket_method="expr")
+# plane matrix ann.embedding_neardup_approx broadcasts to its band-code
+# kernel
 _ND_BANDS, _ND_BITS = 4, 4
 
 

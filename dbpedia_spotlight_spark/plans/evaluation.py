@@ -8,8 +8,6 @@ Spark recast of the reference's corpus evaluators:
     (gold vs predicted occurrence sets, membership by
     (doc, offset, sf) — SurfaceFormOccurrence.equals semantics)
   * prior-only baseline — eval/.../DBBaselineDisambiguator.scala:16-30
-  * pairwise precision/recall/F1 on labeled pairs at shared blocking
-    keys (BASELINE.json metric)
 """
 
 from __future__ import annotations
@@ -195,42 +193,3 @@ def prior_only_baseline(mention_candidates: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def pairwise_prf(clusters: DataFrame, eval_pairs: DataFrame) -> dict:
-    """Pairwise P/R/F1 on labeled pairs at shared blocking keys
-    (BASELINE.json metric). `clusters` = (mention_key, cluster_id)."""
-    ca = clusters.select(
-        F.col("mention_key").alias("mention_a"),
-        F.col("cluster_id").alias("cluster_a"),
-    )
-    cb = clusters.select(
-        F.col("mention_key").alias("mention_b"),
-        F.col("cluster_id").alias("cluster_b"),
-    )
-    joined = (
-        eval_pairs.join(ca, "mention_a", "left")
-        .join(cb, "mention_b", "left")
-        .withColumn(
-            "pred_same",
-            F.col("cluster_a").isNotNull()
-            & (F.col("cluster_a") == F.col("cluster_b")),
-        )
-    )
-    agg = joined.agg(
-        F.sum(
-            F.when(F.col("pred_same") & F.col("same_entity"), 1).otherwise(0)
-        ).alias("tp"),
-        F.sum(
-            F.when(F.col("pred_same") & ~F.col("same_entity"), 1).otherwise(0)
-        ).alias("fp"),
-        F.sum(
-            F.when(~F.col("pred_same") & F.col("same_entity"), 1).otherwise(0)
-        ).alias("fn"),
-    ).collect()[0]
-    tp, fp, fn = int(agg["tp"] or 0), int(agg["fp"] or 0), int(agg["fn"] or 0)
-    p = tp / (tp + fp) if tp + fp else 0.0
-    r = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
-    return {"tp": tp, "fp": fp, "fn": fn, "precision": p, "recall": r,
-            "f1": f1}

@@ -127,14 +127,3 @@ class CheckpointStore:
             compute(), stage, counters=counters, lineage=lineage,
             superstep=superstep,
         )
-
-    def invalidate_from(self, stage_prefix: str) -> None:
-        """Drop manifest entries whose names start with the prefix
-        (used when re-running an iterative stage with new inputs)."""
-        manifest = self.manifest()
-        manifest["stages"] = {
-            k: v
-            for k, v in manifest["stages"].items()
-            if not k.startswith(stage_prefix)
-        }
-        self._commit_manifest(manifest)

@@ -212,178 +212,6 @@ def read_predose(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# TAC-KBP entity linking
-# ---------------------------------------------------------------------------
-
-_KBP_NW_FOLDERS = {
-    "AFP_ENG": "2009/nw/afp_eng", "APW_ENG": "2009/nw/apw_eng",
-    "CNA_ENG": "2009/nw/cna_eng", "LTW_ENG": "2009/nw/ltw_eng",
-    "NYT_ENG": "2009/nw/nyt_eng", "REU_ENG": "2009/nw/reu_eng",
-    "XIN_ENG": "2009/nw/xin_eng",
-}
-_KBP_WB_FOLDERS = ("2009/wb", "2010/wb")
-
-
-def _kbp_queries(query_file: str) -> dict[str, tuple[str, str]]:
-    """query id -> (name, docid); tolerates the encoding="utf8" typo the
-    reference patches (KBPCorpus.scala:57-62)."""
-    import xml.etree.ElementTree as ET
-
-    with open(query_file, encoding="utf-8") as f:
-        content = f.read()
-    content = re.sub(r'(?i)encoding="utf8"', 'encoding="utf-8"', content)
-    root = ET.fromstring(content)
-    return {
-        q.get("id"): (q.findtext("name"), q.findtext("docid"))
-        for q in root.iter("query")
-    }
-
-
-def _kbp_knowledge_base(kb_dir: str) -> list[str]:
-    """Entity index -> wiki-encoded uri; gaps in the strictly-increasing
-    id sequence become empty uris (KBPCorpus.scala:71-95)."""
-    import os
-    import xml.etree.ElementTree as ET
-
-    uris: list[str] = []
-    last_id = 0
-    for fname in sorted(os.listdir(kb_dir)):
-        if not fname.endswith(".xml"):
-            continue
-        root = ET.parse(os.path.join(kb_dir, fname)).getroot()
-        for e in root.iter("entity"):
-            eid = int(e.get("id")[1:])
-            uris.extend([""] * (eid - last_id - 1))
-            last_id = eid
-            uris.append((e.get("wiki_title") or "").replace(" ", "_"))
-    return uris
-
-
-def _kbp_paragraphs(source_dir: str, doc_id: str) -> list[str]:
-    """Paragraph texts of one source document: <P> elements for
-    newswires, POST text split on blank lines for web blogs
-    (KBPCorpus.scala:146-167)."""
-    import os
-    import xml.etree.ElementTree as ET
-
-    folder_id = doc_id.split(".")[0]
-    for prefix, path in _KBP_NW_FOLDERS.items():
-        if folder_id.startswith(prefix):
-            full = os.path.join(
-                source_dir, path, folder_id[8:], doc_id + ".sgm"
-            )
-            root = ET.parse(full).getroot()
-            return [
-                "".join(p.itertext()).replace("\n", " ")
-                for p in root.iter("P")
-            ]
-    for path in _KBP_WB_FOLDERS:
-        full = os.path.join(source_dir, path, doc_id + ".sgm")
-        if os.path.exists(full):
-            root = ET.parse(full).getroot()
-            body = "".join(
-                "".join(p.itertext()) for p in root.iter("POST")
-            )
-            return [p.replace("\n", " ") for p in body.split("\n\n")]
-    return []
-
-
-def read_kbp(
-    spark: SparkSession,
-    query_file: str,
-    answer_file: str,
-    source_dir: str,
-    kb_dir: str,
-) -> tuple[DataFrame, DataFrame]:
-    """TAC-KBP entity-linking corpus (eval/.../corpus/KBPCorpus.scala):
-    per query, every source-document paragraph containing the query name
-    becomes one annotated paragraph (doc_id = <docid>-<paraIdx>) with a
-    single occurrence at indexOf(name); NIL answers are skipped; answer
-    entity ids resolve through the knowledge base to wiki uris."""
-    queries = _kbp_queries(query_file)
-    with open(answer_file, encoding="utf-8") as f:
-        answers = dict(
-            line.split("\t")[:2] for line in f.read().splitlines() if line
-        )
-    kb = _kbp_knowledge_base(kb_dir)
-
-    doc_rows, occ_rows = [], []
-    for qid, (name, docid) in sorted(queries.items()):
-        answer = answers.get(qid, "NIL")
-        if answer.startswith("NIL"):
-            continue
-        uri = kb[int(answer[1:]) - 1]  # KB ids are 1-based
-        for pidx, para in enumerate(_kbp_paragraphs(source_dir, docid)):
-            off = para.find(name)
-            if off < 0:
-                continue
-            para_id = f"{docid}-{pidx}"
-            doc_rows.append((para_id, para))
-            occ_rows.append(
-                (f"{para_id}-{off}", para_id, uri, name, off, 1.0)
-            )
-    documents = spark.createDataFrame(
-        doc_rows or [("", "")], DOC_SCHEMA
-    ).filter("doc_id <> ''").dropDuplicates(["doc_id"])
-    occurrences = spark.createDataFrame(
-        occ_rows or [("", "", "", "", 0, 0.0)], OCC_SCHEMA
-    ).filter("doc_id <> ''")
-    return documents, occurrences
-
-
-def small_context_occurrences(
-    documents: DataFrame, occurrences: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """SmallContextOccurrencesCorpus (eval/.../corpus/
-    SmallContextOccurrencesCorpus.scala:15-32): one paragraph per
-    occurrence, context narrowed to the last 10 words left of the
-    mention + the first 11 space-separated words from the mention on;
-    paragraph id = <doc_id>-<uri>. Pure column expressions. The
-    reference keeps the occurrence's ORIGINAL offset (stale relative to
-    the narrowed text — reproduced as-is)."""
-    from pyspark.sql import functions as F
-
-    joined = occurrences.join(
-        documents.select(
-            F.col("doc_id"), F.col("text").alias("_text")
-        ),
-        "doc_id",
-    )
-    left = F.substring(F.col("_text"), 1, F.col("offset"))
-    right = F.substring(
-        F.col("_text"), F.col("offset") + 1, F.length("_text")
-    )
-    # exact reference concatenation: always one " " between the parts
-    # (leading space when the mention starts the text). Scala's
-    # split(" ") drops TRAILING empty strings (Spark keeps them), so the
-    # left side strips trailing spaces before splitting.
-    small = F.concat(
-        F.array_join(
-            F.slice(
-                F.split(F.regexp_replace(left, r" +$", ""), " "), -10, 10
-            ),
-            " ",
-        ),
-        F.lit(" "),
-        F.array_join(F.slice(F.split(right, " ", 12), 1, 11), " "),
-    )
-    out = joined.select(
-        F.concat_ws("-", "doc_id", "uri").alias("small_doc_id"),
-        small.alias("text"),
-        "occ_id", "uri", "sf", "offset", "confidence",
-    ).cache()
-    docs = out.select(
-        F.col("small_doc_id").alias("doc_id"), "text"
-    ).dropDuplicates(["doc_id"])
-    occs = out.select(
-        "occ_id",
-        F.col("small_doc_id").alias("doc_id"),
-        "uri", "sf", "offset", "confidence",
-    )
-    return docs, occs
-
-
-# ---------------------------------------------------------------------------
 # CSAW
 # ---------------------------------------------------------------------------
 

@@ -151,15 +151,6 @@ def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def wiki_dump_occurrences(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """XML dump file -> (documents, occurrences); the full
-    WikiOccurrenceSource path: dump scan + markup strip + paragraph
-    split + link occurrence extraction."""
-    return wiki_page_occurrences(read_wiki_dump(spark, path))
-
-
 def read_wikipedia_heldout(
     spark: SparkSession,
     path: str,

@@ -9,8 +9,9 @@ and _wait_for_quiet must honor both thresholds and its deadline.
 """
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import bench  # noqa: E402
 

@@ -4,18 +4,20 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 TINY_CORPUS = "/root/reference/live/src/main/resources/tiny.corpus.tsv"
-ENV = dict(os.environ, PYTHONPATH="/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+ENV = dict(os.environ, PYTHONPATH=str(ROOT))
 
 
 def _run(args, timeout=420):
     r = subprocess.run(
         [sys.executable, "-m", "dbpedia_spotlight_spark.cli", *args,
          "--master", "local[2]", "--shuffle-partitions", "4"],
-        capture_output=True, text=True, env=ENV, cwd="/root/repo",
+        capture_output=True, text=True, env=ENV, cwd=ROOT,
         timeout=timeout,
     )
     assert r.returncode == 0, r.stderr[-2000:]

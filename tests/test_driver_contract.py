@@ -12,9 +12,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 import importlib.util
 import sys
+from pathlib import Path
 
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py"
+    "__spark_entry__",
+    Path(__file__).resolve().parent.parent / "__spark_entry__.py",
 )
 entry_mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(entry_mod)

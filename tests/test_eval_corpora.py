@@ -364,13 +364,13 @@ def test_read_wiki_dump_vs_etree_twin(spark, tmp_path):
 
 
 def test_wiki_dump_occurrences_end_to_end(spark, tmp_path):
-    from dbpedia_spotlight_spark.sources.wiki_corpus import (
-        wiki_dump_occurrences,
-    )
+    """Dump scan + markup strip + paragraph split + link occurrences, as
+    `cli ingest-wiki --input-format xml-dump` composes them."""
+    from dbpedia_spotlight_spark.sources.wiki_corpus import read_wiki_dump
 
     p = tmp_path / "dump.xml"
     p.write_text(_DUMP_XML)
-    docs, occs = wiki_dump_occurrences(spark, str(p))
+    docs, occs = wiki_page_occurrences(read_wiki_dump(spark, str(p)))
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     got = {(r["doc_id"], r["uri"], r["sf"]) for r in occs.collect()}
     assert ("Alpha_Centauri-p2", "Beta", "Beta") in got
@@ -509,99 +509,6 @@ def test_read_predose(spark, tmp_path):
     assert (rows[0]["uri"], rows[0]["sf"], rows[0]["offset"]) == (
         "Oxycodone", "oxycodone", 17
     )
-
-
-def test_read_kbp(spark, tmp_path):
-    from dbpedia_spotlight_spark.sources.eval_corpora import read_kbp
-
-    base = tmp_path / "kbp"
-    # knowledge base: two files, an id gap (E3 missing is implied by E4)
-    kb = base / "kb"
-    kb.mkdir(parents=True)
-    (kb / "a.xml").write_text(
-        '<knowledge_base>'
-        '<entity id="E1" wiki_title="Barack Obama"/>'
-        '<entity id="E2" wiki_title="Berlin"/>'
-        "</knowledge_base>"
-    )
-    (kb / "b.xml").write_text(
-        '<knowledge_base><entity id="E4" wiki_title="Paris"/>'
-        "</knowledge_base>"
-    )
-    # newswire source doc APW_ENG_20090101.0001 under 2009/nw/apw_eng/20090101
-    nw = base / "src" / "2009" / "nw" / "apw_eng" / "20090101"
-    nw.mkdir(parents=True)
-    (nw / "APW_ENG_20090101.0001.sgm").write_text(
-        "<DOC><BODY><TEXT>"
-        "<P>Obama spoke in Berlin\ntoday.</P>"
-        "<P>Nothing relevant here.</P>"
-        "<P>Later, Obama left.</P>"
-        "</TEXT></BODY></DOC>"
-    )
-    # web blog doc under 2009/wb
-    wb = base / "src" / "2009" / "wb"
-    wb.mkdir(parents=True)
-    (wb / "blog_0001.sgm").write_text(
-        "<DOC><POST>I love Paris in spring.\n\nParis again!</POST></DOC>"
-    )
-    q = base / "queries.xml"
-    q.write_text(
-        '<?xml version="1.0" encoding="UTF8"?>\n'
-        "<kbpentlink>"
-        '<query id="Q1"><name>Obama</name>'
-        "<docid>APW_ENG_20090101.0001</docid></query>"
-        '<query id="Q2"><name>Paris</name><docid>blog_0001</docid></query>'
-        '<query id="Q3"><name>Ghost</name>'
-        "<docid>APW_ENG_20090101.0001</docid></query>"
-        "</kbpentlink>"
-    )
-    a = base / "answers.tab"
-    a.write_text("Q1\tE1\nQ2\tE4\nQ3\tNIL001\n")
-
-    docs, occs = read_kbp(
-        spark, str(q), str(a), str(base / "src"), str(kb)
-    )
-    got = {
-        (r["doc_id"], r["uri"], r["sf"], r["offset"])
-        for r in occs.collect()
-    }
-    # Obama appears in paragraphs 0 and 2 of the newswire; newline -> space
-    assert ("APW_ENG_20090101.0001-0", "Barack_Obama", "Obama", 0) in got
-    assert ("APW_ENG_20090101.0001-2", "Barack_Obama", "Obama", 7) in got
-    # blog paragraphs split on blank lines; KB id gap resolved (E4->Paris)
-    assert ("blog_0001-0", "Paris", "Paris", 7) in got
-    assert ("blog_0001-1", "Paris", "Paris", 0) in got
-    # NIL answer skipped
-    assert not any(u == "" for _d, u, _s, _o in got)
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert texts["APW_ENG_20090101.0001-0"] == "Obama spoke in Berlin today."
-
-
-def test_small_context_occurrences(spark):
-    from dbpedia_spotlight_spark.sources.eval_corpora import (
-        small_context_occurrences,
-    )
-
-    text = ("w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 Berlin x1 x2 x3 x4 x5"
-            " x6 x7 x8 x9 x10 x11 x12 x13")
-    off = text.index("Berlin")
-    docs = spark.createDataFrame([("d0", text)], "doc_id string, text string")
-    occs = spark.createDataFrame(
-        [("d0-0", "d0", "Berlin", "Berlin", off, 1.0)],
-        "occ_id string, doc_id string, uri string, sf string,"
-        " offset int, confidence double",
-    )
-    sdocs, soccs = small_context_occurrences(docs, occs)
-    row = sdocs.collect()[0]
-    assert row["doc_id"] == "d0-Berlin"
-    # last 10 left words (Scala split drops the trailing empty) +
-    # mention-side first 11 space-separated words
-    assert row["text"] == (
-        "w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 "
-        "Berlin x1 x2 x3 x4 x5 x6 x7 x8 x9 x10"
-    )
-    srow = soccs.collect()[0]
-    assert srow["uri"] == "Berlin" and srow["offset"] == off
 
 
 def test_evaluate_corpus_on_milne_witten_format(spark, fx, fixture_dir):

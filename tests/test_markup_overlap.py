@@ -1,12 +1,10 @@
-"""Wiki-markup stripping, URI cleanup, sf-source merge, overlap resolution."""
+"""Wiki-markup stripping, URI cleanup, overlap resolution."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.functions.markup import (
     clean_uri_expr,
-    is_good_surface_form_expr,
-    merge_surface_form_sources,
     split_paragraphs_expr,
     strip_wiki_markup_expr,
     wiki_link_text_expr,
@@ -53,24 +51,6 @@ def test_clean_uri(spark):
     assert _one(spark, clean_uri_expr,
                 "http://dbpedia.org/resource/Berlin#history") == "Berlin"
     assert _one(spark, clean_uri_expr, "/New York") == "New_York"
-
-
-def test_good_surface_form(spark):
-    df = spark.createDataFrame(
-        [("Berlin",), ("123",), ("the of",), ("ok\\n",), ("x" * 60,)],
-        "sf string",
-    )
-    kept = df.filter(
-        is_good_surface_form_expr(F.col("sf"), ["the", "of"])
-    )
-    assert {r["sf"] for r in kept.collect()} == {"Berlin"}
-
-
-def test_merge_surface_form_sources(spark):
-    titles = spark.createDataFrame([("Berlin",), ("123",)], "sf string")
-    redirects = spark.createDataFrame([("Berlin",), ("Potsdam",)], "sf string")
-    out = merge_surface_form_sources(titles, redirects, stopwords=["the"])
-    assert {r["sf"] for r in out.collect()} == {"Berlin", "Potsdam"}
 
 
 def test_drop_overlapping_spots(spark):

@@ -25,9 +25,12 @@ from dbpedia_spotlight_spark.operators.ann import (
 )
 from dbpedia_spotlight_spark.operators.cc import _union_find_arrow
 from dbpedia_spotlight_spark.operators.dedup import (
+    _band_join,
+    _bucket_md5,
     minhash_lsh_candidates,
     simhash64_udf,
     simhash_dedup,
+    word_shingles_udf,
 )
 
 
@@ -226,12 +229,27 @@ def test_simhash_kernel_size_class_split(spark):
     assert clones.count() == 100 * 99 / 2
 
 
+def _exploded_md5_candidates(docs, shingle_n, num_hashes, bands):
+    """The SQL-shaped md5 MinHash plan: explode shingles to rows, then
+    groupBy(id) with min(md5('i|' || shingle)) per seed — the shape the
+    DuckDB oracle writes."""
+    exploded = docs.select(
+        F.col("doc_id").alias("_id"),
+        F.explode(word_shingles_udf(shingle_n)(F.col("text"))).alias("g"),
+    )
+    sig = exploded.groupBy("_id").agg(F.array(*[
+        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("g"))))
+        for i in range(num_hashes)
+    ]).alias("sig"))
+    return _band_join(sig, bands, num_hashes // bands, _bucket_md5)
+
+
 def test_minhash_md5_kernel_matches_exploded_twin(spark, dup_docs):
     """Single-kernel md5 signatures (+ per-id merge) == the exploded
     groupBy(min(md5)) plan, on the id-aliasing corpus (the groupBy
     merged shingle sets of rows sharing an id)."""
     kw = dict(shingle_n=3, num_hashes=8, bands=4)
-    twin = minhash_lsh_candidates(dup_docs, hash_fn="md5_exploded", **kw)
+    twin = _exploded_md5_candidates(dup_docs, **kw)
     got = minhash_lsh_candidates(dup_docs, hash_fn="md5", **kw)
     assert _rows(got) == _rows(twin)
 

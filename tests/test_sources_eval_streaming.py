@@ -1,12 +1,12 @@
-"""Selectors, corpus sources round-trips, eval harness, CLI."""
+"""Selectors, eval harness, CLI."""
 
 import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.operators.selectors import (
     chained_selector,
@@ -15,13 +15,6 @@ from dbpedia_spotlight_spark.operators.selectors import (
     whitelist_selector,
 )
 from dbpedia_spotlight_spark.plans import evaluation as E
-from dbpedia_spotlight_spark.sources.corpora import (
-    occurrences_to_paragraphs,
-    read_nt_pairs,
-    read_occurrence_tsv,
-    read_sf_counts_tsv,
-    write_occurrence_tsv,
-)
 
 
 def test_selectors(spark):
@@ -39,50 +32,6 @@ def test_selectors(spark):
     assert {r["sf"] for r in out.collect()} == {"Berlin", "Paris"}
     out2 = whitelist_selector(mentions, allow)
     assert {r["sf"] for r in out2.collect()} == {"Berlin", "the"}
-
-
-def test_occurrence_tsv_roundtrip(spark, tmp_path):
-    occs = spark.createDataFrame(
-        [
-            ("o1", "Berlin", "Berlin", "we saw Berlin today", 7),
-            ("o2", "Paris", "Paris", "Paris is lovely", 0),
-            ("o3", "Berlin", "berlin", "we saw Berlin today", 7),
-        ],
-        "occ_id string, uri string, sf string, text string, offset int",
-    )
-    path = str(tmp_path / "occs.tsv")
-    write_occurrence_tsv(occs, path)
-    back = read_occurrence_tsv(spark, path)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, occs.collect()))
-    paras = occurrences_to_paragraphs(back)
-    assert paras.count() == 2
-    row = paras.filter(F.col("text") == "we saw Berlin today").collect()[0]
-    assert len(row["occurrences"]) == 2
-
-
-def test_nt_reader(spark, tmp_path):
-    nt = tmp_path / "redirects.nt"
-    nt.write_text(
-        "<http://dbpedia.org/resource/Old_Berlin> "
-        "<http://dbpedia.org/ontology/wikiPageRedirects> "
-        "<http://dbpedia.org/resource/Berlin> .\n"
-        "# comment line\n"
-    )
-    rows = read_nt_pairs(spark, str(nt)).collect()
-    assert [(r["src_uri"], r["dst_uri"]) for r in rows] == [
-        ("Old_Berlin", "Berlin")
-    ]
-
-
-def test_sf_counts_reader(spark, tmp_path):
-    f = tmp_path / "sfAndTotalCounts.tsv"
-    f.write_text("Berlin\t10\t20\nberlin\t-1\t5\nParis\t3\t\n")
-    sf, lower = read_sf_counts_tsv(spark, str(f))
-    got = {r["sf"]: (r["annotated_count"], r["total_count"]) for r in sf.collect()}
-    assert got["Berlin"] == (10, 20)
-    assert got["Paris"][0] == 3
-    low = {r["sf_lower"]: r["lowercase_count"] for r in lower.collect()}
-    assert low == {"berlin": 5}
 
 
 # ---------------------------------------------------------------------------
@@ -117,34 +66,20 @@ def test_spotting_pr_and_disambiguation_metrics(spark):
     assert m["not_found_rate"] == 0.5
 
 
-def test_pairwise_prf(spark):
-    clusters = spark.createDataFrame(
-        [("a", "c1"), ("b", "c1"), ("c", "c2")],
-        "mention_key string, cluster_id string",
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b", "k", True), ("a", "c", "k", True), ("b", "c", "k", False)],
-        "mention_a string, mention_b string, block_key string,"
-        " same_entity boolean",
-    )
-    m = E.pairwise_prf(clusters, pairs)
-    assert m["tp"] == 1 and m["fn"] == 1 and m["fp"] == 0
-    assert m["f1"] == pytest.approx(2 / 3)
-
-
 # ---------------------------------------------------------------------------
 
 
 def test_cli_end_to_end(fixture_dir, tmp_path):
     """model-build then resolve via the packaged CLI (subprocess, the real
     spark-submit surface minus the cluster)."""
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    root = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=str(root))
     model_dir = str(tmp_path / "model")
     r = subprocess.run(
         [sys.executable, "-m", "dbpedia_spotlight_spark.cli", "model-build",
          "--fixture-dir", fixture_dir, "--output", model_dir,
          "--master", "local[2]", "--shuffle-partitions", "4"],
-        capture_output=True, text=True, env=env, cwd="/root/repo",
+        capture_output=True, text=True, env=env, cwd=root,
         timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -157,7 +92,7 @@ def test_cli_end_to_end(fixture_dir, tmp_path):
          "--model-dir", model_dir, "--output", out,
          "--checkpoint-dir", str(tmp_path / "ckpt"),
          "--master", "local[2]", "--shuffle-partitions", "4"],
-        capture_output=True, text=True, env=env, cwd="/root/repo",
+        capture_output=True, text=True, env=env, cwd=root,
         timeout=600,
     )
     assert r2.returncode == 0, r2.stderr[-2000:]
@@ -172,7 +107,7 @@ def test_cli_end_to_end(fixture_dir, tmp_path):
          "--model-dir", model_dir, "--output", out_xml,
          "--spotter", "fsa", "--format", "xml",
          "--master", "local[2]", "--shuffle-partitions", "4"],
-        capture_output=True, text=True, env=env, cwd="/root/repo",
+        capture_output=True, text=True, env=env, cwd=root,
         timeout=600,
     )
     assert r3.returncode == 0, r3.stderr[-2000:]

@@ -7,6 +7,7 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -15,7 +16,7 @@ SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 @pytest.fixture(scope="module")
 def fixture_dir(tmp_path_factory):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from dbpedia_spotlight_spark.fixtures.generator import (
         FixtureConfig,
         generate,

@@ -1,5 +1,4 @@
-"""DBSpotter spot scoring, context narrowing, type filter e2e, Wortschatz
-reader, annotated output."""
+"""DBSpotter spot scoring, context narrowing, type filter e2e."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,10 +9,6 @@ from dbpedia_spotlight_spark.operators.spot_scoring import (
     spot_score_filter,
 )
 from dbpedia_spotlight_spark.operators.filters import type_filter
-from dbpedia_spotlight_spark.sources.corpora import (
-    read_wortschatz_words,
-    to_annotated_output,
-)
 
 
 def test_spot_score_filter_no_weights(spark):
@@ -103,26 +98,3 @@ def test_type_filter_e2e(spark, fixture_dir, fx):
         all_rows, whitelist=("DBpedia:Person",), keep_untyped=True
     )
     assert typed_or_unknown.count() >= n_typed
-
-
-def test_wortschatz_reader(spark, tmp_path):
-    f = tmp_path / "words.tsv"
-    f.write_text("1\tthe\t5000\n2\tof\t4000\n3\tzorvel\t3\n")
-    words = read_wortschatz_words(spark, str(f), min_count=100)
-    assert {r["word"] for r in words.collect()} == {"the", "of"}
-
-
-def test_annotated_output(spark):
-    resolved = spark.createDataFrame(
-        [
-            ("d1:5", "d1", 5, "Berlin", "Berlin", 0.9, -1.0),
-            ("d1:0", "d1", 0, "Paris", "Paris", 0.8, 0.5),
-            ("d2:0", "d2", 0, "x", None, None, None),
-        ],
-        "mention_key string, doc_id string, begin int, sf string,"
-        " uri string, final_score double, pct_second_rank double",
-    )
-    out = {r["doc_id"]: r["Resources"] for r in
-           to_annotated_output(resolved).collect()}
-    assert [x["URI"] for x in out["d1"]] == ["Paris", "Berlin"]  # offset order
-    assert "d2" not in out  # NIL-only docs drop out

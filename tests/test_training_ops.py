@@ -45,26 +45,23 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert ("d1", "d4") not in pairs
 
 
-@pytest.mark.parametrize("fn", ["xxhash64", "perm64"])
-def test_minhash_scale_paths(docs, fn):
-    # the LONG-typed production families: same LSH guarantees, no hex
-    # strings in the hot loop (GC-bound at 8+ threads otherwise);
-    # "perm64" additionally computes the signature in one Arrow kernel
-    # (no explode, no groupBy exchange)
+def test_minhash_scale_paths(docs):
+    # the LONG-typed family: same LSH guarantees, no hex strings in the
+    # hot loop (GC-bound at 8+ threads otherwise)
     cand = minhash_lsh_candidates(docs, shingle_n=2, num_hashes=16,
-                                  bands=8, hash_fn=fn)
+                                  bands=8, hash_fn="xxhash64")
     pairs = {(r["id_a"], r["id_b"]) for r in cand.collect()}
     assert ("d1", "d2") in pairs          # identical docs always collide
     assert ("d1", "d3") in pairs          # near dup collides in >=1 band
     assert ("d1", "d4") not in pairs
     # deterministic: a second run yields the identical candidate set
     cand2 = minhash_lsh_candidates(docs, shingle_n=2, num_hashes=16,
-                                   bands=8, hash_fn=fn)
+                                   bands=8, hash_fn="xxhash64")
     assert pairs == {(r["id_a"], r["id_b"]) for r in cand2.collect()}
 
 
 def test_minhash_family_recall_parity(spark):
-    # the three hash families are different permutation samples of the
+    # the two hash families are different permutation samples of the
     # SAME banded-LSH design point, so recall over a corpus with known
     # near-dups must match (docstring claim: "recall at the design point
     # is equal"). 30 planted pairs at ~93% token overlap; 4 bands of 4
@@ -84,7 +81,7 @@ def test_minhash_family_recall_parity(spark):
     corpus = spark.createDataFrame(rows, "doc_id string, text string")
     truth = {(f"a{i:02d}", f"b{i:02d}") for i in range(30)}
     recalls = {}
-    for fn in ("md5", "xxhash64", "perm64"):
+    for fn in ("md5", "xxhash64"):
         cand = minhash_lsh_candidates(corpus, shingle_n=3, num_hashes=16,
                                       bands=4, hash_fn=fn)
         pairs = {(r["id_a"], r["id_b"]) for r in cand.collect()}
@@ -112,20 +109,18 @@ def test_ngram_jaccard_values(spark, docs):
     assert got[("d1", "d5")] == 0.0
 
 
-@pytest.mark.parametrize("fn", ["md5", "xxhash64", "perm64"])
-def test_near_dedup_composition(docs, fn):
+def test_near_dedup_composition(docs):
     # d1=d2 exact, d3 near (1 of 9 words differs); d4/d5 unrelated.
     # threshold 0.3: trigram jaccard(d1,d3) = 4/10 = 0.4 passes.
     # bands=16 (1 row/band) so candidate recall at J=0.4 is
-    # 1-(1-J)^16 ~ 0.9997 for EVERY permutation sample — at the old
-    # 2-rows/band point it was ~0.75 and whether a family's fixed seed
-    # hit was luck (perm64's missed). Unrelated docs (disjoint
-    # shingles) still never collide, and the Jaccard stage verifies
-    # every candidate, so the looser stage-1 point changes nothing else.
+    # 1-(1-J)^16 ~ 0.9997 for any permutation sample — at a 2-rows/band
+    # point it is ~0.75 and whether the fixed seed hits is luck.
+    # Unrelated docs (disjoint shingles) still never collide, and the
+    # Jaccard stage verifies every candidate.
     out = {
         r["doc_id"]: r
         for r in near_dedup(docs, shingle_n=3, num_hashes=16, bands=16,
-                            jaccard_threshold=0.3, hash_fn=fn).collect()
+                            jaccard_threshold=0.3).collect()
     }
     assert len(out) == 5                      # one row per input doc
     assert out["d1"]["dup_group"] == out["d2"]["dup_group"] \
@@ -229,10 +224,13 @@ def test_embedding_neardup_approx_recall_vs_exact(clustered_vectors):
 
 
 def test_embedding_neardup_auto_routes_by_size(clustered_vectors):
-    """method='auto' must pick the exact crossJoin under the gate and the
+    """embedding_neardup must pick the exact kernel under the gate and the
     bucketed join above it — plan-asserted (no cartesian product on the
     oversized input)."""
-    from dbpedia_spotlight_spark.operators.ann import embedding_neardup
+    from dbpedia_spotlight_spark.operators.ann import (
+        embedding_neardup,
+        embedding_neardup_exact,
+    )
 
     small_plan = embedding_neardup(
         clustered_vectors, threshold=0.95, exact_max_rows=10_000
@@ -250,8 +248,8 @@ def test_embedding_neardup_auto_routes_by_size(clustered_vectors):
     # and the routed result is still (a subset of) the exact pair set
     exact = {
         (r["id_a"], r["id_b"])
-        for r in embedding_neardup(
-            clustered_vectors, threshold=0.95, method="exact"
+        for r in embedding_neardup_exact(
+            clustered_vectors, threshold=0.95
         ).collect()
     }
     routed = {
@@ -261,29 +259,6 @@ def test_embedding_neardup_auto_routes_by_size(clustered_vectors):
         ).collect()
     }
     assert routed <= exact and len(routed) / len(exact) >= 0.95
-
-
-def test_embedding_neardup_expr_equals_udf(clustered_vectors):
-    """The expr bucket (SQL-expressible, oracle-gated) must produce the
-    same pair set as the Arrow-UDF bucket over the same planes."""
-    from dbpedia_spotlight_spark.operators.ann import (
-        embedding_neardup_approx,
-    )
-
-    kw = dict(threshold=0.95, n_bands=4, band_bits=4, seed=42)
-    udf_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_neardup_approx(
-            clustered_vectors, bucket_method="udf", **kw
-        ).collect()
-    }
-    expr_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_neardup_approx(
-            clustered_vectors, bucket_method="expr", **kw
-        ).collect()
-    }
-    assert udf_pairs == expr_pairs and udf_pairs
 
 
 def test_lsh_topk_agrees_with_brute_force_mostly(vectors):
