@@ -4,15 +4,15 @@ A from-scratch record-linkage pipeline with the query/data-processing
 capabilities of DBpedia Spotlight (reference: dbpedia-spotlight/dbpedia-spotlight
 v0.7.1), re-expressed Spark-first:
 
-    documents --(broadcast Aho-Corasick in Arrow pandas UDF)--> mentions
+    documents --(broadcast FSA dictionary, mapInPandas)--> mentions
              --(equi-joins on stats tables)--> mention_candidates
-             --(log-domain generative context scoring, pure column math)--> scored
-             --(window rank + NIL gate + softmax)--> linked_mentions
-             --(blocking keys + salted self-join + pairwise JW/TF-ICF)--> edges
-             --(large-star/small-star connected components)--> clusters
+             --(log-domain generative context scoring, pure column math)--> ctx_scores
+             --(window rank + NIL gate + softmax)--> scored
+             --(result filters + coreference)--> resolved
+             --(clusters_by_uri: one cluster per linked URI)--> clusters
 
-Everything is DataFrame-declarative; Python appears only in Arrow-batched
-pandas UDFs (the automaton scan and tokenizer). Checkpoints go to Iceberg
+Everything is DataFrame-declarative; on `resolve` Python appears only in
+the spotter's Arrow-batched mapInPandas scan. Checkpoints go to Iceberg
 when an Iceberg catalog is configured, else to parquet with an atomic
 manifest (sandbox fallback).
 """

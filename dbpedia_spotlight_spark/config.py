@@ -9,7 +9,7 @@ fuzzy top-5 (db/DBCandidateSearcher.scala:19).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -60,7 +60,6 @@ class PipelineParams:
     # --- result filters (REST-facing knobs) ---
     confidence: float = 0.0
     support: int = 0
-    best_k: int = 20
     type_whitelist: tuple[str, ...] = ()
     type_blacklist: tuple[str, ...] = ()
     uri_whitelist: tuple[str, ...] = ()   # SPARQL-filter stand-in (URI list param)

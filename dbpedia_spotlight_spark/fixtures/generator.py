@@ -30,7 +30,6 @@ from dataclasses import dataclass, field
 import pandas as pd
 
 from ..functions.normalize import sf_normalize_py
-from ..functions.tokenize import tokenize_py
 
 STOPWORDS = ["the", "an", "a", "of", "in"]
 

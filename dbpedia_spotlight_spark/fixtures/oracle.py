@@ -31,7 +31,6 @@ import math
 import re
 from dataclasses import dataclass
 
-from ..functions.normalize import sf_normalize_py
 from ..functions.similarity import edit_distance_score_py
 from ..functions.tokenize import tokenize_py
 from .stats import StatsTables

@@ -17,7 +17,7 @@ Shared semantics (applied identically on both sides):
 
 from __future__ import annotations
 
-from collections import Counter, defaultdict
+from collections import Counter
 from dataclasses import dataclass
 
 import pandas as pd
@@ -25,7 +25,7 @@ import pandas as pd
 from ..functions.tokenize import tokenize_py
 from ..functions.normalize import sf_normalize_py
 from ..operators.redirects import close_redirects
-from .generator import Fixture, MIN_SF_COUNT, MIN_TOKEN_COUNT, STOPWORDS
+from .generator import Fixture, MIN_SF_COUNT, MIN_TOKEN_COUNT
 
 
 @dataclass

@@ -52,13 +52,10 @@ def generate_candidates(
     cand_map = model.candidate_map
     resources = model.resources
 
-    sf_dim = model.maybe_broadcast(
-        sf_stats.select(
-            F.col("sf").alias("cand_sf"),
-            F.lower(F.col("sf")).alias("cand_sf_lower"),
-            "sf_id", "annotated_count", "total_count", "lowercase_count",
-        ),
-        size_of="surface_form_stats",
+    sf_dim = sf_stats.select(
+        F.col("sf").alias("cand_sf"),
+        F.lower(F.col("sf")).alias("cand_sf_lower"),
+        "sf_id", "annotated_count", "total_count", "lowercase_count",
     )
 
     # --- exact lookup (case-sensitive string equality) ---
@@ -95,16 +92,11 @@ def generate_candidates(
 
     # --- candidate explosion + resource stats ---
     out = (
-        sf_matched.join(
-            model.maybe_broadcast(cand_map, "candidate_map"), "sf_id"
-        )
+        sf_matched.join(cand_map, "sf_id")
         .join(
-            model.maybe_broadcast(
-                resources.select(
-                    "res_id", "uri", "support", "types",
-                    F.col("prior").alias("res_prior"),
-                ),
-                "resources",
+            resources.select(
+                "res_id", "uri", "support", "types",
+                F.col("prior").alias("res_prior"),
             ),
             "res_id",
         )

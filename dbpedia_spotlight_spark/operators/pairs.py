@@ -60,13 +60,8 @@ def doc_tfidf_vectors(
     ).groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     icf = token_icf(model)
     vec = (
-        bag.join(
-            model.maybe_broadcast(
-                model.tokens.select("token", "token_id"), "tokens"
-            ),
-            "token",
-        )
-        .join(model.maybe_broadcast(icf, "tokens"), "token_id")
+        bag.join(model.tokens.select("token", "token_id"), "token")
+        .join(icf, "token_id")
         .select("doc_id", "token_id", (F.col("tf") * F.col("icf")).alias("w"))
     )
     norms = vec.groupBy("doc_id").agg(

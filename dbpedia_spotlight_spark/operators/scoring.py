@@ -49,11 +49,7 @@ def doc_token_stats(
         *keys, F.explode("query_tokens").alias("token")
     )
     return exploded.join(
-        model.maybe_broadcast(
-            model.tokens.select("token", "token_id", "count"), "tokens"
-        ),
-        "token",
-        "left",
+        model.tokens.select("token", "token_id", "count"), "token", "left"
     ).select(
         *keys,
         "token",
@@ -98,21 +94,13 @@ def context_scores(
         F.sum("count").alias("res_token_total")
     )
 
-    # size-gated broadcasts: a real Wikipedia context table is ~10^9 rows
-    # and must NOT be force-broadcast; past the threshold AQE picks the
-    # join strategy (res_totals is bounded by the resources dimension)
+    # a real Wikipedia context table is ~10^9 rows and must not be
+    # force-broadcast: the planner and AQE pick each join strategy from
+    # the tables' byte sizes
     pairs = (
         tok.join(doc_res, keys)
-        .join(
-            model.maybe_broadcast(model.context_counts, "context_counts"),
-            ["res_id", "token_id"],
-            "left",
-        )
-        .join(
-            model.maybe_broadcast(res_totals, "resources"),
-            "res_id",
-            "left",
-        )
+        .join(model.context_counts, ["res_id", "token_id"], "left")
+        .join(res_totals, "res_id", "left")
     )
 
     lm_term = F.lit(ln_1mlam) + F.col("p_lm")

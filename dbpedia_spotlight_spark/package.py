@@ -14,7 +14,6 @@ dist/cli.py (the driver script), so a cluster run is:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 import zipfile
 

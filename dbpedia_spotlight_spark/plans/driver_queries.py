@@ -16,8 +16,6 @@ driver's data.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -251,8 +249,10 @@ def _ctx_model(spark: SparkSession, sf_dir: str):
     src_ids = dense_ids(
         docs.select(F.col("source")).distinct(), "source", "res_id"
     )
-    # cached: referenced by maybe_broadcast's size count AND the scoring
-    # join — uncached, each reference re-derives the whole aggregation
+    # cached: each is referenced several times (vocab by the count join,
+    # the totals and the tokens table; src_ids by the count join, the
+    # resources table and the caller) — uncached, each reference
+    # re-derives the whole aggregation
     vocab = vocab.cache()
     src_ids = src_ids.cache()
     ctx_counts = (
@@ -659,13 +659,10 @@ def q_fuzzy_candidates(spark, sf_dir):
         (F.col("support") / F.col("_n")).alias("prior"),
         F.array().cast("array<string>").alias("types"),
     )
-    # each dimension is referenced twice (maybe_broadcast's gate count +
-    # the join itself) — cache the corpus-derived aggregations so the
+    # sf_stats is joined twice (exact and fuzzy lookup) — cache it so the
     # corpus is not re-aggregated per reference (same intra-query cache
     # pattern as er_incremental's linked frame)
     sf_stats = sf_stats.cache()
-    cand_map = cand_map.cache()
-    resources = resources.cache()
     empty = _docs(spark, sf_dir).limit(0).select(
         F.col("doc_id").alias("token_id")
     )

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures.generator import MIN_SF_COUNT, MIN_TOKEN_COUNT
@@ -31,12 +31,6 @@ from ..functions.normalize import sf_normalize_expr
 from ..functions.tokenize import tokenize_expr
 from ..operators.ids import dense_ids
 from ..operators.redirects import resolve_redirects_df
-
-
-# A dimension table above this row count stops being FORCE-broadcast;
-# the join is left to Catalyst/AQE (which falls back to shuffle-hash).
-# ~5M rows ≈ a few hundred MB — the edge of sane executor broadcast.
-BROADCAST_MAX_ROWS = 5_000_000
 
 
 @dataclass
@@ -49,25 +43,6 @@ class ModelTables:
     total_annotated_count: int
     total_token_count: int
     vocab_size: int
-    broadcast_max_rows: int = BROADCAST_MAX_ROWS
-
-    def dim_rows(self, name: str) -> int:
-        """Row count of a model dimension, computed once and memoized
-        (tables are cached via persist(), so the count is one cheap job)."""
-        cache = self.__dict__.setdefault("_dim_rows", {})
-        if name not in cache:
-            cache[name] = getattr(self, name).count()
-        return cache[name]
-
-    def maybe_broadcast(self, df: DataFrame, size_of: str) -> DataFrame:
-        """Broadcast-hint `df` only while the governing dimension
-        (`size_of`) is small enough; above the threshold the plain frame
-        is returned and AQE picks the join strategy at runtime. `df` may
-        be a projection/aggregate of the named dimension — its row count
-        is bounded by it."""
-        if self.dim_rows(size_of) <= self.broadcast_max_rows:
-            return F.broadcast(df)
-        return df
 
     def persist(self) -> "ModelTables":
         """Cache every dimension table. The pipeline references each table

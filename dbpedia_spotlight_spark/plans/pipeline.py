@@ -2,7 +2,7 @@
 
 One lazily-composed DataFrame DAG (SURVEY.md §3.1 recast):
 
-    documents --(AC pandas UDF)--> mentions
+    documents --(FSA mapInPandas)--> mentions
               --(dim joins)------> mention_candidates
               --(token joins+agg)-> ctx_scores
               --(window)---------> linked mentions

@@ -196,8 +196,7 @@ def read_wikipedia_heldout(
             .filter(F.col("n_cand") > 1)
             .select("sf")
         )
-        occs = occs.join(model.maybe_broadcast(
-            amb, "surface_form_stats"), "sf", "left_semi")
+        occs = occs.join(amb, "sf", "left_semi")
     return docs, occs
 
 

@@ -9,7 +9,11 @@ counts when it appears as a `Name`, an `Attribute` or the source of a
 renamed import (`import f as g`); an import alone is not a use.
 `fixtures/` is test support: its functions are followed when an entry
 point reaches them (perfbench builds its inputs and oracle answers with
-them), but an unreached one is not an error."""
+them), but an unreached one is not an error.
+
+A second test checks imports: every name a package module imports is used
+in that module, so a dead import line cannot hide behind the rule that an
+import alone is not a use."""
 
 import ast
 
@@ -107,3 +111,31 @@ def unreached_functions():
 
 def test_only_declared_functions_are_unreached():
     assert unreached_functions() == set(DECLARED_FUNCTIONS)
+
+
+def _bound_imports(tree):
+    """(line, bound name) of every import in `tree`, at any depth."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                bound = alias.asname or alias.name.partition(".")[0]
+                yield node.lineno, bound
+
+
+def unused_imports():
+    unused = set()
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        used = {node.id for node in ast.walk(tree)
+                if isinstance(node, ast.Name)}
+        rel = path.relative_to(ROOT / PKG).as_posix()
+        unused.update(f"{rel}:{line} {name}"
+                      for line, name in _bound_imports(tree)
+                      if name not in used)
+    return unused
+
+
+def test_every_package_import_is_used():
+    assert unused_imports() == set()

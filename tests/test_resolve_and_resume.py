@@ -1,6 +1,8 @@
 """Full resolve() pipeline: clusters vs oracle (incl. coref), checkpoints,
-kill/resume semantics of the stages and of the CC supersteps."""
+kill/resume semantics of the stages and of the CC supersteps, and the
+join plan of the model-dimension lookups."""
 
+import dataclasses
 import json
 import shutil
 
@@ -8,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.fixtures import oracle as O
+from dbpedia_spotlight_spark.operators.candidates import generate_candidates
 from dbpedia_spotlight_spark.operators.cc import connected_components
+from dbpedia_spotlight_spark.operators.scoring import context_scores
 from dbpedia_spotlight_spark.plans.model_build import model_from_fixture_dir
 from dbpedia_spotlight_spark.plans.pipeline import resolve
 from dbpedia_spotlight_spark.sources.checkpoint import CheckpointStore
@@ -124,3 +128,66 @@ def test_cc_superstep_resume(spark, tmp_path_factory):
     stages = store2.manifest()["stages"]
     assert stages[cc_steps[0]] == first[cc_steps[0]]  # not rewritten
     assert set(stages) == set(cc_steps)
+
+
+def _lookup_inputs(spark, stats):
+    """A few mentions of the model's surface forms (one lowercased, so the
+    fuzzy branch joins too) and one document's tokens, as local frames."""
+    sfs = list(stats.surface_form_stats.sf[:6])
+    mentions = spark.createDataFrame(
+        [("d0", i, 10 * i, 10 * i + len(sf), sf.lower() if i == 0 else sf)
+         for i, sf in enumerate(sfs)],
+        "doc_id string, span_idx int, begin int, end int, sf string",
+    )
+    doc_tokens = spark.createDataFrame(
+        [("d0", [t.lower() for sf in sfs for t in sf.split()])],
+        "doc_id string, query_tokens array<string>",
+    )
+    return mentions, doc_tokens
+
+
+def test_building_the_lookup_plan_runs_no_job(spark, model, stats):
+    """Candidate generation and context scoring are lazy: composing them
+    over the model runs no Spark job; join strategies are left to the
+    planner and AQE, which decide from byte sizes."""
+    # a fresh instance: no state an earlier test left on the shared
+    # model can hide a job
+    fresh = dataclasses.replace(model)
+    mentions, doc_tokens = _lookup_inputs(spark, stats)
+    sc = spark.sparkContext
+    group = "test_building_the_lookup_plan_runs_no_job"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        cands = generate_candidates(mentions, fresh)
+        context_scores(cands, doc_tokens, fresh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _final_plan_nodes(df):
+    """Node names of `df`'s final AQE plan, query stages entered; cached
+    tables are leaves (their own build plans are not included)."""
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    names, todo = [], [adaptive.executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+    return names
+
+
+def test_small_dimensions_still_broadcast(spark, model, stats):
+    """Without hints, AQE still broadcasts the small model dimensions in
+    each lookup join: the exact and fuzzy surface-form joins, the
+    candidate map and the resources."""
+    mentions, _ = _lookup_inputs(spark, stats)
+    cands = generate_candidates(mentions, model)
+    assert len(cands.collect()) > 0
+    joins = [n for n in _final_plan_nodes(cands) if "Join" in n]
+    assert len(joins) >= 4
+    assert set(joins) == {"BroadcastHashJoin"}, joins
