@@ -124,13 +124,12 @@ def main(argv=None) -> None:
     )
 
     if args.cmd == "model-build":
-        from .plans.model_build import model_from_fixture_dir
+        from .plans.model_build import MODEL_SCHEMAS, model_from_fixture_dir
 
         model = model_from_fixture_dir(
             spark, args.fixture_dir, stemmer=args.stemmer
         )
-        for name in ("surface_form_stats", "resources", "candidate_map",
-                     "tokens", "context_counts"):
+        for name in MODEL_SCHEMAS:
             getattr(model, name).write.mode("overwrite").parquet(
                 f"{args.output}/{name}"
             )
@@ -140,6 +139,7 @@ def main(argv=None) -> None:
                     "total_annotated_count": model.total_annotated_count,
                     "total_token_count": model.total_token_count,
                     "vocab_size": model.vocab_size,
+                    "stopwords": model.stopwords,
                 },
                 f,
             )
@@ -154,7 +154,7 @@ def main(argv=None) -> None:
             )
 
             docs = tiny_corpus_documents(read_tiny_corpus(spark, args.input))
-            docs.write.mode("overwrite").parquet(f"{args.output}/documents")
+            n_docs = _write_counted(docs, f"{args.output}/documents")
             n_occ = 0
         else:
             from .sources.wiki_corpus import (
@@ -167,14 +167,10 @@ def main(argv=None) -> None:
             else:
                 pages = spark.read.parquet(args.input)
             docs, occs = wiki_page_occurrences(pages)
-            docs.write.mode("overwrite").parquet(f"{args.output}/documents")
-            occs.write.mode("overwrite").parquet(
-                f"{args.output}/occurrences"
-            )
-            n_occ = occs.count()
+            n_docs = _write_counted(docs, f"{args.output}/documents")
+            n_occ = _write_counted(occs, f"{args.output}/occurrences")
         print(json.dumps(
-            {"status": "ok", "documents": docs.count(),
-             "occurrences": n_occ}
+            {"status": "ok", "documents": n_docs, "occurrences": n_occ}
         ))
         return
 
@@ -223,8 +219,11 @@ def main(argv=None) -> None:
                 docs, res.resolved, fmt=fmt,
                 confidence=params.confidence, support=params.support,
             )
-        out.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"status": "ok", "rows": out.count()}))
+        try:
+            n = _write_counted(out, args.output)
+        finally:
+            res.unpersist()
+        print(json.dumps({"status": "ok", "rows": n}))
     elif args.cmd == "resolve":
         from .plans.pipeline import resolve
         from .sources.checkpoint import CheckpointStore
@@ -235,35 +234,45 @@ def main(argv=None) -> None:
             else None
         )
         res = resolve(docs, model, stopwords, params, store=store)
-        res.clusters.write.mode("overwrite").parquet(args.output)
-        print(
-            json.dumps({"status": "ok", "clusters": res.clusters.count()})
-        )
+        try:
+            n = _write_counted(res.clusters, args.output)
+        finally:
+            res.unpersist()
+        print(json.dumps({"status": "ok", "clusters": n}))
+
+
+def _write_counted(df, path: str) -> int:
+    """Write `df` as parquet and return how many rows the write wrote,
+    observed during the write itself rather than by a second action."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get["rows"]
 
 
 def _load_model(spark, model_dir: str):
-    from .plans.model_build import ModelTables
+    from .plans.model_build import MODEL_SCHEMAS, ModelTables
 
     with open(f"{model_dir}/totals.json") as f:
-        totals = json.load(f)
-    rd = lambda n: spark.read.parquet(f"{model_dir}/{n}")
+        meta = json.load(f)
     return ModelTables(
-        surface_form_stats=rd("surface_form_stats"),
-        resources=rd("resources"),
-        candidate_map=rd("candidate_map"),
-        tokens=rd("tokens"),
-        context_counts=rd("context_counts"),
-        **totals,
+        **{
+            name: spark.read.schema(schema).parquet(f"{model_dir}/{name}")
+            for name, schema in MODEL_SCHEMAS.items()
+        },
+        **meta,
     )
 
 
 def _load_stopwords(spark, model_dir: str) -> list[str]:
-    import os
-
-    path = f"{model_dir}/stopwords"
-    if os.path.exists(path):
-        return [r["word"] for r in spark.read.parquet(path).collect()]
-    return ["the", "an", "a", "of", "in"]
+    """The stopwords the model was built with. Models written before
+    model-build recorded them fall back to the generator's list."""
+    with open(f"{model_dir}/totals.json") as f:
+        return json.load(f).get("stopwords", ["the", "an", "a", "of", "in"])
 
 
 if __name__ == "__main__":

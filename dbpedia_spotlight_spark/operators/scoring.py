@@ -34,6 +34,14 @@ def _lnsum(a, b):
     return hi + F.log1p(F.exp(lo - hi))
 
 
+def _exact_sum(col):
+    """Sum of a double column that does not depend on row order. Each
+    term is rounded to 18 decimal places and fixed-point addition is
+    exact, so the result is the same whichever join AQE picked upstream
+    and whatever order the rows arrive in."""
+    return F.sum(col.cast("decimal(38,18)")).cast("double")
+
+
 def doc_token_stats(
     doc_tokens: DataFrame, model: ModelTables,
     keys: list[str] = ("doc_id",),
@@ -82,7 +90,7 @@ def context_scores(
     # NIL context score per context unit
     # (GenerativeContextSimilarity.scala:99-105)
     nil_scores = tok.groupBy(*keys).agg(
-        F.sum(F.lit(ln_1mlam) + F.col("p_lm")).alias("nil_ctx_score")
+        _exact_sum(F.lit(ln_1mlam) + F.col("p_lm")).alias("nil_ctx_score")
     )
 
     # candidate resources per context unit, deduplicated BEFORE the
@@ -118,6 +126,6 @@ def context_scores(
     ctx = pairs.select(
         *keys, "res_id", p_token.alias("p_token")
     ).groupBy(*keys, "res_id").agg(
-        F.sum("p_token").alias("ctx_score")
+        _exact_sum(F.col("p_token")).alias("ctx_score")
     )
     return ctx, nil_scores

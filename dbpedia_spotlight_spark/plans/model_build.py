@@ -21,7 +21,7 @@ get global ids.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +31,21 @@ from ..functions.normalize import sf_normalize_expr
 from ..functions.tokenize import tokenize_expr
 from ..operators.ids import dense_ids
 from ..operators.redirects import resolve_redirects_df
+
+
+# the model tables as `cli model-build` writes them: names, column order
+# and types. Readers pass these instead of inferring the schema, which
+# would cost one Spark job per table.
+MODEL_SCHEMAS = {
+    "surface_form_stats": "sf_id int, sf string, sf_norm string, "
+                          "annotated_count bigint, total_count bigint, "
+                          "lowercase_count bigint",
+    "resources": "res_id int, uri string, support bigint, prior double, "
+                 "types array<string>",
+    "candidate_map": "sf_id int, res_id int, pair_count bigint",
+    "tokens": "token_id int, token string, count bigint",
+    "context_counts": "res_id int, token_id int, count bigint",
+}
 
 
 @dataclass
@@ -43,6 +58,8 @@ class ModelTables:
     total_annotated_count: int
     total_token_count: int
     vocab_size: int
+    # dropped from the vocabulary at build time; queries must drop them too
+    stopwords: list[str] = field(default_factory=list)
 
     def persist(self) -> "ModelTables":
         """Cache every dimension table. The pipeline references each table
@@ -50,8 +67,7 @@ class ModelTables:
         aggregation DAG at every reference (measured: 90 parquet scans in
         one annotate plan). The reference's analog is loading the stores
         into memory once (db/SpotlightModel.scala:36-62)."""
-        for name in ("surface_form_stats", "resources", "candidate_map",
-                     "tokens", "context_counts"):
+        for name in MODEL_SCHEMAS:
             getattr(self, name).cache()
         return self
 
@@ -195,6 +211,7 @@ def build_model(
         total_annotated_count=int(totals),
         total_token_count=int(tok_totals[0]),
         vocab_size=int(tok_totals[1]),
+        stopwords=sw,
     )
 
 

@@ -36,10 +36,14 @@ from .model_build import ModelTables
 
 @dataclass
 class AnnotateResult:
-    mentions: DataFrame
+    mentions: DataFrame   # cached
     candidates: DataFrame
     scored: DataFrame
     resolved: DataFrame   # every mention, NULL uri = NIL
+
+    def unpersist(self) -> None:
+        """Release the cache annotate() made; call after the last action."""
+        self.mentions.unpersist()
 
 
 def annotate(
@@ -105,12 +109,12 @@ def annotate(
     win_tokens, span_map = window_token_arrays(
         documents, stopwords, params.max_context, stemmer=params.stemmer
     )
-    # win_tokens feeds BOTH the candidate context scores and the NIL
-    # scores — cached, or the tokenize+window subtree (which re-reads the
-    # input) expands once per reference (measured ~20% of annotate)
-    win_tokens = win_tokens.cache()
+    # win_tokens feeds both the candidate context scores and the NIL
+    # scores. It is not cached: a cold call ran faster recomputing it
+    # than building the cache, and context_scores sums exactly, so the
+    # scores do not depend on the joins AQE picks over it per run.
     # mentions (a pandas-UDF scan) is referenced by several downstream
-    # joins — cached, or Catalyst re-runs the Python stage per reference
+    # joins — cached, or the Python stage re-runs once per reference
     mentions = with_mention_key(
         spot(documents)
     ).join(span_map, ["doc_id", "span_idx"], "left").fillna(
@@ -131,6 +135,12 @@ def annotate(
 class ResolveResult:
     resolved: DataFrame
     clusters: DataFrame
+    annotated: AnnotateResult | None = None   # None if all stages resumed
+
+    def unpersist(self) -> None:
+        """Release the cache annotate() made; call after the last action."""
+        if self.annotated is not None:
+            self.annotated.unpersist()
 
 
 def resolve(
@@ -175,18 +185,13 @@ def resolve(
         return res
 
     resolved = ck("resolved", _resolved, lineage=["mentions", "scored"])
-    if store is None:
-        # the CLI writes `clusters` and then counts it: without a
-        # checkpoint store, cache `resolved` or both actions re-run the
-        # whole annotate+coref chain
-        resolved = resolved.cache()
-
     clusters = ck(
         "clusters",
         lambda: clusters_by_uri(resolved).select("mention_key", "cluster_id"),
         lineage=["resolved"],
     )
-    return ResolveResult(resolved=resolved, clusters=clusters)
+    return ResolveResult(resolved=resolved, clusters=clusters,
+                         annotated=ann_holder.get("res"))
 
 
 def clusters_by_uri(resolved: DataFrame) -> DataFrame:

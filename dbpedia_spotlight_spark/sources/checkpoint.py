@@ -85,7 +85,10 @@ class CheckpointStore:
             out = self.spark.read.table(self.table_prefix + stage)
         else:
             tagged.write.mode("overwrite").parquet(self.path(stage))
-            out = self.spark.read.parquet(self.path(stage))
+            # the schema just written: inferring it would cost a job
+            out = self.spark.read.schema(tagged.schema).parquet(
+                self.path(stage)
+            )
 
         per_part = {
             str(r["_partition_id"]): r["n"]

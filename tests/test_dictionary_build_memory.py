@@ -1,7 +1,8 @@
 """Driver-memory discipline of the dictionary builds (VERDICT r2 flag):
-the AC automaton / FSA dictionary must STREAM the surface-form column
-(toLocalIterator) instead of collect()ing an O(dictionary) Row list on
-the driver, with identical spot output."""
+the AC automaton / FSA dictionary pull the surface-form column in one
+Arrow collect and consume it record batch by record batch, never
+collect()ing an O(dictionary) Row list on the driver, with identical spot
+output."""
 
 import os
 import tracemalloc

@@ -1,6 +1,7 @@
 """Full resolve() pipeline: clusters vs oracle (incl. coref), checkpoints,
-kill/resume semantics of the stages and of the CC supersteps, and the
-join plan of the model-dimension lookups."""
+kill/resume semantics of the stages and of the CC supersteps, the join
+plan of the model-dimension lookups, and score sums that do not depend on
+row order."""
 
 import dataclasses
 import json
@@ -12,7 +13,10 @@ from pyspark.sql import functions as F
 from dbpedia_spotlight_spark.fixtures import oracle as O
 from dbpedia_spotlight_spark.operators.candidates import generate_candidates
 from dbpedia_spotlight_spark.operators.cc import connected_components
-from dbpedia_spotlight_spark.operators.scoring import context_scores
+from dbpedia_spotlight_spark.operators.scoring import (
+    _exact_sum,
+    context_scores,
+)
 from dbpedia_spotlight_spark.plans.model_build import model_from_fixture_dir
 from dbpedia_spotlight_spark.plans.pipeline import resolve
 from dbpedia_spotlight_spark.sources.checkpoint import CheckpointStore
@@ -163,6 +167,17 @@ def test_building_the_lookup_plan_runs_no_job(spark, model, stats):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_context_sums_do_not_depend_on_row_order(spark):
+    """The order rows reach the score sums follows the joins AQE picks,
+    which change from run to run. Summed as doubles, 1e16, 1 and -1e16
+    give 0 in one order and 1 in the other."""
+    sums = []
+    for vals in ([1e16, 1.0, -1e16], [1e16, -1e16, 1.0]):
+        df = spark.createDataFrame([(v,) for v in vals], "x double")
+        sums.append(df.coalesce(1).agg(_exact_sum(F.col("x"))).first()[0])
+    assert sums == [1.0, 1.0]
 
 
 def _final_plan_nodes(df):
