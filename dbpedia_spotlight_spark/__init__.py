@@ -12,9 +12,8 @@ v0.7.1), re-expressed Spark-first:
              --(clusters_by_uri: one cluster per linked URI)--> clusters
 
 Everything is DataFrame-declarative; on `resolve` Python appears only in
-the spotter's Arrow-batched mapInPandas scan. Checkpoints go to Iceberg
-when an Iceberg catalog is configured, else to parquet with an atomic
-manifest (sandbox fallback).
+the spotter's Arrow-batched mapInPandas scan. Checkpoints go to parquet
+with an atomic manifest.
 """
 
 __version__ = "0.1.0"

@@ -34,7 +34,6 @@ def _params(args) -> PipelineParams:
         uri_whitelist=tuple(getattr(args, "uris", []) or []),
         coreference_resolution=not getattr(args, "no_coref", False),
         stemmer=getattr(args, "stemmer", None) or None,
-        spotter=getattr(args, "spotter", "fsa"),
         mixture=getattr(args, "mixture", "unweighted"),
         shuffle_partitions=args.shuffle_partitions,
         checkpoint_dir=args.checkpoint_dir,
@@ -68,7 +67,6 @@ def main(argv=None) -> None:
     a.add_argument("--no-coref", action="store_true")
     a.add_argument("--stemmer", choices=["english"], default=None,
                    help="must match the model's build-time stemmer")
-    a.add_argument("--spotter", choices=["ac", "fsa"], default="fsa")
     a.add_argument("--mixture", choices=list(MIXTURES),
                    default="unweighted",
                    help="score mixture (disambiguate/mixtures/*.scala)")
@@ -99,7 +97,6 @@ def main(argv=None) -> None:
                             "heldout"])
     e.add_argument("--model-dir", required=True)
     e.add_argument("--stemmer", choices=["english"], default=None)
-    e.add_argument("--spotter", choices=["ac", "fsa"], default="fsa")
     e.add_argument("--mixture", choices=list(MIXTURES),
                    default="unweighted")
 

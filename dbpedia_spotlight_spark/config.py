@@ -18,13 +18,6 @@ class PipelineParams:
     case_sensitive: bool = False
     overlap: bool = False          # AhoCorasickSpotter overlap flag
     min_sf_length: int = 3         # ShortSurfaceFormSelector.scala:10-12
-    # "fsa" = vectorized token n-gram spotter (FSASpotter.scala recast —
-    # the reference's v1.0 default; fully general since boundary-edged
-    # sfs route to the embedded AC residue automaton, and ~6x the char
-    # scan throughput with the hash-prefilter + ~4x smaller broadcast
-    # dictionary); "ac" = char Aho-Corasick (the independent twin
-    # implementation, kept selectable and parity-tested)
-    spotter: str = "fsa"
 
     # --- candidate generation ---
     max_candidates: int = 10       # DBTwoStepDisambiguator.scala:43

@@ -95,16 +95,16 @@ def jaro_similarity_py(s1: str, s2: str) -> float:
     return (matches / n1 + matches / n2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler_py(s1: str, s2: str, p: float = 0.1, boost: float = 0.7) -> float:
+def jaro_winkler_py(s1: str, s2: str) -> float:
     jaro = jaro_similarity_py(s1, s2)
-    if jaro <= boost:
+    if jaro <= 0.7:
         return jaro
     prefix = 0
     for a, b in zip(s1[:4], s2[:4]):
         if a != b:
             break
         prefix += 1
-    return jaro + prefix * p * (1.0 - jaro)
+    return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
 @pandas_udf(DoubleType())

@@ -233,16 +233,12 @@ def stem_map(tokens: DataFrame, token_col: str = "token") -> DataFrame:
     )
 
 
-def stem_tokens(
-    df: DataFrame, token_col: str = "token", broadcast: bool = True
-) -> DataFrame:
+def stem_tokens(df: DataFrame, token_col: str = "token") -> DataFrame:
     """Replace `token_col` with its Porter2 stem.
 
     Python cost is O(distinct tokens); the corpus-sized frame only pays a
-    JVM join against the (token -> stem) dictionary. `broadcast=False`
-    lets AQE pick the join when the vocabulary outgrows a broadcast."""
-    mapping = stem_map(df, token_col)
-    mapping = F.broadcast(mapping) if broadcast else mapping
+    JVM join against the broadcast (token -> stem) dictionary."""
+    mapping = F.broadcast(stem_map(df, token_col))
     return (
         df.withColumnRenamed(token_col, "_raw_token")
         .join(mapping, F.col("_raw_token") == mapping.token, "left")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 _TOKEN_SPLIT = "[^a-z0-9]+"
 
 
-def tokenize_expr(col: Column, stopwords_col=None) -> Column:
+def tokenize_expr(col: Column) -> Column:
     """array<string> of context tokens for a text column (JVM-side)."""
     arr = F.split(F.lower(col), _TOKEN_SPLIT)
     return F.filter(arr, lambda t: t != "")

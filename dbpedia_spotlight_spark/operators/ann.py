@@ -1,9 +1,9 @@
 """Similarity search over embedding columns (driver mandate).
 
 Two paths:
-  * brute-force cosine top-k — the correctness baseline. All math stays
-    JVM-side: F.zip_with products + F.aggregate sums; top-k via a
-    window. Queries broadcast against the corpus (no O(n²) shuffle).
+  * brute-force cosine top-k — the correctness baseline. Queries
+    broadcast against the corpus (no O(n²) shuffle); one Arrow kernel
+    per corpus batch scores them in JVM fold order; top-k via a window.
   * sign-LSH (random hyperplanes) — the scale path. Hyperplanes are a
     seeded numpy matrix broadcast to executors; bucket code computed in
     one Arrow-batched pandas UDF (matrix-vector product per batch);
@@ -14,6 +14,8 @@ Two paths:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -22,27 +24,21 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 # -- bit-exact numpy twins of the JVM fold expressions --------------------
 #
-# cosine_expr's dot/norm are LEFT FOLDS: ((0.0 + p_0) + p_1) + ... in array
-# index order, each step one IEEE-754 double add. A BLAS matmul uses
-# pairwise/SIMD summation — different rounding in the last bits, which can
-# flip a row_number tie and change a top-k result. These helpers accumulate
-# dimension-by-dimension in index order instead, so every scalar goes
-# through the exact same sequence of IEEE ops as the JVM fold (products
-# then left-to-right adds) while staying vectorized across pairs. The
+# A cosine written as Spark expressions (F.zip_with products summed by
+# F.aggregate) takes its dot and norms as LEFT FOLDS: ((0.0 + p_0) + p_1)
+# + ... in array index order, each step one IEEE-754 double add. A BLAS
+# matmul uses pairwise/SIMD summation — different rounding in the last
+# bits, which can flip a row_number tie and change a top-k result. These
+# helpers accumulate dimension-by-dimension in index order instead, so
+# every scalar goes through the exact same sequence of IEEE ops as the JVM
+# fold (products then left-to-right adds) while staying vectorized across
+# pairs. The
 # correctness gates hash-verify the outputs, so rerank kernels built on
 # these are bit-identical to the expression plan they replace.
 
-def _seq_gram(xq: np.ndarray, x: np.ndarray, tile: int = 1024) -> np.ndarray:
+def _seq_gram(xq: np.ndarray, x: np.ndarray) -> np.ndarray:
     """(len(xq), len(x)) matrix of dot products, JVM-fold order.
 
     Tiled over the x axis so the d accumulation passes run over an
@@ -50,6 +46,7 @@ def _seq_gram(xq: np.ndarray, x: np.ndarray, tile: int = 1024) -> np.ndarray:
     DRAM d times (measured 229s -> ~8s for a 20k x 20k gram at d=64);
     per-scalar operation order is unchanged — tiling only partitions
     columns, never regroups the j-sum."""
+    tile = 1024
     nq, n = xq.shape[0], x.shape[0]
     d = x.shape[1] if n else 0
     out = np.empty((nq, n))
@@ -75,24 +72,10 @@ def _seq_sqnorm(x: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine_expr(a, b):
-    """cosine(a, b) as a pure column expression (0 when either is zero)."""
-    denom = _norm(a) * _norm(b)
-    return F.when(denom > 0, _dot(a, b) / denom).otherwise(0.0)
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query (self excluded when the
     ids collide). Queries are broadcast; corpus streams once.
@@ -110,8 +93,8 @@ def brute_force_topk(
 
     spark = corpus.sparkSession
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     ).toPandas()
     qids = q["query_id"].to_numpy()
     qmat = (
@@ -120,8 +103,8 @@ def brute_force_topk(
     )
     q_bc = spark.sparkContext.broadcast((qids, qmat))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     )
     id_type = c.schema["neighbor_id"].dataType
     out_schema = StructType(
@@ -188,8 +171,6 @@ NEARDUP_EXACT_MAX_ROWS = 100_000
 def embedding_neardup_exact(
     corpus: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact all-pairs near-dup: (id_a < id_b, cosine >= threshold).
     O(n²) by construction — small-N / oracle path only (the auto gate
@@ -206,8 +187,8 @@ def embedding_neardup_exact(
 
     spark = corpus.sparkSession
     base = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     full = base.toPandas()
     ids_all = full["_id"].to_numpy()
@@ -284,8 +265,6 @@ def embedding_neardup_approx(
     n_bands: int = 8,
     band_bits: int = 4,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Banded sign-LSH near-dup: same output contract as the exact path
@@ -303,11 +282,11 @@ def embedding_neardup_approx(
     tiny job per call."""
     spark = corpus.sparkSession
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(corpus.select("embedding").first()[0])
     planes = make_hyperplanes(dim, n_bands * band_bits, seed)
     base = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     planes_bc = spark.sparkContext.broadcast(planes)
     coded = base.withColumn(
@@ -387,10 +366,7 @@ def embedding_neardup_approx(
 def embedding_neardup(
     corpus: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact_max_rows: int = NEARDUP_EXACT_MAX_ROWS,
-    **approx_kw,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine) with
     cosine >= threshold.
@@ -403,10 +379,8 @@ def embedding_neardup(
     # so the probe stops scanning once k+1 rows are seen instead of
     # counting the full corpus (at 10^12 rows a full count is a real job)
     if corpus.limit(exact_max_rows + 1).count() <= exact_max_rows:
-        return embedding_neardup_exact(corpus, threshold, id_col, vec_col)
-    return embedding_neardup_approx(
-        corpus, threshold, id_col=id_col, vec_col=vec_col, **approx_kw
-    )
+        return embedding_neardup_exact(corpus, threshold)
+    return embedding_neardup_approx(corpus, threshold)
 
 
 def make_hyperplanes(dim: int, n_bits: int = 12, seed: int = 42) -> np.ndarray:
@@ -437,11 +411,7 @@ IVF_MAX_LISTS = 65_536
 def ivf_topk(
     corpus: DataFrame,
     k: int = 10,
-    n_lists: int | None = None,
     n_probe: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style approximate self top-k: partition vectors into inverted
     lists around sampled centroids (deterministic seed), probe the
@@ -449,12 +419,12 @@ def ivf_topk(
 
     The scale path alongside sign-LSH: at 10^12 rows each list is a
     partition-pruned slice; centroid assignment is one Arrow-batched
-    matrix product per batch. n_lists defaults to ~sqrt(n), capped at
+    matrix product per batch. n_lists is ~sqrt(n), capped at
     IVF_MAX_LISTS, so in-list work stays O(n^1.5) total instead of
     O(n²/const) with a fixed list count.
 
     Centroid selection is ENGINE-NEUTRAL and deterministic: the first
-    n_lists vectors in md5(id || ':' || seed) hex order. md5 exists in
+    n_lists vectors in md5(id || ':42') hex order. md5 exists in
     every SQL engine (unlike xxhash64), so the whole algorithm — centroid
     CTE, nearest-list assignment, probe join, rerank — has a static
     ANSI-SQL twin and the driver's DuckDB oracle can hash-verify this
@@ -463,21 +433,18 @@ def ivf_topk(
     """
     spark = corpus.sparkSession
     base = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
-    if n_lists is None:
-        import math
-
-        n_lists = max(1, min(int(math.isqrt(base.count())), IVF_MAX_LISTS))
+    n_lists = max(1, min(int(math.isqrt(base.count())), IVF_MAX_LISTS))
     # deterministic engine-neutral centroid sample: first n_lists rows in
-    # md5(id:seed) hex order (lowercase hex compares identically as a
+    # md5(id:42) hex order (lowercase hex compares identically as a
     # string in Spark and DuckDB). Streamed, not collect()ed: the driver
     # holds exactly the (n_lists, dim) float64 matrix, nothing more.
     ordered = (
         base.withColumn(
             "_h",
-            F.md5(F.concat(F.col("_id").cast("string"), F.lit(f":{seed}"))),
+            F.md5(F.concat(F.col("_id").cast("string"), F.lit(":42"))),
         )
         .orderBy("_h")
         .limit(n_lists)
@@ -597,9 +564,6 @@ def lsh_topk(
     corpus: DataFrame,
     k: int = 10,
     n_bits: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate self top-k: bucket by hyperplane signs, exact cosine
@@ -631,11 +595,11 @@ def lsh_topk(
 
     spark = corpus.sparkSession
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    planes = make_hyperplanes(dim, n_bits, seed)
+        dim = len(corpus.select("embedding").first()[0])
+    planes = make_hyperplanes(dim, n_bits)
     base = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     planes_bc = spark.sparkContext.broadcast(planes)
     bucketed = base.withColumn("bucket", lsh_bucket_udf(planes_bc)(F.col("v")))

@@ -11,7 +11,7 @@ the single-machine analog of the same chase-to-fixpoint.
 
 Node ids are strings (mention keys); the component id is the
 lexicographically smallest member. Each superstep optionally checkpoints
-through a CheckpointStore (parquet/Iceberg) — that both truncates the
+through a CheckpointStore (parquet) — that both truncates the
 logical plan (which otherwise grows exponentially across iterations) and
 makes a killed run resumable from the last completed superstep.
 """
@@ -197,7 +197,6 @@ def connected_components(
     edges: DataFrame,
     store: CheckpointStore | None = None,
     stage_prefix: str = "cc",
-    max_iterations: int = MAX_ITERATIONS,
     force_distributed: bool = False,
 ) -> DataFrame:
     """edges(src, dst) -> assignments(mention_key, cluster_id).
@@ -247,7 +246,7 @@ def connected_components(
             cur = store.read(f"{stage_prefix}_step_{start_step}")
 
     prev_sig = _signature(cur)
-    for it in range(start_step + 1, max_iterations + 1):
+    for it in range(start_step + 1, MAX_ITERATIONS + 1):
         # exactly ONE large+small star pair per materialization: each star
         # references its input ~5x, so composing stars without a
         # materialization boundary grows the logical plan ~5^k and melts
@@ -258,7 +257,6 @@ def connected_components(
                 nxt,
                 f"{stage_prefix}_step_{it}",
                 lineage=[f"{stage_prefix}_step_{it-1}"] if it > 1 else [],
-                superstep=it,
             )
         else:
             nxt = nxt.localCheckpoint()  # truncate lineage

@@ -27,19 +27,17 @@ from pyspark.sql.types import LongType
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """One row per input, + (content_hash, dup_group, is_duplicate).
 
     The group representative (is_duplicate = false) is the minimum id —
     deterministic under re-runs.
     """
-    hashed = df.withColumn("content_hash", F.md5(F.col(text_col)))
+    hashed = df.withColumn("content_hash", F.md5(F.col("text")))
     w = Window.partitionBy("content_hash")
     return (
-        hashed.withColumn("dup_group", F.min(id_col).over(w))
-        .withColumn("is_duplicate", F.col(id_col) != F.col("dup_group"))
+        hashed.withColumn("dup_group", F.min("doc_id").over(w))
+        .withColumn("is_duplicate", F.col("doc_id") != F.col("dup_group"))
     )
 
 
@@ -192,8 +190,6 @@ def minhash_signature_md5_udf(n: int, num_hashes: int):
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
@@ -231,9 +227,9 @@ def minhash_lsh_candidates(
         # per-seed elementwise min below reproduces that exactly (min is
         # associative), map-side combined to one tiny row per doc.
         sig = df.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             minhash_signature_md5_udf(shingle_n, num_hashes)(
-                F.col(text_col)
+                F.col("text")
             ).alias("sig"),
         )
         sig = sig.groupBy("_id").agg(
@@ -249,8 +245,8 @@ def minhash_lsh_candidates(
     # hash exactly once and map-side combine reduces the shuffle to one
     # signature row per document — also the right shape at 10^12 rows.
     exploded = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(word_shingle_hashes_udf(shingle_n)(F.col(text_col)))
+        F.col("doc_id").alias("_id"),
+        F.explode(word_shingle_hashes_udf(shingle_n)(F.col("text")))
         .alias("g"),
     )
     # seed folded in as a leading literal column (xxhash64 chains its
@@ -330,8 +326,6 @@ def _band_join(sig: DataFrame, bands: int, rows_per_band: int,
 def ngram_jaccard(
     df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (verification stage).
@@ -339,8 +333,8 @@ def ngram_jaccard(
     |A ∩ B| via explode + equi-join + count; |A ∪ B| = |A| + |B| − |∩|.
     """
     sh = df.select(
-        F.col(id_col).alias("_id"),
-        word_shingles_udf(shingle_n)(F.col(text_col)).alias("sh"),
+        F.col("doc_id").alias("_id"),
+        word_shingles_udf(shingle_n)(F.col("text")).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
     ex = sh.select("_id", F.explode("sh").alias("g"))
     ea = ex.select(F.col("_id").alias("id_a"), F.col("g"))
@@ -371,13 +365,10 @@ def ngram_jaccard(
 
 def near_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    key_pad: int = 8,
 ) -> DataFrame:
     """End-to-end near-duplicate deduplication, one call.
 
@@ -385,8 +376,8 @@ def near_dedup(
     MinHash LSH candidates → exact n-gram Jaccard verification →
     connected components over the verified pairs → min-id group
     representative. Output: one row per input doc with
-    (id_col, dup_group, is_near_duplicate) — dup_group is the
-    zero-padded id of the group representative (a doc in no verified
+    (doc_id, dup_group, is_near_duplicate) — dup_group is the
+    zero-padded (8 digits) id of the group representative (a doc in no verified
     pair is its own group), is_near_duplicate marks non-representative
     members.
 
@@ -396,26 +387,25 @@ def near_dedup(
     DuckDB-twin family the sf0.01 gate verifies.
     """
     cand = minhash_lsh_candidates(
-        df, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
-        num_hashes=num_hashes, bands=bands,
+        df, shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
     ).select("id_a", "id_b").distinct()
-    ver = ngram_jaccard(
-        df, cand, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-    ).filter(F.col("jaccard") >= jaccard_threshold)
+    ver = ngram_jaccard(df, cand, shingle_n=shingle_n).filter(
+        F.col("jaccard") >= jaccard_threshold
+    )
 
     def key(c):
-        return F.lpad(F.col(c).cast("string"), key_pad, "0")
+        return F.lpad(F.col(c).cast("string"), 8, "0")
 
     from .cc import connected_components
 
     edges = ver.select(key("id_a").alias("src"), key("id_b").alias("dst"))
     cc = connected_components(edges)
-    keyed = df.select(F.col(id_col), key(id_col).alias("_k"))
+    keyed = df.select("doc_id", key("doc_id").alias("_k"))
     grp = F.coalesce(F.col("cluster_id"), F.col("_k"))
     return (
         keyed.join(cc, keyed["_k"] == cc["mention_key"], "left")
         .select(
-            id_col,
+            "doc_id",
             grp.alias("dup_group"),
             (grp != F.col("_k")).alias("is_near_duplicate"),
         )
@@ -528,15 +518,9 @@ def _pop16():
     return _POP16
 
 
-def simhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hamming_threshold: int = 3,
-    n_blocks: int = 4,
-) -> DataFrame:
+def simhash_dedup(df: DataFrame, hamming_threshold: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: block on bit-bands (a pair within the
-    hamming threshold shares at least one of n_blocks 16-bit bands by
+    hamming threshold shares at least one of 4 16-bit bands by
     pigeonhole), verify hamming distance within each band bucket.
 
     The per-bucket verification runs in a numpy kernel instead of a
@@ -560,9 +544,8 @@ def simhash_dedup(
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     h = df.select(
-        F.col(id_col).alias("_id"), simhash64_udf(F.col(text_col)).alias("h")
+        F.col("doc_id").alias("_id"), simhash64_udf(F.col("text")).alias("h")
     )
-    width = 64 // n_blocks
     # null hashes never matched the equi-join (null keys drop); filter
     # them before grouping so they do not form a spurious null bucket
     banded = h.filter(F.col("h").isNotNull()).select(
@@ -573,11 +556,11 @@ def simhash_dedup(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("h"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
+                        F.shiftrightunsigned(F.col("h"), b * 16)
+                        .bitwiseAND(F.lit(0xFFFF))
                         .alias("bucket"),
                     )
-                    for b in range(n_blocks)
+                    for b in range(4)
                 ]
             )
         ).alias("bb"),
@@ -601,10 +584,6 @@ def simhash_dedup(
             return
 
         def ham_block(h16a, h16b, fields):
-            if not fields:  # degenerate n_blocks=1: bucket == hash
-                return np.zeros(
-                    (h16a.shape[0], h16b.shape[0]), dtype=np.uint8
-                )
             # uint8 sums cannot overflow (<= 64); only survivors are
             # promoted to the gate's int32 hamming
             out = pop[h16a[:, None, fields[0]] ^ h16b[None, :, fields[0]]]
@@ -687,14 +666,8 @@ def simhash_dedup(
         for s, e in zip(starts[sizes > SMALL], seg[1:][sizes > SMALL]):
             n = e - s
             ids, h16 = all_ids[s:e], all_h16[s:e]
-            if width % 16 == 0:
-                f0 = int(band[s]) * width // 16
-                fields = [
-                    f for f in range(4)
-                    if not f0 <= f < f0 + width // 16
-                ]
-            else:
-                fields = [0, 1, 2, 3]
+            # band b's bucket is the hash's 16-bit field b
+            fields = [f for f in range(4) if f != band[s]]
             for lo in range(0, n, chunk):
                 hi = min(lo + chunk, n)
                 ham = ham_block(h16[lo:hi], h16, fields)

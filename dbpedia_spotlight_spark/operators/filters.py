@@ -17,23 +17,15 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_PARAMS, PipelineParams
 
 
-def confidence_filter(
-    scored: DataFrame,
-    confidence: float,
-    sim_thresholds: list[float] | None = None,
-) -> DataFrame:
+def confidence_filter(scored: DataFrame, confidence: float) -> DataFrame:
     """ConfidenceFilter.scala:47-52 + PercentageOfSecondFilter.scala:26-32.
 
-    With no trained threshold list the similarity threshold IS the
-    confidence value (ConfidenceFilter.scala:49's length==0 branch).
+    The model carries no trained threshold list, so the similarity
+    threshold IS the confidence value (ConfidenceFilter.scala:49's
+    length==0 branch).
     """
-    if sim_thresholds:
-        idx = max(round((len(sim_thresholds) - 1) * confidence), 0)
-        sim_threshold = sim_thresholds[idx]
-    else:
-        sim_threshold = confidence
     return scored.filter(
-        (F.col("final_score") >= sim_threshold)
+        (F.col("final_score") >= confidence)
         & (F.col("pct_second_rank") <= (1.0 - confidence * confidence))
     )
 
@@ -62,17 +54,17 @@ def type_filter(
     scored: DataFrame,
     whitelist: tuple[str, ...] = (),
     blacklist: tuple[str, ...] = (),
-    keep_untyped: bool = True,
 ) -> DataFrame:
-    """TypeFilter.scala:25 — type-set intersection, UNKNOWN policy."""
+    """TypeFilter.scala:25 — type-set intersection, UNKNOWN policy: a
+    resource with no types passes the whitelist."""
     out = scored
     if whitelist:
-        cond = F.arrays_overlap(
-            F.col("types"), F.array(*[F.lit(t) for t in whitelist])
+        out = out.filter(
+            F.arrays_overlap(
+                F.col("types"), F.array(*[F.lit(t) for t in whitelist])
+            )
+            | (F.size("types") == 0)
         )
-        if keep_untyped:
-            cond = cond | (F.size("types") == 0)
-        out = out.filter(cond)
     if blacklist:
         out = out.filter(
             ~F.arrays_overlap(

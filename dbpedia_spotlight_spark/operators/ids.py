@@ -19,22 +19,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dense_ids(
-    df: DataFrame,
-    order_col: str,
-    id_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def dense_ids(df: DataFrame, order_col: str, id_col: str) -> DataFrame:
     """Add `id_col` = 0-based global rank of `order_col` (unique keys).
 
     Equivalent to `row_number().over(Window.orderBy(order_col)) - 1` but
-    scales: no single-partition exchange; the only driver-side data is
-    one row count per partition."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+    scales: no single-partition exchange (one range partition per shuffle
+    partition); the only driver-side data is one row count per
+    partition."""
+    num_partitions = int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
     ranged = (
         df.repartitionByRange(num_partitions, F.col(order_col))
         .withColumn("_pid", F.spark_partition_id())

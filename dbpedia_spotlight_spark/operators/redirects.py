@@ -140,11 +140,9 @@ def close_redirects_distributed(redirects: DataFrame) -> DataFrame:
 
 
 def resolve_redirects_df(occs: DataFrame, redirects: DataFrame,
-                         uri_col: str = "uri_raw",
-                         out_col: str = "uri",
                          max_driver_edges: int = DRIVER_CLOSURE_MAX_EDGES,
                          ) -> DataFrame:
-    """Resolve a URI column through the closed redirect map.
+    """Resolve `uri_raw` through the closed redirect map into `uri`.
 
     Size-gated: dimension-sized tables collect to the driver chase and
     broadcast-join; larger tables run the distributed pointer-doubling
@@ -162,7 +160,7 @@ def resolve_redirects_df(occs: DataFrame, redirects: DataFrame,
         pairs = {r["src_uri"]: r["dst_uri"] for r in canon.collect()}
         closed = close_redirects(pairs)
         if not closed:
-            return occs.withColumn(out_col, F.col(uri_col))
+            return occs.withColumn("uri", F.col("uri_raw"))
         closure_df = F.broadcast(spark.createDataFrame(
             list(closed.items()), schema="src_uri string, final_uri string"
         ))
@@ -171,9 +169,9 @@ def resolve_redirects_df(occs: DataFrame, redirects: DataFrame,
     return (
         occs.join(
             closure_df,
-            occs[uri_col] == closure_df["src_uri"],
+            occs["uri_raw"] == closure_df["src_uri"],
             "left",
         )
-        .withColumn(out_col, F.coalesce(F.col("final_uri"), F.col(uri_col)))
+        .withColumn("uri", F.coalesce(F.col("final_uri"), F.col("uri_raw")))
         .drop("src_uri", "final_uri")
     )

@@ -20,22 +20,20 @@ from pyspark.sql import functions as F
 
 
 def common_word_blacklist(
-    mentions: DataFrame, common_words: DataFrame, word_col: str = "word"
+    mentions: DataFrame, common_words: DataFrame
 ) -> DataFrame:
-    """Drop mentions whose surface form is a common word (anti join)."""
+    """Drop mentions whose surface form is a common `word` (anti join)."""
     return mentions.join(
-        F.broadcast(common_words.select(F.col(word_col).alias("sf"))),
+        F.broadcast(common_words.select(F.col("word").alias("sf"))),
         "sf",
         "left_anti",
     )
 
 
-def whitelist_selector(
-    mentions: DataFrame, whitelist: DataFrame, sf_col: str = "sf"
-) -> DataFrame:
-    """Keep only whitelisted surface forms (semi join)."""
+def whitelist_selector(mentions: DataFrame, whitelist: DataFrame) -> DataFrame:
+    """Keep only whitelisted surface forms `sf` (semi join)."""
     return mentions.join(
-        F.broadcast(whitelist.select(F.col(sf_col).alias("sf"))),
+        F.broadcast(whitelist.select("sf")),
         "sf",
         "left_semi",
     )

@@ -39,7 +39,6 @@ def spot_score_filter(
     mentions_with_stats: DataFrame,
     confidence: float,
     weights: tuple[float, ...] | None = None,
-    sf_col: str = "sf",
 ) -> DataFrame:
     """Filter spots by feature score (DBSpotter.scala:114-157).
 
@@ -55,7 +54,7 @@ def spot_score_filter(
         return mentions_with_stats.withColumn(
             "spot_score", ann_prob
         ).filter(F.col("spot_score") >= 0.25)
-    feats = spot_features(F.col(sf_col), ann_prob)
+    feats = spot_features(F.col("sf"), ann_prob)
     score = sum(
         (w * f for w, f in zip(weights, feats)),
         start=F.lit(0.0),
@@ -71,17 +70,16 @@ _OVERLAP_SCHEMA = (
 )
 
 
-def drop_overlapping_spots(
-    spots: "DataFrame", type_order: tuple[str, ...] = ("ac",)
-) -> "DataFrame":
+def drop_overlapping_spots(spots: "DataFrame") -> "DataFrame":
     """Overlap conflict resolution (db/DBSpotter.scala:170-221): sort by
     (offset, length); for each intersecting pair prefer the longer spot
     unless the shorter is >2x more probable, break probability ties by
-    spotter-type order. Sequential per document -> grouped applyInPandas
-    (never parallelize within a doc — SURVEY.md §4 hard parts)."""
+    spotter-type order ("ac" first, any other type after it).
+    Sequential per document -> grouped applyInPandas (never parallelize
+    within a doc — SURVEY.md §4 hard parts)."""
     import pandas as pd
 
-    order = {t: i for i, t in enumerate(type_order)}
+    order = {"ac": 0}
 
     def resolve_doc(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = pdf.sort_values(

@@ -94,8 +94,8 @@ def fingerprint_expr(text_col: Column) -> Column:
     )
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
+def text_stats(df: DataFrame) -> DataFrame:
+    c = F.col("text")
     return df.withColumn("n_tokens", token_count_expr(c)) \
         .withColumn("n_tokens_bpe", bpe_token_estimate_expr(c)) \
         .withColumn("lang_pred", language_id_expr(c)) \

@@ -31,14 +31,12 @@ def spotting_pr(predicted: DataFrame, gold: DataFrame) -> dict:
     }
 
 
-def disambiguation_metrics(
-    scored: DataFrame, gold: DataFrame, k: int = 20
-) -> dict:
+def disambiguation_metrics(scored: DataFrame, gold: DataFrame) -> dict:
     """Accuracy / MRR / not-found over ranked candidates vs gold URIs.
 
     `scored` = operators/disambiguate output (ranked candidate rows);
     `gold` = (doc_id, offset, uri). A gold occurrence whose URI never
-    appears in the mention's bestK counts as not-found
+    appears in the mention's bestK (K = 20) counts as not-found
     (EvaluateParagraphDisambiguator.scala:97)."""
     mention_gold = gold.select(
         F.concat_ws(":", "doc_id", F.col("offset").cast("string")).alias(
@@ -46,7 +44,7 @@ def disambiguation_metrics(
         ),
         F.col("uri").alias("gold_uri"),
     )
-    ranked = scored.filter(F.col("rank") <= k).select(
+    ranked = scored.filter(F.col("rank") <= 20).select(
         "mention_key", "uri", "rank"
     )
     joined = mention_gold.join(ranked, "mention_key", "left")

@@ -216,9 +216,9 @@ def build_model(
 
 
 def model_from_fixture_dir(spark: SparkSession, fixture_dir: str,
-                           persist: bool = True,
                            stemmer: str | None = None) -> ModelTables:
-    """Build the model tables from a generated fixture parquet directory."""
+    """Build the (cached) model tables from a generated fixture parquet
+    directory."""
     rd = lambda name: spark.read.parquet(f"{fixture_dir}/{name}.parquet")
     model = build_model(
         training=rd("training_occurrences"),
@@ -230,4 +230,4 @@ def model_from_fixture_dir(spark: SparkSession, fixture_dir: str,
         instance_types=rd("instance_types"),
         stemmer=stemmer,
     )
-    return model.persist() if persist else model
+    return model.persist()

@@ -24,13 +24,13 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_PARAMS, PipelineParams
 from ..operators import disambiguate as D
 from ..operators.candidates import generate_candidates, with_mention_key
-from ..operators.scoring import context_scores
-from ..operators.ahocorasick import AhoCorasick
-from ..operators.spotting import (
-    broadcast_automaton,
-    build_automaton,
-    spot_documents,
+from ..operators.fsa_spotting import (
+    broadcast_fsa_dictionary,
+    build_fsa_dictionary,
+    spot_documents_fsa,
 )
+from ..operators.scoring import context_scores
+from ..operators.windows import window_token_arrays
 from .model_build import ModelTables
 
 
@@ -51,61 +51,18 @@ def annotate(
     model: ModelTables,
     stopwords: list[str],
     params: PipelineParams = DEFAULT_PARAMS,
-    automaton_bc=None,
 ) -> AnnotateResult:
-    spark = documents.sparkSession
-    if params.spotter == "fsa":
-        from ..operators.fsa_spotting import (
-            FSADictionary,
-            broadcast_fsa_dictionary,
-            build_fsa_dictionary,
-            spot_documents_fsa,
-        )
-
-        if automaton_bc is not None and not isinstance(
-            automaton_bc.value, FSADictionary
-        ):
-            raise TypeError(
-                "automaton_bc holds "
-                f"{type(automaton_bc.value).__name__} but params.spotter="
-                "'fsa' needs an FSADictionary (build it with "
-                "build_fsa_dictionary, or set spotter='ac')"
-            )
-        if automaton_bc is None:
-            # on_boundary="ac": real models contain boundary-edged surface
-            # forms ('Yahoo!', 'U.S.') that cannot be token-aligned — they
-            # route to an embedded AC residue automaton instead of raising.
-            automaton_bc = broadcast_fsa_dictionary(
-                spark,
-                build_fsa_dictionary(
-                    model.surface_form_stats,
-                    case_sensitive=params.case_sensitive,
-                    on_boundary="ac",
-                ),
-            )
-        spot = lambda docs: spot_documents_fsa(docs, automaton_bc, params)
-    else:
-        if automaton_bc is not None and not isinstance(
-            automaton_bc.value, AhoCorasick
-        ):
-            raise TypeError(
-                "automaton_bc holds "
-                f"{type(automaton_bc.value).__name__} but params.spotter="
-                f"{params.spotter!r} needs an AhoCorasick (build it with "
-                "build_automaton, or set spotter='fsa')"
-            )
-        if automaton_bc is None:
-            automaton_bc = broadcast_automaton(
-                spark,
-                build_automaton(
-                    model.surface_form_stats,
-                    case_sensitive=params.case_sensitive,
-                ),
-            )
-        spot = lambda docs: spot_documents(docs, automaton_bc, params)
-
-    from ..operators.windows import window_token_arrays
-
+    # on_boundary="ac": real models contain boundary-edged surface forms
+    # ('Yahoo!', 'U.S.') that cannot be token-aligned — they route to an
+    # embedded AC residue automaton instead of raising.
+    fsa_bc = broadcast_fsa_dictionary(
+        documents.sparkSession,
+        build_fsa_dictionary(
+            model.surface_form_stats,
+            case_sensitive=params.case_sensitive,
+            on_boundary="ac",
+        ),
+    )
     win_tokens, span_map = window_token_arrays(
         documents, stopwords, params.max_context, stemmer=params.stemmer
     )
@@ -116,7 +73,7 @@ def annotate(
     # mentions (a pandas-UDF scan) is referenced by several downstream
     # joins — cached, or the Python stage re-runs once per reference
     mentions = with_mention_key(
-        spot(documents)
+        spot_documents_fsa(documents, fsa_bc, params)
     ).join(span_map, ["doc_id", "span_idx"], "left").fillna(
         {"window_id": 0}
     ).cache()

@@ -1,27 +1,21 @@
 """Per-stage checkpoint store with an atomic manifest — the resume backbone.
 
-The north_rule requires every stage to checkpoint with per-partition
-lineage + counters so a killed run resumes from the last completed
-blocking/scoring/clustering superstep. The reference's analog is the Kryo
-memory-store dump (db/memory/MemoryStore.scala:149-199); ours is a table
-per stage.
+Every stage checkpoints with per-partition lineage so a killed run
+resumes from the last completed stage or CC superstep. The reference's
+analog is the Kryo memory-store dump (db/memory/MemoryStore.scala:149-199);
+ours is a parquet directory per stage.
 
-Backends:
-  * Iceberg (`table_prefix="catalog.db."`) — production path:
-    `df.writeTo(prefix + stage).createOrReplace()` gives atomic snapshot
-    commits and time travel for free.
-  * Parquet directory (sandbox default, no Iceberg jars): stage data is
-    written to `<base>/<stage>/`, then the manifest entry is committed by
-    writing `manifest.json.tmp` + atomic rename. A stage counts as
-    complete ONLY if it appears in the manifest, so a kill mid-write
-    never yields a half-stage (the orphan directory is overwritten on
-    retry).
+Stage data is written to `<base>/<stage>/`, then the manifest entry is
+committed by writing `manifest.json.tmp` + atomic rename. A stage counts
+as complete ONLY if it appears in the manifest with its schema, so a kill
+mid-write never yields a half-stage (the orphan directory is overwritten
+on retry).
 
-Manifest entries carry counters (rows, user counters like skew splits)
-and lineage (which upstream stages fed this one, superstep number).
-Per-partition lineage: every checkpointed DataFrame gains a
-`_partition_id` column via spark_partition_id() and the manifest records
-per-partition row counts.
+Manifest entries carry the row count, per-partition row counts, an empty
+`counters` map, lineage (which upstream stages fed this one) and the
+stage's schema, which `read()` uses so a resumed stage runs no
+schema-inference job. Per-partition lineage: every checkpointed DataFrame
+is written with a `_partition_id` column (spark_partition_id()).
 """
 
 from __future__ import annotations
@@ -33,29 +27,29 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class CheckpointStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        table_prefix: str | None = None,
-        run_id: str = "run",
-    ):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir.rstrip("/")
-        self.table_prefix = table_prefix  # Iceberg catalog prefix or None
-        self.run_id = run_id
         os.makedirs(self.base_dir, exist_ok=True)
         self._manifest_path = f"{self.base_dir}/manifest.json"
 
     # ---- manifest ----
     def manifest(self) -> dict[str, Any]:
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {"run_id": self.run_id, "stages": {}}
+        """The committed manifest; an entry without a schema is not a
+        complete stage and is left out."""
+        if not os.path.exists(self._manifest_path):
+            return {"stages": {}}
+        with open(self._manifest_path) as f:
+            manifest = json.load(f)
+        manifest["stages"] = {
+            stage: entry for stage, entry in manifest["stages"].items()
+            if "schema" in entry
+        }
+        return manifest
 
     def _commit_manifest(self, manifest: dict) -> None:
         tmp = self._manifest_path + ".tmp"
@@ -74,21 +68,13 @@ class CheckpointStore:
         self,
         df: DataFrame,
         stage: str,
-        counters: dict[str, Any] | None = None,
         lineage: list[str] | None = None,
-        superstep: int | None = None,
     ) -> DataFrame:
         """Materialize a stage; returns the re-read (lineage-truncated) DF."""
         tagged = df.withColumn("_partition_id", F.spark_partition_id())
-        if self.table_prefix:
-            tagged.writeTo(self.table_prefix + stage).createOrReplace()
-            out = self.spark.read.table(self.table_prefix + stage)
-        else:
-            tagged.write.mode("overwrite").parquet(self.path(stage))
-            # the schema just written: inferring it would cost a job
-            out = self.spark.read.schema(tagged.schema).parquet(
-                self.path(stage)
-            )
+        tagged.write.mode("overwrite").parquet(self.path(stage))
+        # the schema just written: inferring it would cost a job
+        out = self.spark.read.schema(tagged.schema).parquet(self.path(stage))
 
         per_part = {
             str(r["_partition_id"]): r["n"]
@@ -100,33 +86,28 @@ class CheckpointStore:
         manifest["stages"][stage] = {
             "rows": int(sum(per_part.values())),
             "partitions": per_part,
-            "counters": counters or {},
+            "counters": {},
             "lineage": lineage or [],
-            "superstep": superstep,
+            "schema": df.schema.json(),
             "completed_at": time.time(),
         }
         self._commit_manifest(manifest)
         return out.drop("_partition_id")
 
     def read(self, stage: str) -> DataFrame:
-        if self.table_prefix:
-            df = self.spark.read.table(self.table_prefix + stage)
-        else:
-            df = self.spark.read.parquet(self.path(stage))
-        return df.drop("_partition_id")
+        """A completed stage, read with its recorded schema (which leaves
+        `_partition_id` out)."""
+        entry = self.manifest()["stages"][stage]
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        return self.spark.read.schema(schema).parquet(self.path(stage))
 
     def get_or_compute(
         self,
         stage: str,
         compute,
-        counters: dict | None = None,
         lineage: list[str] | None = None,
-        superstep: int | None = None,
     ) -> DataFrame:
         """Resume-aware stage execution: skip compute if checkpointed."""
         if self.has(stage):
             return self.read(stage)
-        return self.write(
-            compute(), stage, counters=counters, lineage=lineage,
-            superstep=superstep,
-        )
+        return self.write(compute(), stage, lineage=lineage)

@@ -75,9 +75,9 @@ def _types(o) -> list:
     return [] if t is None else list(t)
 
 
-def _resource_attrs(o, prefix: str) -> list[tuple[str, str]]:
+def _resource_attrs(o) -> list[tuple[str, str]]:
     return [
-        ("URI", prefix + (o["uri"] or "")),
+        ("URI", DBPEDIA_PREFIX + (o["uri"] or "")),
         ("support", str(o["support"] if o["support"] is not None else 0)),
         ("types", ",".join(_types(o))),
         ("surfaceForm", o["sf"]),
@@ -90,7 +90,7 @@ def _resource_attrs(o, prefix: str) -> list[tuple[str, str]]:
     ]
 
 
-def _render_xml(text, occs, prefix, confidence, support) -> str:
+def _render_xml(text, occs, confidence, support) -> str:
     parts = [
         '<?xml version="1.0" encoding="utf-8"?>\n',
         f'<Annotation text="{_esc(text)}" confidence="{confidence}"'
@@ -101,7 +101,7 @@ def _render_xml(text, occs, prefix, confidence, support) -> str:
         parts.append("  <Resources>\n")
         for o in linked:
             attrs = " ".join(
-                f'{k}="{_esc(v)}"' for k, v in _resource_attrs(o, prefix)
+                f'{k}="{_esc(v)}"' for k, v in _resource_attrs(o)
             )
             parts.append(f"    <Resource {attrs}/>\n")
         parts.append("  </Resources>\n")
@@ -109,7 +109,7 @@ def _render_xml(text, occs, prefix, confidence, support) -> str:
     return "".join(parts)
 
 
-def _render_json(text, occs, prefix, confidence, support) -> str:
+def _render_json(text, occs, confidence, support) -> str:
     doc = {
         "@text": text,
         "@confidence": str(confidence),
@@ -118,13 +118,13 @@ def _render_json(text, occs, prefix, confidence, support) -> str:
     linked = [o for o in _occ_sorted(occs) if o["uri"] is not None]
     if linked:
         doc["Resources"] = [
-            {"@" + k: v for k, v in _resource_attrs(o, prefix)}
+            {"@" + k: v for k, v in _resource_attrs(o)}
             for o in linked
         ]
     return json.dumps(doc, indent=2)
 
 
-def _render_web(text, occs, prefix, link_fn, main_tpl) -> str:
+def _render_web(text, occs, link_fn, main_tpl) -> str:
     out = []
     last = 0
     for o in _occ_sorted(occs):
@@ -132,7 +132,7 @@ def _render_web(text, occs, prefix, link_fn, main_tpl) -> str:
             continue
         b, e = int(o["begin"]), int(o["end"])
         out.append(text[last:b])
-        out.append(link_fn(prefix + o["uri"], text[b:e], _types(o)))
+        out.append(link_fn(DBPEDIA_PREFIX + o["uri"], text[b:e], _types(o)))
         last = e
     out.append(text[last:])
     return main_tpl.format(content="".join(out).replace("\n", "<br/>"))
@@ -151,7 +151,7 @@ def _rdfa_link(uri, sf, types) -> str:
             f' target="_blank" >{sf}</a>')
 
 
-def _render_nif(text, occs, prefix, doc_uri) -> str:
+def _render_nif(text, occs, doc_uri) -> str:
     nif = "http://persistence.uni-leipzig.org/nlp2rdf/ontologies/nif-core#"
     n = len(text)
     ctx = f"{doc_uri}#char=0,{n}"
@@ -181,7 +181,7 @@ def _render_nif(text, occs, prefix, doc_uri) -> str:
             f'    nif:endIndex "{e}"^^<http://www.w3.org/2001/'
             'XMLSchema#nonNegativeInteger> ;',
             f"    nif:referenceContext <{ctx}> ;",
-            f"    itsrdf:taIdentRef <{prefix}{o['uri']}> .",
+            f"    itsrdf:taIdentRef <{DBPEDIA_PREFIX}{o['uri']}> .",
         ]
     return "\n".join(lines)
 
@@ -195,7 +195,6 @@ def render_outputs(
     fmt: str = "xml",
     confidence: float = 0.0,
     support: int = 0,
-    uri_prefix: str = DBPEDIA_PREFIX,
 ) -> DataFrame:
     """(doc_id, output) — one rendered document per row.
 
@@ -262,22 +261,15 @@ def render_outputs(
             ):
                 occs = occs if occs is not None and len(occs) else []
                 if fmt == "xml":
-                    s = _render_xml(text, occs, uri_prefix, confidence,
-                                    support)
+                    s = _render_xml(text, occs, confidence, support)
                 elif fmt == "json":
-                    s = _render_json(text, occs, uri_prefix, confidence,
-                                     support)
+                    s = _render_json(text, occs, confidence, support)
                 elif fmt == "html":
-                    s = _render_web(text, occs, uri_prefix, _html_link,
-                                    _HTML_MAIN)
+                    s = _render_web(text, occs, _html_link, _HTML_MAIN)
                 elif fmt == "rdfa":
-                    s = _render_web(text, occs, uri_prefix, _rdfa_link,
-                                    _RDFA_MAIN)
+                    s = _render_web(text, occs, _rdfa_link, _RDFA_MAIN)
                 else:
-                    s = _render_nif(
-                        text, occs, uri_prefix,
-                        f"urn:doc:{doc_id}",
-                    )
+                    s = _render_nif(text, occs, f"urn:doc:{doc_id}")
                 out.append((doc_id, s))
             yield pd.DataFrame(out, columns=["doc_id", "output"])
 

@@ -152,10 +152,7 @@ def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_wikipedia_heldout(
-    spark: SparkSession,
-    path: str,
-    model=None,
-    redirects: DataFrame | None = None,
+    spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
     """Pig-export heldout corpus: ONE MediaWiki paragraph per line ->
     (documents(doc_id, text), gold occurrences(occ_id, doc_id, uri, sf,
@@ -168,10 +165,9 @@ def read_wikipedia_heldout(
     occurrences by paragraph TEXT (groupBy(_.context)), so identical
     lines collapsing to one doc id matches its semantics exactly.
 
-    Optional reference-parity filters (resolveRedirectsAndFilter,
-    :31-47): `redirects` (src_uri, dst_uri) resolves occurrence URIs
-    through the transitive closure; `model` (ModelTables) drops
-    occurrences whose surface form has candidate ambiguity <= 1."""
+    The reference's resolveRedirectsAndFilter (:31-47) is not applied:
+    gold URIs are taken as written, and unambiguous surface forms are
+    kept."""
     pages = (
         spark.read.text(path)
         .filter(F.trim("value") != "")
@@ -181,34 +177,14 @@ def read_wikipedia_heldout(
         )
         .distinct()
     )
-    docs, occs = wiki_page_occurrences(pages)
-    if redirects is not None:
-        from ..operators.redirects import resolve_redirects_df
-
-        occs = resolve_redirects_df(
-            occs.withColumnRenamed("uri", "uri_raw"), redirects
-        ).drop("uri_raw")
-    if model is not None:
-        amb = (
-            model.candidate_map.groupBy("sf_id")
-            .agg(F.count("*").alias("n_cand"))
-            .join(model.surface_form_stats.select("sf_id", "sf"), "sf_id")
-            .filter(F.col("n_cand") > 1)
-            .select("sf")
-        )
-        occs = occs.join(amb, "sf", "left_semi")
-    return docs, occs
+    return wiki_page_occurrences(pages)
 
 
 _REDIRECT_RE = r"(?is)^\s*#redirect"
 _DISAMBIG_RE = r"(?is)\{\{\s*(disambig|dab\b|hndis)"
 
 
-def wiki_page_occurrences(
-    pages: DataFrame,
-    uri_col: str = "uri",
-    markup_col: str = "markup",
-) -> tuple[DataFrame, DataFrame]:
+def wiki_page_occurrences(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """pages(uri, markup) -> (documents(doc_id, text),
                               occurrences(occ_id, doc_id, uri, sf, offset)).
 
@@ -216,13 +192,13 @@ def wiki_page_occurrences(
     Markup stripping and paragraph splitting stay JVM-side; only the
     per-paragraph link/offset extraction runs in an Arrow kernel."""
     paras = (
-        pages.filter(~F.col(markup_col).rlike(_REDIRECT_RE))
-        .filter(~F.col(markup_col).rlike(_DISAMBIG_RE))
+        pages.filter(~F.col("markup").rlike(_REDIRECT_RE))
+        .filter(~F.col("markup").rlike(_DISAMBIG_RE))
         .select(
-            clean_uri_expr(F.col(uri_col)).alias("page"),
+            clean_uri_expr(F.col("uri")).alias("page"),
             F.posexplode(
                 split_paragraphs_expr(
-                    strip_wiki_markup_expr(F.col(markup_col))
+                    strip_wiki_markup_expr(F.col("markup"))
                 )
             ).alias("pidx", "paragraph"),
         )

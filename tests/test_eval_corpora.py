@@ -385,11 +385,7 @@ def test_wiki_dump_occurrences_end_to_end(spark, tmp_path):
 
 def test_wikipedia_heldout_corpus(spark, tmp_path):
     """Pig heldout lines -> paragraph docs + gold occurrences; identical
-    lines collapse (the reference groups by paragraph text); ambiguity
-    and redirect filters apply when given."""
-    from pyspark.sql import functions as F
-
-    from dbpedia_spotlight_spark.plans.model_build import ModelTables
+    lines collapse (the reference groups by paragraph text)."""
     from dbpedia_spotlight_spark.sources.wiki_corpus import (
         read_wikipedia_heldout,
     )
@@ -411,34 +407,6 @@ def test_wikipedia_heldout_corpus(spark, tmp_path):
         ("Apple_Inc.", "company"), ("Banana", "fruit"),
         ("Old_Name", "Old Name"),
     }
-
-    # redirect resolution
-    redirects = spark.createDataFrame(
-        [("Old_Name", "New_Name")], "src_uri string, dst_uri string"
-    )
-    _docs2, occs2 = read_wikipedia_heldout(spark, str(p),
-                                           redirects=redirects)
-    assert ("New_Name", "Old Name") in {
-        (r["uri"], r["sf"]) for r in occs2.collect()
-    }
-
-    # ambiguity > 1 filter (WikipediaHeldoutCorpus.scala:40-43)
-    sf_stats = spark.createDataFrame(
-        [(1, "company", 5, 10), (2, "fruit", 5, 10), (3, "Old Name", 5, 10)],
-        "sf_id long, sf string, annotated_count long, total_count long",
-    )
-    cand = spark.createDataFrame(
-        [(1, 10, 3), (1, 11, 2), (2, 20, 4), (3, 30, 1)],
-        "sf_id long, res_id long, pair_count long",
-    )
-    model = ModelTables(
-        surface_form_stats=sf_stats, resources=None, candidate_map=cand,
-        tokens=None, context_counts=None, total_annotated_count=1,
-        total_token_count=1, vocab_size=1,
-    )
-    _docs3, occs3 = read_wikipedia_heldout(spark, str(p), model=model)
-    kept = {r["sf"] for r in occs3.collect()}
-    assert kept == {"company"}  # only sf with >1 candidate survives
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.config import PipelineParams
+from dbpedia_spotlight_spark.operators import fsa_spotting as FS
 from dbpedia_spotlight_spark.operators.fsa_spotting import (
     build_fsa_dictionary,
     broadcast_fsa_dictionary,
@@ -15,6 +16,17 @@ from dbpedia_spotlight_spark.operators.spotting import (
     build_automaton,
     spot_documents,
 )
+
+
+def _scan_span(text, fsa):
+    """All word-bounded dictionary matches in one span: (b, e, sf_raw),
+    residue matches included — the per-span reference the batched sweep
+    and the AC spotter are compared against."""
+    low = text if fsa.case_sensitive else text.lower()
+    out = FS._scan_one(low, text, fsa)
+    if fsa.residue is not None:
+        out.extend(FS._residue_matches(text, fsa))
+    return out
 
 
 def _mentions_set(df):
@@ -78,16 +90,6 @@ def test_fsa_equals_ac_synthetic_edge_cases(spark, overlap):
     assert got_ac  # the cases must actually exercise matches
     # separator fidelity: "e mail" text never matches dictionary "e-mail"
     assert not any(m[4].lower() == "e mail" for m in got_fsa)
-
-
-def test_fsa_dictionary_annotation_probability_threshold(spark):
-    stats = spark.createDataFrame(
-        [("keep", 10, 100), ("drop", 1, 100), ("all", 5, 5)],
-        "sf string, annotated_count long, total_count long",
-    )
-    d = build_fsa_dictionary(stats, min_annotation_probability=0.05)
-    kept = set().union(*(s for _h, s in d.by_n.values()))
-    assert kept == {"keep", "all"}
 
 
 def test_fsa_dictionary_rejects_boundary_edged_entries():
@@ -186,31 +188,10 @@ def test_fsa_multiword_offsets(spark):
     )
 
 
-def test_annotate_with_fsa_spotter_equals_ac(spark, fixture_dir, fx):
-    from dbpedia_spotlight_spark.plans.model_build import (
-        model_from_fixture_dir,
-    )
-    from dbpedia_spotlight_spark.plans.pipeline import annotate
-
-    model = model_from_fixture_dir(spark, fixture_dir)
-    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    sw = list(fx.stopwords.word)
-    res_ac = annotate(docs, model, stopwords=sw)
-    res_fsa = annotate(
-        docs, model, stopwords=sw, params=PipelineParams(spotter="fsa")
-    )
-    cols = ["mention_key", "uri", "final_score"]
-    a = {tuple(r) for r in res_ac.resolved.select(*cols).collect()}
-    b = {tuple(r) for r in res_fsa.resolved.select(*cols).collect()}
-    assert a == b
-
-
 def test_scan_spans_batch_equals_per_span():
     """The batched Arrow-batch sweep must emit exactly the per-span
     matches — mixed ASCII/non-ASCII, empties, chunk boundaries."""
     import random
-
-    from dbpedia_spotlight_spark.operators import fsa_spotting as FS
 
     rng = random.Random(11)
     vocab = ["alpha", "beta", "gamma", "delta", "new", "york", "café"]
@@ -222,7 +203,7 @@ def test_scan_spans_batch_equals_per_span():
         " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 30)))
         for _ in range(200)
     ] + ["", "café noir in new york", "Yahoo! and alpha"]
-    want = [sorted(FS._scan_span(t, fsa)) for t in texts]
+    want = [sorted(_scan_span(t, fsa)) for t in texts]
     got = [sorted(m) for m in FS._scan_spans_batch(texts, fsa)]
     assert got == want
 
@@ -275,8 +256,6 @@ def test_prefilter_never_changes_matches_and_rebuilds_after_pickle():
     import random
 
     import numpy as np
-
-    from dbpedia_spotlight_spark.operators import fsa_spotting as FS
 
     rng = random.Random(23)
     vocab = ["w%03d" % i for i in range(300)]

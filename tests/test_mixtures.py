@@ -230,8 +230,8 @@ def test_unknown_mixture_rejected(docs, model, fx):
 
 
 def test_combined_options_smoke(spark, fixture_dir, fx):
-    """All selectable options at once: FSA spotter + Porter2 stemming +
-    linear-regression mixture, through the full resolve() path."""
+    """Selectable options at once: Porter2 stemming + linear-regression
+    mixture, through the full resolve() path."""
     from dbpedia_spotlight_spark.plans.pipeline import resolve
 
     model = model_from_fixture_dir(spark, fixture_dir, stemmer="english")
@@ -240,9 +240,7 @@ def test_combined_options_smoke(spark, fixture_dir, fx):
         docs,
         model,
         stopwords=list(fx.stopwords.word),
-        params=PipelineParams(
-            spotter="fsa", stemmer="english", mixture="linreg"
-        ),
+        params=PipelineParams(stemmer="english", mixture="linreg"),
     )
     clusters = res.clusters.collect()
     assert clusters

@@ -1,7 +1,7 @@
 """End-to-end: Spark engine vs pure-Python oracle on the synthetic fixture.
 
 Checks (FIXTURES.md §5):
-  * mention set equality (engine AC spotter == oracle brute-force matcher)
+  * mention set equality (engine FSA spotter == oracle brute-force matcher)
   * link equality: resolved URI identical per mention; scores match to fp
     tolerance
   * pairwise F1 >= 0.99 on eval_pairs

@@ -91,8 +91,8 @@ def test_fsa_kernel_equals_ac_greedy(patterns, text):
     from dbpedia_spotlight_spark.operators.fsa_spotting import (
         FSADictionary,
         _greedy,
-        _scan_span,
     )
+    from test_fsa_spotting import _scan_span
 
     ac = AhoCorasick(patterns)
     want = spot_text(ac, text)  # greedy leftmost-longest, word-bounded
@@ -106,10 +106,8 @@ def test_fsa_kernel_equals_ac_greedy(patterns, text):
 def test_fsa_all_matches_are_word_bounded_ac_matches(patterns, text):
     """Every FSA match is an AC automaton match that is word-bounded on
     both sides (the overlap=True delta: AC also emits mid-word hits)."""
-    from dbpedia_spotlight_spark.operators.fsa_spotting import (
-        FSADictionary,
-        _scan_span,
-    )
+    from dbpedia_spotlight_spark.operators.fsa_spotting import FSADictionary
+    from test_fsa_spotting import _scan_span
 
     ac = AhoCorasick(patterns)
     all_ac = set(spot_text(ac, text, overlap=True))

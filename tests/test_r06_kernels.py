@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.operators.ann import (
     brute_force_topk,
-    cosine_expr,
     lsh_bucket_udf,
     lsh_topk,
     make_hyperplanes,
@@ -32,6 +31,27 @@ from dbpedia_spotlight_spark.operators.dedup import (
     simhash_dedup,
     word_shingles_udf,
 )
+
+
+def _dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _norm(a):
+    return F.sqrt(
+        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
+    )
+
+
+def cosine_expr(a, b):
+    """cosine(a, b) as a pure column expression (0 when either is zero):
+    the JVM fold order the Arrow kernels reproduce bit for bit."""
+    denom = _norm(a) * _norm(b)
+    return F.when(denom > 0, _dot(a, b) / denom).otherwise(0.0)
 
 
 def _rows(df, float_cols=()):
@@ -174,7 +194,7 @@ def test_simhash_kernel_matches_join_twin_with_id_aliasing(spark, dup_docs):
         .distinct()
         .filter(F.col("hamming") <= thr)
     )
-    got = simhash_dedup(dup_docs, hamming_threshold=thr, n_blocks=n_blocks)
+    got = simhash_dedup(dup_docs, hamming_threshold=thr)
     assert _rows(got) == _rows(twin)
 
 
@@ -222,7 +242,7 @@ def test_simhash_kernel_size_class_split(spark):
         .distinct()
         .filter(F.col("hamming") <= thr)
     )
-    got = simhash_dedup(docs, hamming_threshold=thr, n_blocks=n_blocks)
+    got = simhash_dedup(docs, hamming_threshold=thr)
     assert _rows(got) == _rows(twin)
     # the giant clone bucket must actually produce its full pair set
     clones = got.filter((F.col("id_a") < 100) & (F.col("id_b") < 100))

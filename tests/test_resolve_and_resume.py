@@ -101,6 +101,39 @@ def test_resume_skips_completed_stages(spark, fixture_dir, model, fx,
         P.annotate = orig
 
 
+def test_resumed_stages_run_no_schema_job(spark, fixture_dir, model, fx,
+                                          tmp_path_factory):
+    """Each stage's manifest entry records its schema, so a run whose
+    stages are all checkpointed reads them without a schema-inference
+    job: no Spark job runs before `clusters` is collected."""
+    ckpt = str(tmp_path_factory.mktemp("ckpt_schema"))
+    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
+    sw = list(fx.stopwords.word)
+    r1 = resolve(docs, model, stopwords=sw, store=CheckpointStore(spark, ckpt))
+    full = _cluster_map(r1.clusters)
+    r1.unpersist()
+
+    sc = spark.sparkContext
+    group = "test_resumed_stages_run_no_schema_job"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        r2 = resolve(docs, model, stopwords=sw,
+                     store=CheckpointStore(spark, ckpt))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r2.annotated is None  # every stage resumed
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _cluster_map(r2.clusters) == full
+
+    # an entry without its schema is not a completed stage
+    with open(f"{ckpt}/manifest.json") as f:
+        manifest = json.load(f)
+    del manifest["stages"]["clusters"]["schema"]
+    store = CheckpointStore(spark, ckpt)
+    store._commit_manifest(manifest)
+    assert not store.has("clusters") and store.has("resolved")
+
+
 def test_cc_superstep_resume(spark, tmp_path_factory):
     """Killing inside the CC loop resumes from the last superstep: the
     input edges are never read again, and the result is unchanged."""

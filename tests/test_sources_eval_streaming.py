@@ -99,13 +99,13 @@ def test_cli_end_to_end(fixture_dir, tmp_path):
     info = json.loads(r2.stdout.strip().splitlines()[-1])
     assert info["status"] == "ok" and info["clusters"] > 0
 
-    # annotate with the FSA spotter + XML output rendering
+    # annotate with XML output rendering
     out_xml = str(tmp_path / "annotated_xml")
     r3 = subprocess.run(
         [sys.executable, "-m", "dbpedia_spotlight_spark.cli", "annotate",
          "--documents", f"{fixture_dir}/documents.parquet",
          "--model-dir", model_dir, "--output", out_xml,
-         "--spotter", "fsa", "--format", "xml",
+         "--format", "xml",
          "--master", "local[2]", "--shuffle-partitions", "4"],
         capture_output=True, text=True, env=env, cwd=root,
         timeout=600,

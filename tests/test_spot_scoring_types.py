@@ -86,15 +86,13 @@ def test_type_filter_e2e(spark, fixture_dir, fx):
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet").limit(60)
     res = annotate(docs, model, stopwords=list(fx.stopwords.word))
     all_rows = res.scored.filter("rank = 1")
-    typed = type_filter(
-        all_rows, whitelist=("DBpedia:Person",), keep_untyped=False
-    )
+    typed = type_filter(all_rows, whitelist=("DBpedia:Person",))
     n_all, n_typed = all_rows.count(), typed.count()
     assert 0 < n_typed < n_all
-    for r in typed.collect()[:10]:
-        assert "DBpedia:Person" in list(r["types"])
-    # untyped policy: keep_untyped=True admits empty-type resources
-    typed_or_unknown = type_filter(
-        all_rows, whitelist=("DBpedia:Person",), keep_untyped=True
+    # the UNKNOWN policy: a resource with no types passes a whitelist
+    expected = sum(
+        1 for r in all_rows.collect()
+        if "DBpedia:Person" in r["types"] or not r["types"]
     )
-    assert typed_or_unknown.count() >= n_typed
+    assert n_typed == expected
+    assert any("DBpedia:Person" in r["types"] for r in typed.collect())

@@ -174,7 +174,7 @@ def test_ivf_topk_recall(vectors):
     }
     ivf = {
         r["query_id"]: r["neighbor_id"]
-        for r in ivf_topk(vectors, k=1, n_lists=4, n_probe=2).collect()
+        for r in ivf_topk(vectors, k=1, n_probe=2).collect()
     }
     agree = sum(1 for q, n in ivf.items() if bf.get(q) == n)
     # perturbed twins are near-identical vectors: they land in the same
