@@ -5,9 +5,10 @@ Blocking key = normalized surface form (MemorySurfaceFormStore.scala:43
 
 Surface-form frequencies are Zipfian, so blocks are skewed: one hot form
 can dominate a self-join. Blocks larger than `salt_block_cap` are split
-into ceil(n/cap) salt buckets by a deterministic hash of the mention key,
-and the task list enumerates the (bucket_i, bucket_j) pairs per block so
-no single task of a pairwise join exceeds ~cap² comparisons.
+into min(ceil(n/cap), N_SALTS_MAX) salt buckets by a deterministic hash
+of the mention key, and the task list enumerates the (bucket_i, bucket_j)
+pairs per block so no single task of a pairwise join exceeds ~cap²
+comparisons below N_SALTS_MAX·cap mentions.
 
 Counters (blocks split, max block size, task count) are returned for the
 per-partition lineage/metrics manifest. The resolve pipeline clusters by
@@ -23,6 +24,8 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PARAMS, PipelineParams
 from ..functions.normalize import sf_normalize_expr
+
+N_SALTS_MAX = 64
 
 
 @dataclass
@@ -57,7 +60,7 @@ def salted_blocks(
         "n_salt",
         F.least(
             F.ceil(F.col("block_size") / F.lit(cap)).cast("int"),
-            F.lit(params.n_salts_max),
+            F.lit(N_SALTS_MAX),
         ),
     )
 

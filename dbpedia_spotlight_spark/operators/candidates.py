@@ -29,6 +29,11 @@ from ..config import DEFAULT_PARAMS, PipelineParams
 from ..functions.similarity import edit_distance_score_expr
 from ..plans.model_build import ModelTables
 
+# DBTwoStepDisambiguator.scala:43 MAX_CANDIDATES
+MAX_CANDIDATES = 10
+# DBCandidateSearcher.scala:19 ADD_TOP_NORMALIZED_SFS
+FUZZY_TOP_N = 5
+
 
 def with_mention_key(mentions: DataFrame) -> DataFrame:
     return mentions.withColumn(
@@ -46,6 +51,8 @@ def generate_candidates(
     Output: mention_key, doc_id, begin, end, sf, cand_sf, sf_id,
             annotated_count, res_id, uri, pair_count, cand_prior,
             res_prior, support
+
+    `params` is not read; perfbench/traced.py still passes it.
     """
     mentions = with_mention_key(mentions)
     sf_stats = model.surface_form_stats
@@ -84,7 +91,7 @@ def generate_candidates(
     fuzzy = (
         fuzzy.withColumn("fuzzy_score", fuzzy_score)
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= params.fuzzy_top_n)
+        .filter(F.col("_rn") <= FUZZY_TOP_N)
         .drop("_rn", "fuzzy_score")
     )
 
@@ -111,7 +118,7 @@ def generate_candidates(
     )
     out = (
         out.withColumn("_rn", F.row_number().over(w10))
-        .filter(F.col("_rn") <= params.max_candidates)
+        .filter(F.col("_rn") <= MAX_CANDIDATES)
         .drop("_rn", "cand_sf_lower", "total_count", "lowercase_count")
     )
     return out

@@ -27,6 +27,19 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_PARAMS, PipelineParams
 from ..plans.model_build import ModelTables
 
+# FaderMixture.scala:9 constructor defaults (contextWeight, alpha,
+# surrogatesCount)
+FADER_CONTEXT_WEIGHT = 0.5
+FADER_ALPHA = 1000.0
+FADER_SURROGATES_COUNT = 1
+# LinearRegressionFeatureMixture weights: (feature, weight) over
+# {"P(e)", "P(c|e)", "P(s|e)"} + offset — the example instantiation from
+# LinearRegressionFeatureMixture.scala:11
+LINREGF_FEATURE_WEIGHTS = (
+    ("P(e)", 0.0216), ("P(c|e)", 0.0005), ("P(s|e)", 0.2021),
+)
+LINREGF_FEATURE_OFFSET = 1.5097
+
 
 def disambiguate(
     mention_candidates: DataFrame,
@@ -52,7 +65,7 @@ def disambiguate(
         ctx_scores, keys + ["res_id"], "left"
     ).join(nil_scores, keys, "left")
 
-    mixture = getattr(params, "mixture", "unweighted")
+    mixture = params.mixture
     if mixture == "unweighted":
         # UnweightedMixture.scala:12-17 — ln P(s|e) + ln P(c|e) + ln P(e)
         scored = joined.withColumn(
@@ -87,13 +100,13 @@ def disambiguate(
         # Fader(2)Mixture.scala — raw ln context × / + prior prominence.
         # The NIL pseudo-candidate reaches getScore with the constructor
         # defaults (prior 0.0, contextualScore −1), same as linreg, so its
-        # score is a params-dependent constant.
+        # score is a constant.
         from .mixtures import fader2_mixture, fader_mixture
 
-        cw = params.mixture_context_weight
-        al = params.mixture_alpha
+        cw = FADER_CONTEXT_WEIGHT
+        al = FADER_ALPHA
         if mixture == "fader":
-            sc = params.mixture_surrogates_count
+            sc = FADER_SURROGATES_COUNT
             raw = fader_mixture(
                 F.col("ctx_score"), F.col("res_prior"), cw, al, sc
             )
@@ -116,8 +129,6 @@ def disambiguate(
         # documented approximation.
         from .mixtures import linear_regression_feature_mixture
 
-        weights = params.mixture_feature_weights
-        offset = params.mixture_feature_offset
         cand_feats = {
             "P(s|e)": F.log("cand_prior"),
             "P(c|e)": F.col("ctx_score"),
@@ -130,10 +141,14 @@ def disambiguate(
         }
         scored = joined.withColumn(
             "raw_score",
-            linear_regression_feature_mixture(cand_feats, weights, offset),
+            linear_regression_feature_mixture(
+                cand_feats, LINREGF_FEATURE_WEIGHTS, LINREGF_FEATURE_OFFSET
+            ),
         ).withColumn(
             "nil_score",
-            linear_regression_feature_mixture(nil_feats, weights, offset),
+            linear_regression_feature_mixture(
+                nil_feats, LINREGF_FEATURE_WEIGHTS, LINREGF_FEATURE_OFFSET
+            ),
         )
     else:
         raise ValueError(f"unknown mixture: {mixture!r}")

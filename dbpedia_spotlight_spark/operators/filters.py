@@ -50,28 +50,15 @@ def support_filter(scored: DataFrame, support: int) -> DataFrame:
     return scored.filter(F.col("support") >= support)
 
 
-def type_filter(
-    scored: DataFrame,
-    whitelist: tuple[str, ...] = (),
-    blacklist: tuple[str, ...] = (),
-) -> DataFrame:
+def type_filter(scored: DataFrame, whitelist: tuple[str, ...]) -> DataFrame:
     """TypeFilter.scala:25 — type-set intersection, UNKNOWN policy: a
     resource with no types passes the whitelist."""
-    out = scored
-    if whitelist:
-        out = out.filter(
-            F.arrays_overlap(
-                F.col("types"), F.array(*[F.lit(t) for t in whitelist])
-            )
-            | (F.size("types") == 0)
+    return scored.filter(
+        F.arrays_overlap(
+            F.col("types"), F.array(*[F.lit(t) for t in whitelist])
         )
-    if blacklist:
-        out = out.filter(
-            ~F.arrays_overlap(
-                F.col("types"), F.array(*[F.lit(t) for t in blacklist])
-            )
-        )
-    return out
+        | (F.size("types") == 0)
+    )
 
 
 def uri_whitelist_filter(scored: DataFrame, uris: tuple[str, ...]) -> DataFrame:
@@ -101,8 +88,8 @@ def coreference_resolution(resolved: DataFrame) -> DataFrame:
     pct_second_rank); a mention with no space in its sf left-joins it on
     its word and copies its uri (NULL too) and scores if the donor's
     begin is strictly smaller. A donor at the mention's own begin never
-    counts and the struct order breaks ties, so mentions sharing a begin
-    (`overlap=True`) get one fixed answer.
+    counts and the struct order breaks ties, so mentions sharing a begin,
+    if the input holds any, get one fixed answer.
 
     One join equals the reference's sequential scan, which copies the
     donor's current, possibly rewritten, values: the first donor of a
@@ -155,12 +142,11 @@ def apply_result_filters(
         out = confidence_filter(out, params.confidence)
     if params.support > 0:
         out = support_filter(out, params.support)
-    if params.type_whitelist or params.type_blacklist:
-        out = type_filter(out, params.type_whitelist, params.type_blacklist)
+    if params.type_whitelist:
+        out = type_filter(out, params.type_whitelist)
     if params.uri_whitelist:
         out = uri_whitelist_filter(out, params.uri_whitelist)
-    if params.drop_list_of_pages:
-        out = junk_filter(out)
+    out = junk_filter(out)
     # the reference's final offset sort (AnnotationFilter.scala:85) is
     # per-document; a global orderBy would be a full shuffle sort at
     # corpus scale for no consumer — per-doc ordering is applied where a

@@ -22,13 +22,9 @@ Python work is O(tokens) vectorized + O(hits) scalar, vs O(chars) scalar
 for the AC walk. This is the spotter `annotate` runs. Output parity:
 identical mention set to the AC spotter (operators/spotting.py
 spot_documents, kept as the parity reference and the spot_exact_dict
-gate) in the default overlap=False mode; entries that start or end with
-a boundary character go to an embedded AC residue automaton
-(on_boundary="ac", as `annotate` builds the dictionary). With
-overlap=True the AC spotter reproduces the reference exactly — ALL
-automaton matches, even mid-word ones, since the word-boundary check
-lives inside the greedy filter (AhoCorasickSpotter.scala:118-153) —
-while this path only ever emits token-aligned spans.
+gate); entries that start or end with a boundary character go to an
+embedded AC residue automaton (on_boundary="ac", as `annotate` builds
+the dictionary).
 tests/test_fsa_spotting.py + test_properties.py assert set equality
 (property-tested on random dictionaries/texts); the driver gate
 spot_fsa_dict hashes against the same SQL oracle as the AC gate.
@@ -43,7 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..config import DEFAULT_PARAMS, PipelineParams
+from ..config import DEFAULT_PARAMS, MIN_SF_LENGTH, PipelineParams
 from .ahocorasick import BOUNDARY_CHARS, AhoCorasick, is_boundary
 from .spotting import MENTIONS_SCHEMA
 
@@ -181,10 +177,10 @@ class FSADictionary:
     verification. Entries with a leading/trailing boundary character
     cannot be token aligned; `on_boundary` picks the policy:
       * "raise"  — ValueError (strict; default for direct construction)
-      * "ac"     — route them to an embedded Aho-Corasick residue
-                   automaton scanned alongside the FSA (the pipeline
-                   path: real models contain 'Yahoo!', 'U.S.', …)
-      * "skip"   — drop them (recorded in self.skipped)
+      * "ac"     — route them (recorded in self.skipped) to an embedded
+                   Aho-Corasick residue automaton scanned alongside the
+                   FSA (the pipeline path: real models contain 'Yahoo!',
+                   'U.S.', …)
     """
 
     __slots__ = ("by_n", "max_n", "case_sensitive", "residue", "skipped",
@@ -192,7 +188,7 @@ class FSADictionary:
 
     def __init__(self, surface_forms, case_sensitive: bool = False,
                  on_boundary: str = "raise"):
-        if on_boundary not in ("raise", "ac", "skip"):
+        if on_boundary not in ("raise", "ac"):
             raise ValueError(f"on_boundary: {on_boundary!r}")
         self.case_sensitive = case_sensitive
         self.skipped: list[str] = []
@@ -226,7 +222,7 @@ class FSADictionary:
         self.max_n = max(self.by_n) if self.by_n else 1
         self.residue = (
             AhoCorasick(self.skipped, case_sensitive=case_sensitive)
-            if on_boundary == "ac" and self.skipped
+            if self.skipped
             else None
         )
         self._prefilter = None
@@ -456,9 +452,8 @@ def spot_documents_fsa(
     """documents(doc_id, spans) -> mentions(doc_id, span_idx, begin, end, sf).
 
     Same contract and output as spotting.spot_documents. `dictionary_bc`
-    is a broadcast FSADictionary (or a bare FSADictionary for tests)."""
-    overlap = params.overlap
-    min_len = params.min_sf_length
+    is a broadcast FSADictionary (or a bare FSADictionary for tests).
+    `params` is not read; perfbench/traced.py still passes it."""
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         key = id(dictionary_bc)
@@ -483,15 +478,11 @@ def spot_documents_fsa(
                     texts.append(span["text"])
             all_found = _scan_spans_batch(texts, fsa)
             for (doc_id, si, base), found in zip(meta, all_found):
-                if not overlap:
-                    found = _greedy(found)
-                else:
-                    found = sorted(found)
-                for b, e, sf in found:
+                for b, e, sf in _greedy(found):
                     # min-length AFTER the greedy filter, exactly like
                     # spot_documents (a short match may still block a
                     # longer overlap before being dropped)
-                    if e - b < min_len:
+                    if e - b < MIN_SF_LENGTH:
                         continue
                     rows["doc_id"].append(doc_id)
                     rows["span_idx"].append(si)

@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_PARAMS, PipelineParams
 from ..plans.model_build import ModelTables
 
+# GenerativeContextSimilarity.scala:27 smoothing lambda
+SMOOTHING_LAMBDA = 0.2
+
 
 def _lnsum(a, b):
     """log(e^a + e^b), numerically stable, column expression."""
@@ -79,11 +82,11 @@ def context_scores(
                 nil_scores(*keys, nil_ctx_score)).
 
     `keys` is (doc_id,) for whole-document context or
-    (doc_id, window_id) for MAX_CONTEXT window slicing."""
+    (doc_id, window_id) for MAX_CONTEXT window slicing. `params` is not
+    read; perfbench/traced.py still passes it."""
     keys = list(keys)
-    lam = params.smoothing_lambda
-    ln_lam = math.log(lam)
-    ln_1mlam = math.log(1.0 - lam)
+    ln_lam = math.log(SMOOTHING_LAMBDA)
+    ln_1mlam = math.log(1.0 - SMOOTHING_LAMBDA)
 
     tok = doc_token_stats(doc_tokens, model, keys)
 

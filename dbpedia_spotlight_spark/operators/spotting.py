@@ -25,7 +25,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..config import DEFAULT_PARAMS, PipelineParams
+from ..config import MIN_SF_LENGTH
 from .ahocorasick import AhoCorasick, spot_text
 
 MENTIONS_SCHEMA = (
@@ -66,19 +66,13 @@ def broadcast_automaton(spark, automaton: AhoCorasick):
     return spark.sparkContext.broadcast(automaton)
 
 
-def spot_documents(
-    documents: DataFrame,
-    automaton_bc,
-    params: PipelineParams = DEFAULT_PARAMS,
-) -> DataFrame:
+def spot_documents(documents: DataFrame, automaton_bc) -> DataFrame:
     """documents(doc_id, spans) -> mentions(doc_id, span_idx, begin, end, sf).
 
     `begin`/`end` are char offsets in the concatenated doc text
     (span.offset + within-span offset), matching
     model/SurfaceFormOccurrence.scala:19's textOffset.
     """
-    overlap = params.overlap
-    min_len = params.min_sf_length
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         key = id(automaton_bc)
@@ -96,8 +90,8 @@ def spot_documents(
                         continue
                     text = span["text"]
                     base = span["offset"]
-                    for start, ln in spot_text(ac, text, overlap=overlap):
-                        if ln < min_len:
+                    for start, ln in spot_text(ac, text):
+                        if ln < MIN_SF_LENGTH:
                             continue
                         rows["doc_id"].append(doc_id)
                         rows["span_idx"].append(si)

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config import PipelineParams
 from ..fixtures.porter2_vectors import VECTORS as _P2_VECTORS
 from ..functions import markup as _MK
 from ..functions.normalize import sf_normalize_expr, sf_normalize_sql
@@ -375,8 +374,7 @@ def q_context_scores(spark, sf_dir):
         F.broadcast(cand_ids)
     )
     ctx, _nil = context_scores(
-        mention_cands.select("doc_id", "res_id"), doc_tokens, model,
-        PipelineParams(),
+        mention_cands.select("doc_id", "res_id"), doc_tokens, model
     )
     return (
         ctx.join(F.broadcast(src_ids), "res_id")
@@ -592,11 +590,8 @@ def q_disambiguate_full(spark, sf_dir):
     )
     from ..operators.scoring import context_scores as ctx_op
 
-    ctx, nil = ctx_op(
-        cands.select("doc_id", "res_id"), doc_tokens, model,
-        PipelineParams(),
-    )
-    out = disambiguate(cands, ctx, nil, model, PipelineParams())
+    ctx, nil = ctx_op(cands.select("doc_id", "res_id"), doc_tokens, model)
+    out = disambiguate(cands, ctx, nil, model)
     return out.select(
         "mention_key", "begin", "sf", "uri", "rank",
         F.round("final_score", 6).alias("final_score"),
@@ -679,7 +674,7 @@ def q_fuzzy_candidates(spark, sf_dir):
     mentions = _mentions(spark, sf_dir).filter(
         F.col("doc_id").cast("bigint") < 40
     ).withColumn("end", F.col("begin") + F.length("sf"))
-    out = generate_candidates(mentions, model, PipelineParams())
+    out = generate_candidates(mentions, model)
     return out.select(
         "mention_key", "sf", "cand_sf", "uri",
         F.round("cand_prior", 6).alias("cand_prior"),

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..config import DEFAULT_PARAMS, PipelineParams
+
 
 def spotting_pr(predicted: DataFrame, gold: DataFrame) -> dict:
     """EvalSpotter semantics: sets keyed by (doc_id, begin/offset, sf)."""
@@ -78,7 +80,7 @@ def evaluate_corpus(
     gold_occurrences: DataFrame,
     model,
     stopwords: list[str],
-    params=None,
+    params: PipelineParams = DEFAULT_PARAMS,
 ) -> dict:
     """Run the full pipeline over a parsed evaluation corpus and emit the
     reference's printed metric block (EvaluateParagraphDisambiguator
@@ -91,10 +93,8 @@ def evaluate_corpus(
     (doc_id, uri, sf, offset)."""
     import time
 
-    from ..config import DEFAULT_PARAMS
     from .pipeline import annotate
 
-    params = params or DEFAULT_PARAMS
     spark = documents.sparkSession
     mem_model = _jvm_memory_mb(spark)
     t0 = time.time()

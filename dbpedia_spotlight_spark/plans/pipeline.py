@@ -73,13 +73,13 @@ def annotate(
     # mentions (a pandas-UDF scan) is referenced by several downstream
     # joins — cached, or the Python stage re-runs once per reference
     mentions = with_mention_key(
-        spot_documents_fsa(documents, fsa_bc, params)
+        spot_documents_fsa(documents, fsa_bc)
     ).join(span_map, ["doc_id", "span_idx"], "left").fillna(
         {"window_id": 0}
     ).cache()
-    cands = generate_candidates(mentions, model, params)
+    cands = generate_candidates(mentions, model)
     ctx, nil = context_scores(
-        cands, win_tokens, model, params, keys=("doc_id", "window_id")
+        cands, win_tokens, model, keys=("doc_id", "window_id")
     )
     scored = D.disambiguate(cands, ctx, nil, model, params)
     resolved = D.resolve_all_mentions(mentions, scored)
@@ -159,11 +159,11 @@ def clusters_by_uri(resolved: DataFrame) -> DataFrame:
     form one cluster, whose id is the smallest mention_key among them;
     NIL mentions (uri NULL) are singletons with their own key as id.
 
-    A mention_key (`doc_id:begin`) can carry several rows: with
-    `overlap=True` several spots start at one offset, and coreference
-    rewrites each of them separately, so one key may even hold two URIs.
-    A key belongs to exactly one cluster, that of the smallest URI over
-    its rows (NULLs ignored: a key with any linked row is linked).
+    The spotters emit at most one mention per offset, but `resolved` is
+    not required to: a mention_key (`doc_id:begin`) with several rows,
+    even rows of two URIs, belongs to exactly one cluster, that of the
+    smallest URI over its rows (NULLs ignored: a key with any linked row
+    is linked).
     """
     per_key = resolved.groupBy("mention_key").agg(F.min("uri").alias("uri"))
     # NIL keys each get a window partition of their own, so an all-NIL

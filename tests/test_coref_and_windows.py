@@ -122,8 +122,8 @@ def test_coref_empty_input(spark):
 
 
 def test_coref_mentions_sharing_a_begin_are_deterministic(spark):
-    """With `overlap=True` several spots start at one offset. A donor at a
-    mention's own begin never counts; donors at one begin are ordered by
+    """Several mentions may start at one offset. A donor at a mention's
+    own begin never counts; donors at one begin are ordered by
     (uri, final_score, pct_second_rank), NULL uri first."""
     rows = [
         # a donor and a mention of its word at one begin: no rewrite

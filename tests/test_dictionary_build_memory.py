@@ -100,7 +100,7 @@ def test_fsa_build_memory_bounded_large():
     tracemalloc.start()
     tracemalloc.reset_peak()
     before, _ = tracemalloc.get_traced_memory()
-    d = FSADictionary(_phrases(N_PHRASES), on_boundary="skip")
+    d = FSADictionary(_phrases(N_PHRASES), on_boundary="ac")
     end, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     built = end - before

@@ -4,7 +4,6 @@ Aho-Corasick spotter (FSASpotter.scala parity path)."""
 import pytest
 from pyspark.sql import functions as F
 
-from dbpedia_spotlight_spark.config import PipelineParams
 from dbpedia_spotlight_spark.operators import fsa_spotting as FS
 from dbpedia_spotlight_spark.operators.fsa_spotting import (
     build_fsa_dictionary,
@@ -47,8 +46,7 @@ def test_fsa_equals_ac_on_fixture(spark, fixture_dir, stats):
     assert got_ac, "fixture must produce mentions"
 
 
-@pytest.mark.parametrize("overlap", [False, True])
-def test_fsa_equals_ac_synthetic_edge_cases(spark, overlap):
+def test_fsa_equals_ac_synthetic_edge_cases(spark):
     """Punctuation separators, multi-word phrases, nested/overlapping
     dictionary entries, case-insensitivity, phrase-internal hyphens."""
     sfs = [
@@ -81,11 +79,10 @@ def test_fsa_equals_ac_synthetic_edge_cases(spark, overlap):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    params = PipelineParams(overlap=overlap)
     ac = broadcast_automaton(spark, build_automaton(sfs))
-    got_ac = _mentions_set(spot_documents(docs, ac, params))
+    got_ac = _mentions_set(spot_documents(docs, ac))
     d = broadcast_fsa_dictionary(spark, build_fsa_dictionary(sfs))
-    got_fsa = _mentions_set(spot_documents_fsa(docs, d, params))
+    got_fsa = _mentions_set(spot_documents_fsa(docs, d))
     assert got_fsa == got_ac
     assert got_ac  # the cases must actually exercise matches
     # separator fidelity: "e mail" text never matches dictionary "e-mail"
@@ -112,8 +109,7 @@ def _docs_from_texts(spark, texts):
     )
 
 
-@pytest.mark.parametrize("overlap", [False, True])
-def test_fsa_boundary_residue_equals_ac(spark, overlap):
+def test_fsa_boundary_residue_equals_ac(spark):
     """on_boundary='ac' routes 'Yahoo!'/'U.S.'-style entries to the
     embedded residue automaton; combined output must equal the pure-AC
     spotter over the SAME dictionary (greedy runs over the union)."""
@@ -125,45 +121,29 @@ def test_fsa_boundary_residue_equals_ac(spark, overlap):
         "no matches",
     ]
     docs = _docs_from_texts(spark, texts)
-    params = PipelineParams(overlap=overlap)
     ac = broadcast_automaton(spark, build_automaton(sfs))
-    got_ac = _mentions_set(spot_documents(docs, ac, params))
+    got_ac = _mentions_set(spot_documents(docs, ac))
     d = broadcast_fsa_dictionary(
         spark, build_fsa_dictionary(sfs, on_boundary="ac")
     )
-    got_fsa = _mentions_set(spot_documents_fsa(docs, d, params))
-    if overlap:
-        # AC emits even mid-word matches with overlap=True; the FSA path
-        # only word-bounded ones — subset, and equal after bound filtering
-        assert got_fsa <= got_ac
-        assert any(m[4] == "Yahoo!" for m in got_fsa)
-    else:
-        assert got_fsa == got_ac
-        assert any(m[4] == "Yahoo!" for m in got_fsa)
-        assert any(m[4] == "U.S." for m in got_fsa)
-
-
-def test_fsa_on_boundary_skip_records_skipped():
-    d = build_fsa_dictionary(
-        ["Yahoo!", "plain"], on_boundary="skip"
-    )
-    assert d.skipped == ["Yahoo!"]
-    assert d.residue is None
+    got_fsa = _mentions_set(spot_documents_fsa(docs, d))
+    assert got_fsa == got_ac
+    assert any(m[4] == "Yahoo!" for m in got_fsa)
+    assert any(m[4] == "U.S." for m in got_fsa)
 
 
 def test_fsa_case_sensitive(spark):
     sfs = ["Spark", "New York"]
     texts = ["Spark and spark in New York and new york"]
     docs = _docs_from_texts(spark, texts)
-    params = PipelineParams(case_sensitive=True)
     ac = broadcast_automaton(
         spark, build_automaton(sfs, case_sensitive=True)
     )
-    got_ac = _mentions_set(spot_documents(docs, ac, params))
+    got_ac = _mentions_set(spot_documents(docs, ac))
     d = broadcast_fsa_dictionary(
         spark, build_fsa_dictionary(sfs, case_sensitive=True)
     )
-    got_fsa = _mentions_set(spot_documents_fsa(docs, d, params))
+    got_fsa = _mentions_set(spot_documents_fsa(docs, d))
     assert got_fsa == got_ac
     matched = {m[4] for m in got_fsa}
     assert "Spark" in matched and "New York" in matched

@@ -14,13 +14,15 @@ them), but an unreached one is not an error.
 A second test does the same for parameters: every parameter of a live
 function (outside `fixtures/`) that a call may leave out or must give by
 keyword is given by some call in a non-test source (an entry point or a
-package module), or is declared here with its reason. A call gives it
-when a call of the function's short name (the class name for `__init__`)
-passes it by keyword, positionally at or past its index, or through
-`*`/`**`. A parameter nobody gives is a constant; one only tests give is
-an option kept for tests, which is declared only when it is a size gate
-or path switch letting a test reach at test size what production reaches
-at scale.
+package module), or is declared here with its reason. A field with a
+default of a `@dataclass` is a parameter of its generated `__init__`.
+A call gives it when a call of the function's short name (the class name
+for `__init__` and for a dataclass) passes it by keyword, positionally at
+or past its index, or through `*`/`**`. A parameter nobody gives is a
+constant; one only tests give is an option kept for tests, which is
+declared only when it is a size gate or path switch letting a test reach
+at test size what production reaches at scale, or a reference mode that
+tests compare the production path against.
 
 A third test checks imports: every name a package module imports is used
 in that module, so a dead import line cannot hide behind the rule that an
@@ -44,10 +46,21 @@ DECLARED_PARAMETERS = {
     "operators.redirects.resolve_redirects_df.max_driver_edges":
         "size gate: lets a test reach the distributed closure that redirect "
         "tables past DRIVER_CLOSURE_MAX_EDGES take",
-    "operators.spotting.spot_documents.params":
-        "the AC spotter is the FSA spotter's parity reference: tests give "
-        "both the same PipelineParams (overlap=True included), a dataclass "
-        "field this guard does not follow",
+    "operators.ahocorasick.spot_text.overlap":
+        "reference mode: the reference AhoCorasickSpotter's overlap output, "
+        "which test_properties.py and test_oracle_core.py compare the greedy "
+        "filter against",
+    "config.PipelineParams.case_sensitive":
+        "read through params by perfbench/traced.py's hand-made copy of "
+        "resolve; ROADMAP item 1, which replaces that copy, makes it a "
+        "constant",
+    "config.PipelineParams.max_context":
+        "read through params by perfbench/traced.py's hand-made copy of "
+        "resolve; ROADMAP item 1, which replaces that copy, makes it a "
+        "constant",
+    "config.PipelineParams.salt_block_cap":
+        "size gate: lets test_blocking_pairs_cc split blocks at test size; "
+        "ROADMAP item 1 deletes operators/blocking.py, its only reader",
 }
 
 
@@ -142,22 +155,40 @@ def test_only_declared_functions_are_unreached():
 
 
 def _callables(module, tree):
-    """(dotted name, names a call of it goes by, def node, leading
-    parameters a call does not spell) of top-level functions and methods;
-    `__init__` is called by its class name (or through `super()`)."""
+    """(dotted name, names a call of it goes by, optional parameters, whether
+    it is a constructor) of top-level functions, methods and dataclasses;
+    `__init__` and a dataclass are called by the class name (`__init__`
+    also through `super()`)."""
     for node in tree.body:
         if isinstance(node, _DEFS):
-            yield f"{module}.{node.name}", {node.name}, node, 0
+            yield (f"{module}.{node.name}", {node.name},
+                   _optional_parameters(node, 0), False)
         elif isinstance(node, ast.ClassDef):
+            if _is_dataclass(node):
+                yield (f"{module}.{node.name}", {node.name},
+                       _defaulted_fields(node), True)
             for item in node.body:
                 if not isinstance(item, _DEFS):
                     continue
                 static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
                              for d in item.decorator_list)
-                names = ({node.name, item.name} if item.name == "__init__"
-                         else {item.name})
-                yield (f"{module}.{node.name}.{item.name}", names, item,
-                       0 if static else 1)
+                init = item.name == "__init__"
+                yield (f"{module}.{node.name}.{item.name}",
+                       {node.name, item.name} if init else {item.name},
+                       _optional_parameters(item, 0 if static else 1), init)
+
+
+def _is_dataclass(node):
+    """Whether a class is decorated `@dataclass` or `@dataclass(...)`."""
+    return "dataclass" in set(_names(node.decorator_list))
+
+
+def _defaulted_fields(node):
+    """(name, positional index) of every dataclass field with a default:
+    the generated `__init__` takes the fields in declaration order."""
+    fields = [item for item in node.body if isinstance(item, ast.AnnAssign)]
+    return [(f.target.id, i) for i, f in enumerate(fields)
+            if f.value is not None]
 
 
 def _optional_parameters(node, skip):
@@ -192,19 +223,20 @@ def _calls(trees):
 
 def unpassed_parameters(entries, modules):
     """`module.function.parameter` of every optional parameter of a live
-    function (outside `fixtures/`) that no call in `entries` or `modules`
-    gives: not by keyword, not positionally, not through `*`/`**`."""
+    function, and `module.Class.field` of every defaulted dataclass field
+    (outside `fixtures/`), that no call in `entries` or `modules` gives:
+    not by keyword, not positionally, not through `*`/`**`."""
     _, live = _live(entries, modules)
     calls = _calls([*entries, *modules.values()])
     unpassed = set()
     for module, tree in modules.items():
         if module.startswith("fixtures."):
             continue
-        for dotted, names, node, skip in _callables(module, tree):
-            if dotted not in live and node.name != "__init__":
+        for dotted, names, params, constructor in _callables(module, tree):
+            if dotted not in live and not constructor:
                 continue
             sites = [c for n in names for c in calls.get(n, ())]
-            for param, index in _optional_parameters(node, skip):
+            for param, index in params:
                 if not any(spreads or param in keywords
                            or (index is not None and index < n_positional)
                            for n_positional, keywords, spreads in sites):
@@ -219,16 +251,21 @@ def test_only_declared_parameters_are_unpassed():
 
 
 def test_parameter_guard_reports_a_test_only_keyword():
-    """The checker on in-memory sources: `only_tests.k` is given by the
-    test source alone (which the checker is never shown), `used.k` by a
-    non-test call; only the first is reported."""
+    """The checker on in-memory sources: `only_tests.k` and the dataclass
+    field `P.only_tests` are given by the test source alone (which the
+    checker is never shown), `used.k` and `P.used` by a non-test call, and
+    `P.x` has no default; only the first two are reported."""
     package = {"mod": ast.parse(
+        "from dataclasses import dataclass\n"
         "def only_tests(x, k=1):\n    return x + k\n"
-        "def used(x, k=1):\n    return x * k\n")}
-    entry = ast.parse("from pkg.mod import only_tests, used\n"
-                      "only_tests(1)\nused(1, k=2)\n")
-    test_source = ast.parse("only_tests(1, k=3)\n")
-    assert unpassed_parameters([entry], package) == {"mod.only_tests.k"}
+        "def used(x, k=1):\n    return x * k\n"
+        "@dataclass(frozen=True)\n"
+        "class P:\n    x: int\n    used: int = 1\n    only_tests: int = 2\n")}
+    entry = ast.parse("from pkg.mod import P, only_tests, used\n"
+                      "only_tests(1)\nused(1, k=2)\nP(0, used=3)\n")
+    test_source = ast.parse("only_tests(1, k=3)\nP(0, only_tests=4)\n")
+    assert unpassed_parameters([entry], package) == {
+        "mod.only_tests.k", "mod.P.only_tests"}
     # what the test source passes counts only once it is a non-test source
     assert unpassed_parameters([entry, test_source], package) == set()
 

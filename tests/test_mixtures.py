@@ -121,43 +121,43 @@ def _mini_inputs(spark):
 
 def test_fader_mixtures_formulas_exact(spark):
     """FaderMixture.scala:20-30 / Fader2Mixture.scala:17-22 against
-    hand-computed values (cw=0.5, alpha=1000, surrogates=2)."""
+    hand-computed values (cw=0.5, alpha=1000, surrogates=1)."""
     import math
 
     from dbpedia_spotlight_spark.config import PipelineParams as P
     from dbpedia_spotlight_spark.operators.disambiguate import disambiguate
 
     cands, ctx, nil, model = _mini_inputs(spark)
-    params = dict(mixture_context_weight=0.5, mixture_alpha=1000.0,
-                  mixture_surrogates_count=2)
 
     rows = {
         r["uri"]: r
         for r in disambiguate(
-            cands, ctx, nil, model, P(mixture="fader", **params)
+            cands, ctx, nil, model, P(mixture="fader")
         ).collect()
     }
 
     def fader(ctx_s, prior):
         prom = 1 + math.log(1 + prior * 1000.0)
-        return ctx_s * (0.5 / 2 + 0.5 * prom)
+        return ctx_s * (0.5 / 1 + 0.5 * prom)
 
-    # NIL constant: ctx −1, prior 0 → −(0.25 + 0.5)
+    # NIL constant: ctx −1, prior 0 → −(0.5 + 0.5)
     if rows:
         for uri, prior, c in (("Foo", 0.02, -2.0), ("Bar", 0.05, -3.0)):
             if uri in rows:
                 assert abs(rows[uri]["raw_score"] - fader(c, prior)) < 1e-9
-                assert abs(rows[uri]["nil_score"] - (-0.75)) < 1e-12
-    # fader scores here are all below the NIL constant (ctx very negative
-    # relative to −0.75·scale)? compute: fader(−2, .02)=−2·(.25+.5·prom);
-    # prom=1+ln(21)=4.04 → −4.55 < −0.75 → filtered. Verify the gate did
-    # its job rather than silently passing:
+                assert abs(rows[uri]["nil_score"] - (-1.0)) < 1e-12
+    # fader scores here are all below the NIL constant:
+    # fader(−2, .02)=−2·(.5+.5·prom), prom=1+ln(21)=4.04 → −5.04 < −1;
+    # fader(−3, .05)=−3·(.5+.5·prom), prom=1+ln(51)=4.93 → −8.90 < −1;
+    # both filtered. Verify the gate did its job rather than silently
+    # passing:
+    assert fader(-2.0, 0.02) < -1.0 and fader(-3.0, 0.05) < -1.0
     assert rows == {}
 
     rows2 = {
         r["uri"]: r
         for r in disambiguate(
-            cands, ctx, nil, model, P(mixture="fader2", **params)
+            cands, ctx, nil, model, P(mixture="fader2")
         ).collect()
     }
 
