@@ -18,6 +18,7 @@ import sys
 
 from .config import PipelineParams
 from .session import get_spark
+from .sources.checkpoint import CheckpointStore, write_counted
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
@@ -151,7 +152,7 @@ def main(argv=None) -> None:
             )
 
             docs = tiny_corpus_documents(read_tiny_corpus(spark, args.input))
-            n_docs = _write_counted(docs, f"{args.output}/documents")
+            n_docs = write_counted(docs, f"{args.output}/documents")
             n_occ = 0
         else:
             from .sources.wiki_corpus import (
@@ -164,8 +165,8 @@ def main(argv=None) -> None:
             else:
                 pages = spark.read.parquet(args.input)
             docs, occs = wiki_page_occurrences(pages)
-            n_docs = _write_counted(docs, f"{args.output}/documents")
-            n_occ = _write_counted(occs, f"{args.output}/occurrences")
+            n_docs = write_counted(docs, f"{args.output}/documents")
+            n_occ = write_counted(occs, f"{args.output}/occurrences")
         print(json.dumps(
             {"status": "ok", "documents": n_docs, "occurrences": n_occ}
         ))
@@ -186,9 +187,7 @@ def main(argv=None) -> None:
         }
         docs, gold = readers[args.corpus_format](spark, args.corpus)
         model = _load_model(spark, args.model_dir)
-        stopwords = _load_stopwords(spark, args.model_dir)
-        metrics = evaluate_corpus(docs, gold, model, stopwords,
-                                  _params(args))
+        metrics = evaluate_corpus(docs, gold, model, _params(args))
         # the reference prints its timing/footprint block to stderr
         # (EvaluateSpotlightModel.scala:20-55); JSON stays on stdout
         from .plans.evaluation import format_metric_block
@@ -198,14 +197,13 @@ def main(argv=None) -> None:
         return
 
     model = _load_model(spark, args.model_dir)
-    stopwords = _load_stopwords(spark, args.model_dir)
     docs = spark.read.parquet(args.documents)
     params = _params(args)
 
     if args.cmd == "annotate":
         from .plans.pipeline import annotate
 
-        res = annotate(docs, model, stopwords, params)
+        res = annotate(docs, model, params)
         fmt = getattr(args, "format", "parquet")
         if fmt == "parquet":
             out = res.resolved
@@ -217,38 +215,24 @@ def main(argv=None) -> None:
                 confidence=params.confidence, support=params.support,
             )
         try:
-            n = _write_counted(out, args.output)
+            n = write_counted(out, args.output)
         finally:
             res.unpersist()
         print(json.dumps({"status": "ok", "rows": n}))
     elif args.cmd == "resolve":
         from .plans.pipeline import resolve
-        from .sources.checkpoint import CheckpointStore
 
         store = (
             CheckpointStore(spark, params.checkpoint_dir)
             if params.checkpoint_dir
             else None
         )
-        res = resolve(docs, model, stopwords, params, store=store)
+        res = resolve(docs, model, params, store=store)
         try:
-            n = _write_counted(res.clusters, args.output)
+            n = write_counted(res.clusters, args.output)
         finally:
             res.unpersist()
         print(json.dumps({"status": "ok", "clusters": n}))
-
-
-def _write_counted(df, path: str) -> int:
-    """Write `df` as parquet and return how many rows the write wrote,
-    observed during the write itself rather than by a second action."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return obs.get["rows"]
 
 
 def _load_model(spark, model_dir: str):

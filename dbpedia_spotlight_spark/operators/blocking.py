@@ -10,9 +10,9 @@ of the mention key, and the task list enumerates the (bucket_i, bucket_j)
 pairs per block so no single task of a pairwise join exceeds ~cap²
 comparisons below N_SALTS_MAX·cap mentions.
 
-Counters (blocks split, max block size, task count) are returned for the
-per-partition lineage/metrics manifest. The resolve pipeline clusters by
-URI (plans/pipeline.clusters_by_uri) and does not block.
+Counters (blocks split, max block size, task count) are returned to the
+caller. The resolve pipeline clusters by URI
+(plans/pipeline.clusters_by_uri) and does not block.
 """
 
 from __future__ import annotations

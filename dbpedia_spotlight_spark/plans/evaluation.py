@@ -79,7 +79,6 @@ def evaluate_corpus(
     documents: DataFrame,
     gold_occurrences: DataFrame,
     model,
-    stopwords: list[str],
     params: PipelineParams = DEFAULT_PARAMS,
 ) -> dict:
     """Run the full pipeline over a parsed evaluation corpus and emit the
@@ -114,46 +113,50 @@ def evaluate_corpus(
         docs = documents
     n_docs = docs.count()
     mem_corpus = _jvm_memory_mb(spark)
-    res = annotate(docs, model, stopwords, params)
+    res = annotate(docs, model, params)
     gold = gold_occurrences.select("doc_id", "offset", "sf", "uri").cache()
-    spot = spotting_pr(res.mentions, gold)
-    dis = disambiguation_metrics(res.scored, gold)
-    # annotation wall time: annotate() is lazy — the spotting/linking
-    # actions above forced it, so the window covers tokenize+spot+
-    # disambiguate exactly like the reference's timed foreach
-    # (EvaluateSpotlightModel.scala:41-52)
-    annotation_time = time.time() - t0
-    prior = prior_only_baseline(res.candidates).select(
-        "mention_key", F.col("uri").alias("prior_uri")
-    )
-    mention_gold = gold.select(
-        F.concat_ws(":", "doc_id", F.col("offset").cast("string")).alias(
-            "mention_key"
-        ),
-        F.col("uri").alias("gold_uri"),
-    )
-    prior_hits = mention_gold.join(prior, "mention_key", "left")
-    n_gold = mention_gold.count()
-    prior_acc = (
-        prior_hits.filter(F.col("prior_uri") == F.col("gold_uri")).count()
-        / n_gold
-        if n_gold
-        else 0.0
-    )
-    return {
-        "spotting": spot,
-        "disambiguation": dis,
-        "prior_baseline_accuracy": prior_acc,
-        "n_documents": n_docs,
-        "n_gold_occurrences": n_gold,
-        "annotation_time_sec": round(annotation_time, 3),
-        "annotation_time_avg_sec": round(
-            annotation_time / n_docs if n_docs else 0.0, 6
-        ),
-        "memory_footprint_model_mb": mem_model,
-        "memory_footprint_corpus_mb": mem_corpus,
-        "memory_footprint_mb": _jvm_memory_mb(spark),
-    }
+    try:
+        spot = spotting_pr(res.mentions, gold)
+        dis = disambiguation_metrics(res.scored, gold)
+        # annotation wall time: annotate() is lazy — the spotting/linking
+        # actions above forced it, so the window covers tokenize+spot+
+        # disambiguate exactly like the reference's timed foreach
+        # (EvaluateSpotlightModel.scala:41-52)
+        annotation_time = time.time() - t0
+        prior = prior_only_baseline(res.candidates).select(
+            "mention_key", F.col("uri").alias("prior_uri")
+        )
+        mention_gold = gold.select(
+            F.concat_ws(":", "doc_id", F.col("offset").cast("string")).alias(
+                "mention_key"
+            ),
+            F.col("uri").alias("gold_uri"),
+        )
+        prior_hits = mention_gold.join(prior, "mention_key", "left")
+        n_gold = mention_gold.count()
+        prior_acc = (
+            prior_hits.filter(F.col("prior_uri") == F.col("gold_uri")).count()
+            / n_gold
+            if n_gold
+            else 0.0
+        )
+        return {
+            "spotting": spot,
+            "disambiguation": dis,
+            "prior_baseline_accuracy": prior_acc,
+            "n_documents": n_docs,
+            "n_gold_occurrences": n_gold,
+            "annotation_time_sec": round(annotation_time, 3),
+            "annotation_time_avg_sec": round(
+                annotation_time / n_docs if n_docs else 0.0, 6
+            ),
+            "memory_footprint_model_mb": mem_model,
+            "memory_footprint_corpus_mb": mem_corpus,
+            "memory_footprint_mb": _jvm_memory_mb(spark),
+        }
+    finally:
+        res.unpersist()
+        gold.unpersist()
 
 
 def format_metric_block(metrics: dict) -> str:

@@ -49,7 +49,6 @@ class AnnotateResult:
 def annotate(
     documents: DataFrame,
     model: ModelTables,
-    stopwords: list[str],
     params: PipelineParams = DEFAULT_PARAMS,
 ) -> AnnotateResult:
     # on_boundary="ac": real models contain boundary-edged surface forms
@@ -64,7 +63,7 @@ def annotate(
         ),
     )
     win_tokens, span_map = window_token_arrays(
-        documents, stopwords, params.max_context, stemmer=params.stemmer
+        documents, model.stopwords, params.max_context, stemmer=params.stemmer
     )
     # win_tokens feeds both the candidate context scores and the NIL
     # scores. It is not cached: a cold call ran faster recomputing it
@@ -103,7 +102,6 @@ class ResolveResult:
 def resolve(
     documents: DataFrame,
     model: ModelTables,
-    stopwords: list[str],
     params: PipelineParams = DEFAULT_PARAMS,
     store=None,
 ) -> ResolveResult:
@@ -126,7 +124,7 @@ def resolve(
 
     def _annotate():
         if "res" not in ann_holder:
-            ann_holder["res"] = annotate(documents, model, stopwords, params)
+            ann_holder["res"] = annotate(documents, model, params)
         return ann_holder["res"]
 
     mentions = ck("mentions", lambda: _annotate().mentions)

@@ -1,9 +1,9 @@
 """Per-stage checkpoint store with an atomic manifest — the resume backbone.
 
-Every stage checkpoints with per-partition lineage so a killed run
-resumes from the last completed stage or CC superstep. The reference's
-analog is the Kryo memory-store dump (db/memory/MemoryStore.scala:149-199);
-ours is a parquet directory per stage.
+Every stage is checkpointed so a killed run resumes from the last
+completed stage or CC superstep. The reference's analog is the Kryo
+memory-store dump (db/memory/MemoryStore.scala:149-199), which writes
+each table once; ours is a parquet directory per stage, written once.
 
 Stage data is written to `<base>/<stage>/`, then the manifest entry is
 committed by writing `manifest.json.tmp` + atomic rename. A stage counts
@@ -11,11 +11,10 @@ as complete ONLY if it appears in the manifest with its schema, so a kill
 mid-write never yields a half-stage (the orphan directory is overwritten
 on retry).
 
-Manifest entries carry the row count, per-partition row counts, an empty
-`counters` map, lineage (which upstream stages fed this one) and the
-stage's schema, which `read()` uses so a resumed stage runs no
-schema-inference job. Per-partition lineage: every checkpointed DataFrame
-is written with a `_partition_id` column (spark_partition_id()).
+Manifest entries carry the row count (observed during the write, so a
+stage costs one Spark action), lineage (which upstream stages fed this
+one), the completion time and the stage's schema, which `read()` uses so
+a resumed stage runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -25,9 +24,19 @@ import os
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+def write_counted(df: DataFrame, path: str) -> int:
+    """Write `df` as parquet and return how many rows the write wrote,
+    observed during the write itself rather than by a second action."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get["rows"]
 
 
 class CheckpointStore:
@@ -71,32 +80,20 @@ class CheckpointStore:
         lineage: list[str] | None = None,
     ) -> DataFrame:
         """Materialize a stage; returns the re-read (lineage-truncated) DF."""
-        tagged = df.withColumn("_partition_id", F.spark_partition_id())
-        tagged.write.mode("overwrite").parquet(self.path(stage))
-        # the schema just written: inferring it would cost a job
-        out = self.spark.read.schema(tagged.schema).parquet(self.path(stage))
-
-        per_part = {
-            str(r["_partition_id"]): r["n"]
-            for r in out.groupBy("_partition_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+        rows = write_counted(df, self.path(stage))
         manifest = self.manifest()
         manifest["stages"][stage] = {
-            "rows": int(sum(per_part.values())),
-            "partitions": per_part,
-            "counters": {},
+            "rows": rows,
             "lineage": lineage or [],
             "schema": df.schema.json(),
             "completed_at": time.time(),
         }
         self._commit_manifest(manifest)
-        return out.drop("_partition_id")
+        # the schema just written: inferring it would cost a job
+        return self.spark.read.schema(df.schema).parquet(self.path(stage))
 
     def read(self, stage: str) -> DataFrame:
-        """A completed stage, read with its recorded schema (which leaves
-        `_partition_id` out)."""
+        """A completed stage, read with its recorded schema."""
         entry = self.manifest()["stages"][stage]
         schema = StructType.fromJson(json.loads(entry["schema"]))
         return self.spark.read.schema(schema).parquet(self.path(stage))

@@ -1,6 +1,7 @@
 """What one CLI call costs and leaves behind in the session: `resolve` runs
-a single action, reads the model without schema-inference jobs, takes its
-printed count from the write, releases its caches, and runs with the
+a single action (one write per checkpointed stage), reads the model
+without schema-inference jobs, takes its printed count from the write,
+releases its caches (so does `evaluate_corpus`), and runs with the
 stopwords the model was built with."""
 
 import dataclasses
@@ -16,6 +17,7 @@ from dbpedia_spotlight_spark.fixtures.generator import (
     generate,
     write_parquet,
 )
+from dbpedia_spotlight_spark.plans.evaluation import evaluate_corpus
 from dbpedia_spotlight_spark.plans.model_build import MODEL_SCHEMAS
 
 # not the generator's list, so a model that lost them is caught
@@ -77,16 +79,28 @@ def test_cli_call_releases_its_caches(spark, built, tmp_path, capsys, cmd):
     assert _persisted_ids(spark) - before == set()
 
 
-def _executions(spark, job_ids: set[int]) -> dict[str, set[int]]:
-    """SQL execution description -> the ids among `job_ids` it ran."""
+def test_evaluate_corpus_releases_its_caches(spark, built):
+    fx_dir, model_dir = built
+    docs = spark.read.parquet(f"{fx_dir}/documents.parquet")
+    gold = spark.read.parquet(f"{fx_dir}/gold_occurrences.parquet")
+    model = cli._load_model(spark, model_dir)
+    before = _persisted_ids(spark)
+    metrics = evaluate_corpus(docs, gold, model)
+    assert metrics["n_gold_occurrences"] > 0
+    assert _persisted_ids(spark) - before == set()
+
+
+def _executions(spark, job_ids: set[int]) -> list[tuple[str, set[int]]]:
+    """(description, the ids among `job_ids` it ran) of each SQL
+    execution that ran any of them."""
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    out: dict[str, set[int]] = {}
+    out = []
     for i in range(execs.size()):
         e = execs.apply(i)
         keys = e.jobs().keys().toList()
         jobs = {keys.apply(k) for k in range(keys.size())} & job_ids
         if jobs:
-            out.setdefault(e.description(), set()).update(jobs)
+            out.append((e.description(), jobs))
     return out
 
 
@@ -109,9 +123,36 @@ def test_cli_resolve_runs_one_action(spark, built, tmp_path, capsys):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     execs = _executions(spark, jobs)
-    actions = sorted(d.split(" at ")[0] for d in execs)
+    actions = sorted(d.split(" at ")[0] for d, _ in execs)
     assert actions == ["parquet", "toArrow"], execs
-    outside = jobs - set().union(*execs.values())
+    outside = jobs - set().union(*(j for _, j in execs))
     assert len(outside) <= 1, f"{len(outside)} jobs outside SQL: {outside}"
     assert out["clusters"] == \
         spark.read.parquet(str(tmp_path / "out")).count() > 0
+
+
+def test_cli_resolve_checkpointed_runs_no_collect(spark, built, tmp_path,
+                                                  capsys):
+    """A checkpointed stage is one counted write: the call's SQL
+    executions are parquet writes (one per stage, then the output) and
+    the dictionary's toArrow, with no read-back of a stage to count it."""
+    fx_dir, model_dir = built
+    sc = spark.sparkContext
+    group = "test_cli_resolve_checkpointed_runs_no_collect"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = _main(capsys, ["resolve", "--no-coref",
+                             "--documents", f"{fx_dir}/documents.parquet",
+                             "--model-dir", model_dir,
+                             "--checkpoint-dir", str(tmp_path / "ckpt"),
+                             "--output", str(tmp_path / "out")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    execs = _executions(spark, jobs)
+    actions = sorted(d.split(" at ")[0] for d, _ in execs)
+    assert actions == ["parquet"] * 5 + ["toArrow"], execs
+    with open(tmp_path / "ckpt" / "manifest.json") as f:
+        stages = json.load(f)["stages"]
+    assert out["clusters"] == stages["clusters"]["rows"] > 0

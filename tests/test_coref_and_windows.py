@@ -223,12 +223,12 @@ def model(spark, fixture_dir):
 
 
 def test_resolve_plan_runs_only_spotting_in_python(spark, fixture_dir,
-                                                   model, fx):
+                                                   model):
     """With coref on (the default), the only Python node of `resolve` is
     the FSA spotting MapInPandas: coref and window slicing are JVM
     expressions."""
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    res = resolve(docs, model, stopwords=list(fx.stopwords.word))
+    res = resolve(docs, model)
     # the executed plan's text includes the plans of cached frames
     plan = res.clusters._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan

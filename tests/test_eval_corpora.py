@@ -136,7 +136,7 @@ def test_milne_witten_f1_end_to_end(spark, fx, fixture_dir):
         ).alias("spans"),
     )
     model = model_from_fixture_dir(spark, fixture_dir)
-    result = annotate(spanized, model, stopwords=list(fx.stopwords.word))
+    result = annotate(spanized, model)
     clusters = {
         key_map[r["mention_key"]]: r["cluster_id"]
         for r in clusters_by_uri(result.resolved).collect()
@@ -491,9 +491,7 @@ def test_evaluate_corpus_on_milne_witten_format(spark, fx, fixture_dir):
     paras = spark.createDataFrame(rows, "doc_id string, paragraph string")
     docs, gold = read_milne_witten(spark, paras)
     model = model_from_fixture_dir(spark, fixture_dir)
-    metrics = evaluate_corpus(
-        docs, gold, model, stopwords=list(fx.stopwords.word)
-    )
+    metrics = evaluate_corpus(docs, gold, model)
     # gold spots come from the dictionary itself -> near-perfect recall;
     # disambiguation on the fixture model is the e2e-verified path
     assert metrics["spotting"]["recall"] >= 0.99

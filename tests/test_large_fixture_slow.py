@@ -31,7 +31,7 @@ def test_large_fixture_partition_equality_and_f1(spark, tmp_path):
     write_parquet(fx, fdir)
     model = model_from_fixture_dir(spark, fdir)
     docs = spark.read.parquet(f"{fdir}/documents.parquet")
-    result = annotate(docs, model, stopwords=list(fx.stopwords.word))
+    result = annotate(docs, model)
 
     stats = build_stats(fx)
     om = O.OracleModel(stats, set(fx.stopwords.word))

@@ -18,16 +18,15 @@ def docs(spark, fixture_dir):
     return spark.read.parquet(f"{fixture_dir}/documents.parquet")
 
 
-def _scored(docs, model, fx, mixture):
+def _scored(docs, model, mixture):
     res = annotate(
-        docs, model, stopwords=list(fx.stopwords.word),
-        params=PipelineParams(mixture=mixture),
+        docs, model, params=PipelineParams(mixture=mixture),
     )
     return res.scored
 
 
-def test_onlysim_ranks_by_context_alone(docs, model, fx):
-    rows = _scored(docs, model, fx, "onlysim").collect()
+def test_onlysim_ranks_by_context_alone(docs, model):
+    rows = _scored(docs, model, "onlysim").collect()
     assert rows
     by_mention = {}
     for r in rows:
@@ -85,8 +84,8 @@ def test_linreg_formula_exact(spark):
     assert rows["Bar"]["rank"] == 1 and rows["Foo"]["rank"] == 2
 
 
-def test_linreg_pipeline_runs(docs, model, fx):
-    scored = _scored(docs, model, fx, "linreg")
+def test_linreg_pipeline_runs(docs, model):
+    scored = _scored(docs, model, "linreg")
     from dbpedia_spotlight_spark.operators.mixtures import LINREG_NIL_SCORE
 
     rows = scored.collect()
@@ -141,18 +140,31 @@ def test_fader_mixtures_formulas_exact(spark):
         return ctx_s * (0.5 / 1 + 0.5 * prom)
 
     # NIL constant: ctx −1, prior 0 → −(0.5 + 0.5)
-    if rows:
-        for uri, prior, c in (("Foo", 0.02, -2.0), ("Bar", 0.05, -3.0)):
-            if uri in rows:
-                assert abs(rows[uri]["raw_score"] - fader(c, prior)) < 1e-9
-                assert abs(rows[uri]["nil_score"] - (-1.0)) < 1e-12
+    fader_nil = -1.0
     # fader scores here are all below the NIL constant:
     # fader(−2, .02)=−2·(.5+.5·prom), prom=1+ln(21)=4.04 → −5.04 < −1;
     # fader(−3, .05)=−3·(.5+.5·prom), prom=1+ln(51)=4.93 → −8.90 < −1;
     # both filtered. Verify the gate did its job rather than silently
     # passing:
-    assert fader(-2.0, 0.02) < -1.0 and fader(-3.0, 0.05) < -1.0
+    assert fader(-2.0, 0.02) < fader_nil and fader(-3.0, 0.05) < fader_nil
     assert rows == {}
+
+    # context scores near 0: fader(−0.1, .02) = −0.1·2.52 = −0.25 > −1
+    # is kept; fader(−0.5, .05) = −0.5·2.97 = −1.48 < −1 is filtered
+    near_zero = spark.createDataFrame(
+        [("d1", 1, -0.1), ("d1", 2, -0.5)],
+        "doc_id string, res_id long, ctx_score double",
+    )
+    kept = {
+        r["uri"]: r
+        for r in disambiguate(
+            cands, near_zero, nil, model, P(mixture="fader")
+        ).collect()
+    }
+    assert set(kept) == {"Foo"}
+    assert abs(kept["Foo"]["raw_score"] - fader(-0.1, 0.02)) < 1e-9
+    assert abs(kept["Foo"]["nil_score"] - fader_nil) < 1e-12
+    assert kept["Foo"]["rank"] == 1
 
     rows2 = {
         r["uri"]: r
@@ -211,12 +223,12 @@ def test_cli_exposes_all_mixtures():
     }
 
 
-def test_default_mixture_unchanged(docs, model, fx):
+def test_default_mixture_unchanged(docs, model):
     a = {
         (r["mention_key"], r["uri"], r["rank"])
-        for r in _scored(docs, model, fx, "unweighted").collect()
+        for r in _scored(docs, model, "unweighted").collect()
     }
-    res_default = annotate(docs, model, stopwords=list(fx.stopwords.word))
+    res_default = annotate(docs, model)
     b = {
         (r["mention_key"], r["uri"], r["rank"])
         for r in res_default.scored.collect()
@@ -224,12 +236,12 @@ def test_default_mixture_unchanged(docs, model, fx):
     assert a == b
 
 
-def test_unknown_mixture_rejected(docs, model, fx):
+def test_unknown_mixture_rejected(docs, model):
     with pytest.raises(Exception):
-        _scored(docs, model, fx, "nonsense").collect()
+        _scored(docs, model, "nonsense").collect()
 
 
-def test_combined_options_smoke(spark, fixture_dir, fx):
+def test_combined_options_smoke(spark, fixture_dir):
     """Selectable options at once: Porter2 stemming + linear-regression
     mixture, through the full resolve() path."""
     from dbpedia_spotlight_spark.plans.pipeline import resolve
@@ -239,7 +251,6 @@ def test_combined_options_smoke(spark, fixture_dir, fx):
     res = resolve(
         docs,
         model,
-        stopwords=list(fx.stopwords.word),
         params=PipelineParams(stemmer="english", mixture="linreg"),
     )
     clusters = res.clusters.collect()

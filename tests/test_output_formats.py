@@ -16,10 +16,10 @@ from dbpedia_spotlight_spark.sources.output_formats import (
 
 
 @pytest.fixture(scope="module")
-def annotated(spark, fixture_dir, fx):
+def annotated(spark, fixture_dir):
     model = model_from_fixture_dir(spark, fixture_dir)
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    res = annotate(docs, model, stopwords=list(fx.stopwords.word))
+    res = annotate(docs, model)
     return docs, res.resolved.cache()
 
 

@@ -22,9 +22,9 @@ def model(spark, fixture_dir):
 
 
 @pytest.fixture(scope="module")
-def result(spark, fixture_dir, model, fx):
+def result(spark, fixture_dir, model):
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    return annotate(docs, model, stopwords=list(fx.stopwords.word))
+    return annotate(docs, model)
 
 
 @pytest.fixture(scope="module")

@@ -47,7 +47,7 @@ def _cluster_map(clusters_df):
 def test_resolve_clusters_match_oracle(spark, fixture_dir, model, fx,
                                        oracle_clusters):
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    result = resolve(docs, model, stopwords=list(fx.stopwords.word))
+    result = resolve(docs, model)
     got = _cluster_map(result.clusters)
     # exactly the oracle's clusters, ids included: each URI group is
     # labelled by its smallest mention key, NIL mentions by their own
@@ -58,20 +58,26 @@ def test_resolve_clusters_match_oracle(spark, fixture_dir, model, fx,
     assert O.pairwise_f1(got, fx.eval_pairs) >= 0.99
 
 
-def test_resume_skips_completed_stages(spark, fixture_dir, model, fx,
+def test_resume_skips_completed_stages(spark, fixture_dir, model,
                                        tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     store = CheckpointStore(spark, ckpt)
-    r1 = resolve(docs, model, stopwords=list(fx.stopwords.word), store=store)
+    r1 = resolve(docs, model, store=store)
     full = _cluster_map(r1.clusters)
 
     manifest = store.manifest()
     stages = set(manifest["stages"])
     assert stages == {"mentions", "scored", "resolved", "clusters"}
     assert not any(s == "edges" or s.startswith("cc_step_") for s in stages)
-    # per-partition lineage counters present
-    assert all("partitions" in v for v in manifest["stages"].values())
+    # each entry holds exactly what the write records, and its row count
+    # is the stage's read-back count
+    for stage, entry in manifest["stages"].items():
+        assert set(entry) == {"rows", "lineage", "schema", "completed_at"}
+        assert entry["rows"] == store.read(stage).count()
+        # the stage file holds the frame's columns and no others
+        on_disk = spark.read.parquet(store.path(stage)).columns
+        assert on_disk == store.read(stage).columns
 
     # simulate a kill after 'resolved': drop later stages from the manifest
     manifest["stages"] = {
@@ -93,23 +99,20 @@ def test_resume_skips_completed_stages(spark, fixture_dir, model, fx,
     P.annotate = poisoned
     try:
         store2 = CheckpointStore(spark, ckpt)
-        r2 = resolve(
-            docs, model, stopwords=list(fx.stopwords.word), store=store2
-        )
+        r2 = resolve(docs, model, store=store2)
         assert _cluster_map(r2.clusters) == full
     finally:
         P.annotate = orig
 
 
-def test_resumed_stages_run_no_schema_job(spark, fixture_dir, model, fx,
+def test_resumed_stages_run_no_schema_job(spark, fixture_dir, model,
                                           tmp_path_factory):
     """Each stage's manifest entry records its schema, so a run whose
     stages are all checkpointed reads them without a schema-inference
     job: no Spark job runs before `clusters` is collected."""
     ckpt = str(tmp_path_factory.mktemp("ckpt_schema"))
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    sw = list(fx.stopwords.word)
-    r1 = resolve(docs, model, stopwords=sw, store=CheckpointStore(spark, ckpt))
+    r1 = resolve(docs, model, store=CheckpointStore(spark, ckpt))
     full = _cluster_map(r1.clusters)
     r1.unpersist()
 
@@ -117,8 +120,7 @@ def test_resumed_stages_run_no_schema_job(spark, fixture_dir, model, fx,
     group = "test_resumed_stages_run_no_schema_job"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        r2 = resolve(docs, model, stopwords=sw,
-                     store=CheckpointStore(spark, ckpt))
+        r2 = resolve(docs, model, store=CheckpointStore(spark, ckpt))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert r2.annotated is None  # every stage resumed

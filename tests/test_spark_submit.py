@@ -69,9 +69,13 @@ def test_spark_submit_py_files_resolve(fixture_dir, tmp_path):
     assert r2.returncode == 0, r2.stderr[-3000:]
     info = json.loads(r2.stdout.strip().splitlines()[-1])
     assert info["status"] == "ok" and info["clusters"] > 0
-    # per-partition lineage + counters landed with the checkpointed run
+    # each stage's manifest entry counts the rows its directory holds
+    import pyarrow.parquet as pq
+
     manifest = json.load(open(str(tmp_path / "ckpt") + "/manifest.json"))
     assert manifest["stages"], "resolve run checkpointed no stages"
-    for stage in manifest["stages"].values():
-        assert "counters" in stage and "lineage" in stage
-        assert stage["rows"] == sum(stage["partitions"].values())
+    for name, stage in manifest["stages"].items():
+        assert set(stage) == {"rows", "lineage", "schema", "completed_at"}
+        table = pq.read_table(str(tmp_path / "ckpt" / name))
+        assert stage["rows"] == table.num_rows
+        assert "_partition_id" not in table.column_names

@@ -75,7 +75,7 @@ def test_narrow_context(spark):
     assert out["context_tokens"] == ["bb", "cc", "dd", "ee"]
 
 
-def test_type_filter_e2e(spark, fixture_dir, fx):
+def test_type_filter_e2e(spark, fixture_dir):
     from dbpedia_spotlight_spark.config import PipelineParams
     from dbpedia_spotlight_spark.plans.model_build import (
         model_from_fixture_dir,
@@ -84,7 +84,7 @@ def test_type_filter_e2e(spark, fixture_dir, fx):
 
     model = model_from_fixture_dir(spark, fixture_dir)
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet").limit(60)
-    res = annotate(docs, model, stopwords=list(fx.stopwords.word))
+    res = annotate(docs, model)
     all_rows = res.scored.filter("rank = 1")
     typed = type_filter(all_rows, whitelist=("DBpedia:Person",))
     n_all, n_typed = all_rows.count(), typed.count()

@@ -59,7 +59,6 @@ def test_stemmed_annotate_matches_oracle(
     result = annotate(
         docs,
         stemmed_model,
-        stopwords=list(fx.stopwords.word),
         params=PipelineParams(stemmer="english"),
     )
     mentions = O.spot_documents(

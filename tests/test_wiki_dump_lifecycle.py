@@ -149,7 +149,7 @@ def test_annotate_and_evaluate_from_dump(built):
     gold = resolve_redirects_df(
         occs.withColumnRenamed("uri", "uri_raw"), redirects
     ).drop("uri_raw")
-    metrics = evaluate_corpus(docs, gold, model, STOPWORDS)
+    metrics = evaluate_corpus(docs, gold, model)
     assert metrics["n_documents"] > 0
     assert metrics["n_gold_occurrences"] == 19  # 6*3 + 1 via redirect
     assert metrics["spotting"]["recall"] == 1.0
@@ -179,7 +179,7 @@ def test_lifecycle_resumes_from_checkpoint(built, tmp_path):
         ).alias("spans"),
     )
     store = CheckpointStore(docs.sparkSession, str(tmp_path / "ck"))
-    out1 = resolve(sdocs, model, STOPWORDS, store=store)
+    out1 = resolve(sdocs, model, store=store)
     n1 = out1.clusters.count()
     assert n1 > 0
     stages1 = set(store.manifest()["stages"])
@@ -187,7 +187,7 @@ def test_lifecycle_resumes_from_checkpoint(built, tmp_path):
     # resume: a fresh resolve over the same store reuses the completed
     # stages and reproduces the identical clustering
     store2 = CheckpointStore(docs.sparkSession, str(tmp_path / "ck"))
-    out2 = resolve(sdocs, model, STOPWORDS, store=store2)
+    out2 = resolve(sdocs, model, store=store2)
     assert out2.clusters.count() == n1
     a = {(r["mention_key"], r["cluster_id"])
          for r in out1.clusters.collect()}
